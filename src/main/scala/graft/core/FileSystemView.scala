@@ -298,17 +298,38 @@ final class FileSystemView(basePath: Path, timeline: Timeline,
         .map(n => (n.stripPrefix("files_").stripSuffix(".json"), "json")) ++
        names.filter(n => n.startsWith("files_") && n.endsWith(".meta.json"))
         .map(n => (n.stripPrefix("files_").stripSuffix(".meta.json"), "parquet")))
-      .filter { case (ts, _) => asOf.forall(ts <= _) }
       .sortBy(_._1)
-    candidates.lastOption match {
+    val (atOrBelow, above) = candidates.partition { case (ts, _) => asOf.forall(ts <= _) }
+    // the fold from a snapshot S replays the ACTIVE instants after S; once
+    // a later archive moved the active horizon past S, instants in
+    // (S, asOf] may be gone from the timeline. The oldest snapshot above
+    // asOf then holds them: keep its entries written at or before asOf
+    // (computeSlices bounds its replacement history to asOf, and the fold
+    // adds nothing past a base newer than asOf).
+    val horizon = timeline.completedInstants().headOption.map(_.ts)
+    val gap = asOf.isDefined && above.nonEmpty &&
+      horizon.exists(h => atOrBelow.lastOption.forall(_._1 < h))
+    if (gap) {
+      val later = read(above.head, partitions)
+      return later.copy(entries = later.entries.filter(e => asOf.forall(e.instant <= _)))
+    }
+    atOrBelow.lastOption match {
       case None => ViewState("", Seq.empty, Map.empty)
-      case Some((ts, "json")) =>
+      case Some(snapshot) => read(snapshot, partitions)
+    }
+  }
+
+  /** Load one files-index snapshot (`ts`, "json" | "parquet"). */
+  private def read(snapshot: (String, String),
+      partitions: Option[Set[String]]): ViewState =
+    snapshot match {
+      case (ts, "json") =>
         val st = Json.read[ViewState](Storage.readString(indexDir.resolve(s"files_$ts.json")))
         partitions match {
           case Some(ps) => st.copy(entries = st.entries.filter(e => ps.contains(e.partitionPath)))
           case None => st
         }
-      case Some((ts, _)) =>
+      case (ts, _) =>
         val ss = spark.getOrElse(throw new IllegalStateException(
           s"files index snapshot at $ts is parquet; a SparkSession is required to load it"))
         import ss.implicits._
@@ -328,5 +349,4 @@ final class FileSystemView(basePath: Path, timeline: Timeline,
             .isin(ps.toSeq: _*)))
         meta.copy(entries = ds.collect().toSeq)
     }
-  }
 }

@@ -1,13 +1,13 @@
 package graft.pipeline
 
-import java.nio.file.Paths
+import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{CommitMetadata, TableConfig, TableType}
 import graft.read.Readers
-import graft.table.GraftTable
+import graft.table.{GraftTable, WritePipeline}
 
 /** INCREMENTAL MinHash-LSH deduplication as a table service: maintain a
   * near-dup-free `clean` table from an append-shaped `source` documents
@@ -36,13 +36,20 @@ import graft.table.GraftTable
   * the SAME commit metadata (crash-atomic), and all pulled docs' band
   * rows + signatures appended to the index.
   *
-  * Crash safety: index appends land BEFORE the clean commit; a replayed
-  * tick re-pulls the same range (checkpoint unchanged), and duplicate
-  * band/sig rows are harmless — candidate pairs dedup before
-  * verification, replayed self-postings are anti-joined out of the index
-  * probe, in-batch `l < r` excludes self-pairs, and the clean upsert is
-  * keyed. So the service is effectively-once without multi-table
-  * transactions.
+  * Concurrency and crash safety: the two index appends need nothing from
+  * the probe, so they start on their own threads as soon as the tick's
+  * signatures and band rows are defined and run WHILE the probe runs;
+  * the clean commit, which carries the checkpoint, publishes only after
+  * both appends have, and a failed append fails the tick before it.
+  * Every outcome is one a replayed tick already produces: a tick that
+  * fails or crashes after an append re-pulls the same range (checkpoint
+  * unchanged), and a probe that happens to see this tick's own postings
+  * or signatures is in the same position as a replay — duplicate
+  * band/sig rows are harmless: candidate pairs dedup before
+  * verification, self-postings are anti-joined out of the index probe,
+  * in-batch `l < r` excludes self-pairs, duplicate signature rows
+  * collapse at the dup-id `distinct`, and the clean upsert is keyed. So
+  * the service is effectively-once without multi-table transactions.
   *
   * Result contract: when batches arrive in nondecreasing `idCol` order
   * (the natural contract for monotonic ingest ids), the clean table is
@@ -138,6 +145,10 @@ object DedupService {
     } else ckpt0
     val marks = Map(CheckpointKey -> head, RewindSeenKey -> rewindNow)
     val rows = numHashes / bands
+    // index emptiness BEFORE this tick's appends start: once they publish,
+    // the answer would depend on how far they got
+    val bandsEmpty = index.bands.timeline.completedDataInstants().isEmpty
+    val sigsEmpty = index.sigs.timeline.completedDataInstants().isEmpty
 
     val pulledRaw = ckpt match {
       case None => Readers.snapshot(source, asOf = Some(head))
@@ -160,6 +171,13 @@ object DedupService {
         .select(col("_d_id"),
           col("_d_band.band").as("band"), col("_d_band.bucket").as("bucket"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // both index appends run WHILE the probe runs (they need nothing
+      // from it); the clean commit waits for them — see the scaladoc
+      val appends = inBackground(
+        () => index.bands.insert(bandRows.select(
+          col("band"), col("bucket"), col("_d_id").as("doc_id"))),
+        () => index.sigs.insert(
+          sig.select(col("_d_id").as("doc_id"), col("_d_sig").as("sig"))))
       try {
         // (a) in-batch candidates: band equi-self-join, each pair once
         val l = bandRows.select(col("band"), col("bucket"), col("_d_id").as("_l_id"))
@@ -171,19 +189,20 @@ object DedupService {
         // (b) corpus candidates: probe ONLY the index partitions this
         // tick's buckets hash into (plan-time pruning). Postings whose
         // doc_id is in the CURRENT batch are anti-joined away first —
-        // they exist only when a crashed tick's index append replays, and
-        // without the exclusion a replayed doc would veto itself (and its
-        // same-batch companions, in both directions). With self-postings
-        // gone, a stored doc vetoes a new arrival REGARDLESS of id order
-        // (no l < r here): first-seen-wins, so a late arrival with a
-        // lower id than its already-indexed near-dup still drops and the
-        // clean table stays near-dup-free. In-batch ties keep min-id via (a).
+        // they exist when this tick's own append has published, or when
+        // a crashed tick's append replays; without the exclusion such a
+        // doc would veto itself (and its same-batch companions, in both
+        // directions). With self-postings gone, a stored doc vetoes a new
+        // arrival REGARDLESS of id order (no l < r here): first-seen-wins,
+        // so a late arrival with a lower id than its already-indexed
+        // near-dup still drops and the clean table stays near-dup-free.
+        // In-batch ties keep min-id via (a).
         val indexPairs =
-          if (index.bands.timeline.completedDataInstants().isEmpty) None
+          if (bandsEmpty) None
           else {
-            val parts = bandRows
+            val parts = WritePipeline.staticPlan(bandRows
               .select(pmod(col("bucket"), lit(index.bucketParts.toLong)).as("p"))
-              .distinct().collect().map(x => s"p=${x.getLong(0)}").toSeq
+              .distinct()).collect().map(x => s"p=${x.getLong(0)}").toSeq
             val batchIds = sig.select(col("_d_id").as("doc_id")).distinct()
             val stored = Readers.snapshot(index.bands, partitions = Some(parts))
               .join(batchIds, Seq("doc_id"), "left_anti")
@@ -201,32 +220,49 @@ object DedupService {
         // pruned to the candidate ids' partitions
         val dups = try {
           val lIds = pairs.select(col("_l_id")).distinct()
-          val missing = lIds.join(sig.select(col("_d_id").as("_l_id")), Seq("_l_id"), "left_anti")
-            .select(pmod(col("_l_id"), lit(index.sigParts.toLong)).as("p"))
-            .distinct().collect().map(x => s"s=${x.getLong(0)}").toSeq
+          val missing = WritePipeline.staticPlan(
+              lIds.join(sig.select(col("_d_id").as("_l_id")), Seq("_l_id"), "left_anti")
+                .select(pmod(col("_l_id"), lit(index.sigParts.toLong)).as("p"))
+                .distinct())
+            .collect().map(x => s"s=${x.getLong(0)}").toSeq
           val storedSigs =
-            if (missing.isEmpty || index.sigs.timeline.completedDataInstants().isEmpty)
-              sig.select(col("_d_id"), col("_d_sig"))
+            if (missing.isEmpty || sigsEmpty) sig.select(col("_d_id"), col("_d_sig"))
             else Readers.snapshot(index.sigs, partitions = Some(missing))
               .select(col("doc_id").as("_d_id"), col("sig").as("_d_sig"))
               .unionByName(sig.select(col("_d_id"), col("_d_sig")))
-          pairs
+          val verified = WritePipeline.staticPlan(pairs
             .join(storedSigs.select(col("_d_id").as("_l_id"), col("_d_sig").as("_l_sig")), Seq("_l_id"))
             .join(sig.select(col("_d_id").as("_r_id"), col("_d_sig").as("_r_sig")), Seq("_r_id"))
             .filter(Dedup.signatureSimilarity(col("_l_sig"), col("_r_sig")) >= threshold)
-            .select(col("_r_id").as("_dup_id")).distinct()
+            .select(col("_r_id").as("_dup_id")).distinct())
             .localCheckpoint(eager = true)
+          // back onto the caller's session: the checkpointed rows are
+          // session-free, the survivors' upsert plans under the caller's
+          GraftSqlBridge.ofRows(spark, verified.queryExecution.analyzed)
         } finally pairs.unpersist()
 
         val survivors = pulled.join(dups, col(idCol) === col("_dup_id"), "left_anti")
-
-        // index appends FIRST (crash-replay safe — see scaladoc), then the
-        // clean commit carries the checkpoint
-        index.bands.insert(bandRows.select(
-          col("band"), col("bucket"), col("_d_id").as("doc_id")))
-        index.sigs.insert(sig.select(col("_d_id").as("doc_id"), col("_d_sig").as("sig")))
+        appends.foreach(awaitOrRethrow)
         Some(clean.upsert(survivors, extraMetadata = marks))
-      } finally { bandRows.unpersist(); sig.unpersist() }
+      } finally {
+        // a failed probe must not leave an append running past the call
+        // (or reading the frames unpersisted below)
+        appends.foreach(f => scala.util.Try(f.get()))
+        bandRows.unpersist(); sig.unpersist()
+      }
     } finally pulled.unpersist()
   }
+
+  /** Starts each task on its own thread (created here, so it inherits the
+    * caller's active session and Spark job properties).
+    */
+  private def inBackground(tasks: (() => Any)*): Seq[Future[Any]] = {
+    val pool = Executors.newFixedThreadPool(tasks.size)
+    try tasks.map(t => pool.submit(new Callable[Any] { def call(): Any = t() }))
+    finally pool.shutdown() // accepted tasks still run; threads exit after
+  }
+
+  private def awaitOrRethrow(f: Future[Any]): Unit =
+    try f.get()
+    catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
 }

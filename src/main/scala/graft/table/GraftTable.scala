@@ -473,12 +473,12 @@ final class GraftTable(
       // and profile-free, so that branch keeps the distinct)
       val (routed, batchParts) =
         if (BucketIndex.enabled(cfg))
-          (bucketTag(keyed), staticBookkeeping(
-            keyed.select(MetaCols.PartitionPath).distinct().collect())
+          (bucketTag(keyed), staticPlan(
+            keyed.select(MetaCols.PartitionPath).distinct()).collect()
             .map(_.getString(0)).toSet)
         else {
-          val profile = staticBookkeeping(
-            keyed.groupBy(MetaCols.PartitionPath).count().collect())
+          val profile = staticPlan(
+            keyed.groupBy(MetaCols.PartitionPath).count()).collect()
             .map(r => r.getString(0) -> r.getLong(1)).toMap
           (assignFreshWithProfile(keyed, profile), profile.keySet)
         }
@@ -806,9 +806,9 @@ final class GraftTable(
     */
   private def readTouchedGroups(cond: Column): DataFrame = {
     val snap = graft.read.Readers.snapshot(this)
-    val touched = staticBookkeeping(snap.filter(cond)
+    val touched = staticPlan(snap.filter(cond)
       .select(substring_index(col(MetaCols.FileName), "_", 1).as(FileIdCol))
-      .distinct().collect()).map(_.getString(0)).toSet
+      .distinct()).collect().map(_.getString(0)).toSet
     readEntriesRaw(view.fileSlices(None).flatMap(_.baseFile)
       .filter(b => touched.contains(b.fileId)))
   }
@@ -1306,13 +1306,6 @@ final class GraftTable(
     * never opened (the reference reads parquet footers for the same bounds,
     * SparkHoodieBloomIndex.java:165-191 — ours come from commit metadata).
     */
-  /** Driver-side bookkeeping actions (index tag ranges, workload
-    * profiles, touched-group ids) are tiny-output aggregations — see
-    * [[WritePipeline.withStaticPlanning]] for why they plan statically.
-    */
-  private def staticBookkeeping[T](thunk: => T): T =
-    WritePipeline.withStaticPlanning(spark)(thunk)
-
   private def existingKeys(affectedPartitions: Option[Set[String]],
       incomingKeyRange: Option[(String, String)],
       bloomProbe: Option[DataFrame] = None,
@@ -1368,8 +1361,8 @@ final class GraftTable(
     * and the incoming key range come from ONE aggregation job.
     */
   private def simpleTag(keyed: DataFrame): DataFrame = {
-    val pr = staticBookkeeping(keyed.groupBy(MetaCols.PartitionPath)
-      .agg(min(MetaCols.RecordKey).as("mn"), max(MetaCols.RecordKey).as("mx")).collect())
+    val pr = staticPlan(keyed.groupBy(MetaCols.PartitionPath)
+      .agg(min(MetaCols.RecordKey).as("mn"), max(MetaCols.RecordKey).as("mx"))).collect()
     val parts = pr.map(_.getString(0)).toSet
     val mins = pr.flatMap(r => Option(r.getString(1)))
     val maxs = pr.flatMap(r => Option(r.getString(2)))
@@ -1384,8 +1377,8 @@ final class GraftTable(
       // existing copy can live anywhere — dedup by key alone
       keyed.join(existingKeys(None, None), Seq(MetaCols.RecordKey), "left_anti")
     else {
-      val parts = staticBookkeeping(
-        keyed.select(MetaCols.PartitionPath).distinct().collect())
+      val parts = staticPlan(
+        keyed.select(MetaCols.PartitionPath).distinct()).collect()
         .map(_.getString(0)).toSet
       keyed.join(existingKeys(Some(parts), None),
         Seq(MetaCols.RecordKey, MetaCols.PartitionPath), "left_anti")
@@ -1410,8 +1403,8 @@ final class GraftTable(
     */
   private def assignInsertBucketsWithIds(tagged: DataFrame)
       : (DataFrame, Set[(String, String)]) = {
-    val profile = staticBookkeeping(
-      tagged.groupBy(MetaCols.PartitionPath, FileIdCol).count().collect())
+    val profile = staticPlan(
+      tagged.groupBy(MetaCols.PartitionPath, FileIdCol).count()).collect()
     // (partition, fileId) PAIRS throughout: bucket layouts reuse the same
     // fileId across partitions, so a bare-id set would alias groups
     val updatedIds = profile.filter(!_.isNullAt(1))
@@ -1440,8 +1433,8 @@ final class GraftTable(
           ConsistentBuckets.route(this, frame, preserveExisting = true)
         else frame.withColumn(FileIdCol,
           coalesce(col(FileIdCol), BucketIndex.fileIdCol(cfg, col(MetaCols.RecordKey))))
-      val ids = staticBookkeeping(
-        routed.select(MetaCols.PartitionPath, FileIdCol).distinct().collect())
+      val ids = staticPlan(
+        routed.select(MetaCols.PartitionPath, FileIdCol).distinct()).collect()
         .map(r => (r.getString(0), r.getString(1))).toSet
       return (routed, ids)
     }
@@ -1497,8 +1490,8 @@ final class GraftTable(
     * empty insert side (common for pure-update MOR upserts).
     */
   private def assignInsertBucketsFresh(keyed: DataFrame): (DataFrame, Boolean) = {
-    val profile = staticBookkeeping(
-      keyed.groupBy(MetaCols.PartitionPath).count().collect())
+    val profile = staticPlan(
+      keyed.groupBy(MetaCols.PartitionPath).count()).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     (assignFreshWithProfile(keyed, profile), profile.nonEmpty)
   }
@@ -1552,8 +1545,8 @@ final class GraftTable(
     // file groups being rewritten = every group any row routes to (the
     // caller's profile job usually already knows this set). PAIRS, not
     // bare fileIds: bucket layouts share ids across partitions
-    val touchedIds = knownTouched.getOrElse(staticBookkeeping(
-      routed.select(MetaCols.PartitionPath, FileIdCol).distinct().collect())
+    val touchedIds = knownTouched.getOrElse(staticPlan(
+      routed.select(MetaCols.PartitionPath, FileIdCol).distinct()).collect()
         .map(r => (r.getString(0), r.getString(1))).toSet)
     val liveBases = view.fileSlices(None).flatMap(_.baseFile)
       .filter(b => touchedIds.contains((b.partitionPath, b.fileId)))
@@ -1580,10 +1573,10 @@ final class GraftTable(
     // internal plan: tagged-cache scan ∪ file-index scans, broadcast-
     // hinted routing only, files keyed by pre-assigned (partition, fileId)
     // — static planning skips AQE's per-stage driver latency (see
-    // WritePipeline.withStaticPlanning)
-    val stats = WritePipeline.withStaticPlanning(spark)(
-      writeFiles(spark, basePath, merged, instant, isDelta = false,
-        alreadyPartitioned = true, baseFormat = cfg.baseFormat, dict = dictStats))
+    // WritePipeline.staticPlan)
+    val stats = writeFiles(spark, basePath, staticPlan(merged), instant,
+      isDelta = false, alreadyPartitioned = true, baseFormat = cfg.baseFormat,
+      dict = dictStats)
     // a group whose merge produced NO rows (every record tombstoned) writes
     // no file — record it as replaced or its old base would stay the
     // latest slice and the deleted rows would resurrect. Pair-keyed: the
@@ -1726,9 +1719,9 @@ final class GraftTable(
 
     // delta/base writes read the commit's cached tagged frame (hinted
     // bucket joins only) — static planning, same rationale as writeMerged
-    val deltaStats = WritePipeline.withStaticPlanning(spark)(writeFiles(spark, basePath,
-      withCommitMeta(updates, instant, isDelta = true), instant, isDelta = true,
-      allDeletes = allDeletes, dict = dictStats))
+    val deltaStats = writeFiles(spark, basePath,
+      staticPlan(withCommitMeta(updates, instant, isDelta = true)), instant,
+      isDelta = true, allDeletes = allDeletes, dict = dictStats)
     val (insertRouted, hasInserts) =
       if (BucketIndex.enabled(cfg)) {
         val r = inserts.drop(DeleteCol) // bucket id already routed
@@ -1736,9 +1729,9 @@ final class GraftTable(
       } else assignInsertBucketsFresh(inserts.drop(FileIdCol, DeleteCol))
     val baseStats =
       if (!hasInserts) Seq.empty
-      else WritePipeline.withStaticPlanning(spark)(writeFiles(spark, basePath,
-        withCommitMeta(insertRouted, instant, isDelta = false, baseFormat = cfg.baseFormat),
-        instant, isDelta = false, baseFormat = cfg.baseFormat, dict = dictStats))
+      else writeFiles(spark, basePath, staticPlan(
+        withCommitMeta(insertRouted, instant, isDelta = false, baseFormat = cfg.baseFormat)),
+        instant, isDelta = false, baseFormat = cfg.baseFormat, dict = dictStats)
     (deltaStats ++ baseStats, Map.empty, schemaJsonFor(tagged))
   }
 

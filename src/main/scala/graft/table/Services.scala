@@ -106,11 +106,11 @@ object Services {
           concat(col(WritePipeline.FileIdCol), lit(s"_0_$ts.${t.cfg.baseFormat}")))
       // internal plan (file-index scans + fused merge, no joins): static
       // planning skips AQE's per-stage driver latency — see
-      // WritePipeline.withStaticPlanning
-      val stats = WritePipeline.withStaticPlanning(t.spark)(
-        WritePipeline.writeFiles(t.spark, t.basePath, merged, ts,
-          isDelta = false, alreadyPartitioned = true, baseFormat = t.cfg.baseFormat,
-          dict = t.dictStats))
+      // WritePipeline.staticPlan
+      val stats = WritePipeline.writeFiles(t.spark, t.basePath,
+        WritePipeline.staticPlan(merged), ts, isDelta = false,
+        alreadyPartitioned = true, baseFormat = t.cfg.baseFormat,
+        dict = t.dictStats)
       val md = CommitMetadata("compact", stats, Map.empty,
         t.latestSchema.map(_.json).getOrElse(""))
       t.timeline.saveAsComplete(inst, Json.write(md))
@@ -292,11 +292,11 @@ object Services {
               concat(col(WritePipeline.FileIdCol), lit(s"_0_$ts.${t.cfg.baseFormat}")))
             .drop(ZOrder.ZCol)
           // internal plan: file-index scans + explicitly-pinned range
-          // exchange (numFiles) — static planning, see withStaticPlanning
-          WritePipeline.withStaticPlanning(t.spark)(
-            WritePipeline.writeFiles(t.spark, t.basePath, routed, ts,
-              isDelta = false, alreadyPartitioned = true,
-              baseFormat = t.cfg.baseFormat, dict = t.dictStats))
+          // exchange (numFiles) — static planning, see staticPlan
+          WritePipeline.writeFiles(t.spark, t.basePath,
+            WritePipeline.staticPlan(routed), ts, isDelta = false,
+            alreadyPartitioned = true, baseFormat = t.cfg.baseFormat,
+            dict = t.dictStats)
         } else {
           // pure small-file coalescing: hash-route into fresh size-targeted
           // groups per partition (no ordering requirement, no range shuffle)
@@ -315,10 +315,10 @@ object Services {
             .withColumn(MetaCols.FileName,
               concat(col(WritePipeline.FileIdCol), lit(s"_0_$ts.${t.cfg.baseFormat}")))
           // internal plan: file-index scans + broadcast-hinted bucket
-          // route — static planning, see withStaticPlanning
-          WritePipeline.withStaticPlanning(t.spark)(
-            WritePipeline.writeFiles(t.spark, t.basePath, routed, ts,
-              isDelta = false, baseFormat = t.cfg.baseFormat, dict = t.dictStats))
+          // route — static planning, see staticPlan
+          WritePipeline.writeFiles(t.spark, t.basePath,
+            WritePipeline.staticPlan(routed), ts, isDelta = false,
+            baseFormat = t.cfg.baseFormat, dict = t.dictStats)
         }
       val replaced = plan.groups.map(g => g.partitionPath -> g.fileIds).toMap
       val md = CommitMetadata("cluster", stats, replaced,

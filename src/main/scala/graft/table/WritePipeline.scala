@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.core.Storage.PathOps
@@ -109,34 +109,71 @@ object WritePipeline extends Serializable {
   private[graft] val dictPageReads =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
-  /** Runs `thunk` with AQE disabled for queries planned inside it. For
-    * engine-INTERNAL plans — bookkeeping aggregations and the merge/delta
-    * writes fed from the commit's cached tagged frame — AQE can improve
-    * nothing: output files are keyed by the pre-assigned
-    * (partition, fileId), so coalescing cannot change file counts; the
-    * only joins are broadcast-hinted bucket routes; skew handling applies
-    * to joins only. What AQE does add is an optimizer re-run + codegen
-    * round of driver latency per query stage, PER COMMIT — a cost that
-    * scales with commit count, not data volume. User-plan-bearing writes
-    * (bulkInsert sources, MERGE resolution) stay under AQE — arbitrary
-    * upstream joins do benefit from runtime re-planning. Session-conf
-    * scoped and restored in finally; an optimization-only toggle, never a
-    * correctness one. `spark.graft.internal.adaptive=true` restores AQE
-    * for these internal plans.
+  /** Rebinds `df`'s analyzed plan onto a child session with AQE off, so
+    * the action run on the returned frame plans statically. For engine-
+    * INTERNAL plans — bookkeeping aggregations and the merge/delta writes
+    * fed from the commit's cached tagged frame — AQE can improve nothing:
+    * output files are keyed by the pre-assigned (partition, fileId), so
+    * coalescing cannot change file counts; the only joins are
+    * broadcast-hinted bucket routes; skew handling applies to joins only.
+    * What AQE does add is an optimizer re-run + codegen round of driver
+    * latency per query stage, PER COMMIT — a cost that scales with commit
+    * count, not data volume. User-plan-bearing writes (bulkInsert sources,
+    * MERGE resolution) stay under AQE — arbitrary upstream joins do
+    * benefit from runtime re-planning.
+    *
+    * The parent session's conf is never touched: another thread's query
+    * or commit on the same session keeps its own planning mode. The child
+    * (one per parent, see [[staticSession]]) shares the SparkContext and
+    * the cache manager, so a frame the parent persisted still scans as
+    * its in-memory relation. An optimization-only switch, never a
+    * correctness one: `spark.graft.internal.adaptive=true` on the parent
+    * returns `df` unchanged (AQE for these internal plans), as does a
+    * parent that already plans statically.
     */
-  def withStaticPlanning[T](spark: SparkSession)(thunk: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    if (spark.conf.getOption("spark.graft.internal.adaptive").contains("true"))
-      return thunk
-    val prev = spark.conf.getOption(key)
-    if (prev.contains("false")) return thunk // already static
-    spark.conf.set(key, "false")
-    try thunk
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+  def staticPlan(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    if (spark.conf.getOption("spark.graft.internal.adaptive").contains("true") ||
+        !GraftSqlBridge.sqlConf(spark).adaptiveExecutionEnabled) df
+    else GraftSqlBridge.ofRows(staticSession(spark), df.queryExecution.analyzed)
   }
+
+  private val AdaptiveKey = "spark.sql.adaptive.enabled"
+
+  /** A parent's static child plus the parent settings it last mirrored. */
+  private final class StaticChild(val session: SparkSession,
+      var mirrored: Map[String, String])
+
+  private val staticChildren =
+    new java.util.WeakHashMap[SparkSession, StaticChild]()
+
+  /** The parent's static child session, created once per parent and
+    * re-synced on every use with whatever the parent set or unset since
+    * (shuffle partitions, graft knobs, the commit protocol), so it plans
+    * exactly like the parent apart from AQE. A `newSession()`, not a
+    * `cloneSession()`: a clone keeps its parent's session state reachable,
+    * which would pin every parent in this weak map; plans arrive analyzed,
+    * so the conf is all the child needs from its parent.
+    */
+  private def staticSession(spark: SparkSession): SparkSession =
+    staticChildren.synchronized {
+      var c = staticChildren.get(spark)
+      if (c == null) {
+        val child = spark.newSession()
+        GraftSqlBridge.sqlConf(child).setConfString(AdaptiveKey, "false")
+        c = new StaticChild(child, GraftSqlBridge.sqlConf(child).getAllConfs - AdaptiveKey)
+        staticChildren.put(spark, c)
+      }
+      val now = GraftSqlBridge.sqlConf(spark).getAllConfs - AdaptiveKey
+      if (now != c.mirrored) {
+        val conf = GraftSqlBridge.sqlConf(c.session)
+        (c.mirrored.keySet -- now.keySet).foreach(conf.unsetConf)
+        now.foreach { case (k, v) =>
+          if (!c.mirrored.get(k).contains(v)) conf.setConfString(k, v) }
+        c.mirrored = now
+      }
+      c.session
+    }
 
   /** Distributed write. `df` must contain `_graft_file_id` plus the five
     * meta columns. Returns per-file WriteStats (with record-key min/max
@@ -175,7 +212,11 @@ object WritePipeline extends Serializable {
         else rep
       }
 
-    val direct = ensureCommitProtocol(spark)
+    // the protocol must be set on the session that PLANS the write (the
+    // static child for a rebound frame); setting it on the parent as well
+    // keeps the child's next conf sync from undoing it
+    ensureCommitProtocol(spark)
+    ensureCommitProtocol(df.sparkSession)
     routed
       .drop(FileIdCol)
       .write.mode("overwrite")
@@ -216,7 +257,7 @@ object WritePipeline extends Serializable {
     * informational commit metadata; exact for pure-delete batches via
     * `allDeletes`, 0 for mixed delta batches rather than paying a scan.
     */
-  private def statsOfFinalFiles(
+  private[graft] def statsOfFinalFiles(
       spark: SparkSession,
       basePath: Path,
       files: Seq[graft.spark.GraftCommitProtocol.AddedFile],
@@ -253,7 +294,10 @@ object WritePipeline extends Serializable {
     } else {
       val hProps = Services.shippedHadoopProps(spark)
       spark.sparkContext
-        .parallelize(files, math.max(1, math.min(files.size, 200)))
+        // one task per core, not per file: a footer read is milliseconds,
+        // so per-file tasks cost more in scheduling than they read
+        .parallelize(files, math.max(1,
+          math.min(files.size, spark.sparkContext.defaultParallelism)))
         .mapPartitions { it =>
           val conf = Services.executorHadoopConf(hProps)
           it.map(statOf(conf))
@@ -276,14 +320,13 @@ object WritePipeline extends Serializable {
     * stay installed). Respects a user-pinned custom protocol — the write
     * then falls back to the staged-rename publish.
     */
-  private def ensureCommitProtocol(spark: SparkSession): Boolean = {
+  private def ensureCommitProtocol(spark: SparkSession): Unit = {
     val key = "spark.sql.sources.commitProtocolClass"
     val mine = classOf[graft.spark.GraftCommitProtocol].getName
     val default = "org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol"
     spark.conf.getOption(key) match {
-      case Some(`mine`) => true
-      case None | Some(`default`) => spark.conf.set(key, mine); true
-      case Some(_) => false // user pinned a custom protocol: staged fallback
+      case None | Some(`default`) => spark.conf.set(key, mine)
+      case _ => // ours already, or a user-pinned protocol: staged fallback
     }
   }
 

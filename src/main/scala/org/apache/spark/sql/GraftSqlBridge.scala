@@ -11,6 +11,12 @@ object GraftSqlBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** The session's own SQLConf: raw get/set without the runtime-conf
+    * checks, for mirroring one session's settings onto another.
+    */
+  def sqlConf(spark: SparkSession): org.apache.spark.sql.internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
   /** Column ⇄ Catalyst Expression, for exposing custom expressions as
     * user-facing Columns.
     */

@@ -115,4 +115,69 @@ class DedupServiceSpec extends AnyFunSuite {
     // steady state: next tick is a no-op (no rebuild-per-tick)
     assert(DedupService.sync(srcT, cleanT, idx).isEmpty)
   }
+
+  test("overlapped index appends: several ticks equal the from-scratch dedup") {
+    val root = tmpDir("dedup_svc_overlap").toString
+    val srcT = GraftTable.create(spark, s"$root/source", docsCfg("src"))
+    val cleanT = GraftTable.create(spark, s"$root/clean", docsCfg("clean"))
+    val idx = DedupService.openIndex(spark, s"$root/index", threshold = 0.6)
+    // the appends commit while the probe runs: record which thread each
+    // index commit publishes from
+    val caller = Thread.currentThread()
+    val appendThreads = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    Seq(idx.bands, idx.sigs).foreach(_.registerPreCommitValidator(
+      _ => appendThreads.add(Thread.currentThread())))
+    val base = docs.filter(col("doc_id") < 120)
+    // four id-ordered ticks; the last re-submits tick-1 docs under higher
+    // ids, so it is answered from the persisted index, not the batch
+    val ticks = Seq(
+      base.filter(col("doc_id") < 40),
+      base.filter(col("doc_id") >= 40 && col("doc_id") < 80),
+      base.filter(col("doc_id") >= 80),
+      base.filter(col("doc_id") < 40).withColumn("doc_id", col("doc_id") + 1000000L))
+    for (t <- ticks) {
+      srcT.bulkInsert(t)
+      assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+      assert(idx.bands.timeline.pendingInstants().isEmpty &&
+        idx.sigs.timeline.pendingInstants().isEmpty, "an append outlived the sync")
+    }
+    assert(appendThreads.size === 2 * ticks.size)
+    assert(!appendThreads.contains(caller), "index appends ran on the calling thread")
+    val got = Readers.snapshot(cleanT).select("doc_id").orderBy("doc_id").collect()
+    val want = Dedup.minhashDedup(ticks.reduce(_ unionByName _), threshold = 0.6)
+      .select("doc_id").orderBy("doc_id").collect()
+    assert(got.sameElements(want), "overlapped incremental != from-scratch")
+    assert(got.forall(_.getLong(0) < 1000000L), "re-submitted copies survived")
+  }
+
+  test("a failed sigs append publishes no clean commit; the next sync converges") {
+    val root = tmpDir("dedup_svc_fail").toString
+    val srcT = GraftTable.create(spark, s"$root/source", docsCfg("src"))
+    val cleanT = GraftTable.create(spark, s"$root/clean", docsCfg("clean"))
+    val idx = DedupService.openIndex(spark, s"$root/index", threshold = 0.6)
+    val base = docs.filter(col("doc_id") < 90)
+    srcT.bulkInsert(base.filter(col("doc_id") < 45))
+    assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+    val cleanCommits = cleanT.timeline.completedDataInstants()
+    val ckpt = DedupService.lastCheckpoint(cleanT)
+    srcT.bulkInsert(base.filter(col("doc_id") >= 45))
+    @volatile var armed = true
+    idx.sigs.registerPreCommitValidator { _ =>
+      if (armed) throw new IllegalStateException("injected sigs append failure")
+    }
+    val e = intercept[IllegalStateException](DedupService.sync(srcT, cleanT, idx))
+    assert(e.getMessage === "injected sigs append failure")
+    // nothing published on clean, the checkpoint did not move, and the
+    // concurrent bands append (published or not) left nothing in flight
+    assert(cleanT.timeline.completedDataInstants() === cleanCommits)
+    assert(DedupService.lastCheckpoint(cleanT) === ckpt)
+    assert(idx.bands.timeline.pendingInstants().isEmpty)
+    armed = false
+    assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+    val got = Readers.snapshot(cleanT).select("doc_id").orderBy("doc_id").collect()
+    val want = Dedup.minhashDedup(base, threshold = 0.6)
+      .select("doc_id").orderBy("doc_id").collect()
+    assert(got.sameElements(want), "replayed tick != from-scratch")
+    assert(DedupService.sync(srcT, cleanT, idx).isEmpty)
+  }
 }

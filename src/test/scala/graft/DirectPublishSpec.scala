@@ -192,4 +192,30 @@ class DirectPublishSpec extends AnyFunSuite {
     assert(Readers.snapshot(t).filter($"id" === 2L)
       .select("price").as[Double].head() === 99.0)
   }
+
+  test("driver-pool and distributed footer stats agree file for file") {
+    val dir = tmpDir("direct_stats_eq").toString + "/t"
+    val t = GraftTable.create(spark, dir, TableConfig(
+      "dse", TableType.CopyOnWrite, Seq("id"), "concat('p=', pmod(id, 24))", "ver"))
+    val instant = t.bulkInsert((1L to 2400L)
+      .map(i => (i, 0L, i * 0.5, s"c${i % 7}")).toDF("id", "ver", "price", "cat"))
+    val written = CommitMetadata.fromJson(
+      t.timeline.readContent(t.timeline.completedDataInstants().last)).writeStats
+    // more files than the distributed job's tasks: each task reads several
+    assert(written.size > spark.sparkContext.defaultParallelism)
+    val files = written.map(s =>
+      graft.spark.GraftCommitProtocol.AddedFile(s.partitionPath, s.fileId, s.path))
+    val key = "spark.graft.write.stats.driver.max.files"
+    def statsWith(maxDriverFiles: Int) = {
+      spark.conf.set(key, maxDriverFiles.toString)
+      try WritePipeline.statsOfFinalFiles(spark, t.basePath, files, instant,
+        isDelta = false, "parquet", allDeletes = false, WritePipeline.DictStats.On)
+      finally spark.conf.unset(key)
+    }
+    val onDriver = statsWith(files.size)
+    val distributed = statsWith(0)
+    assert(onDriver === distributed)
+    assert(onDriver.map(_.numWrites).sum === 2400L)
+    assert(onDriver.forall(_.colMin.contains("price")))
+  }
 }

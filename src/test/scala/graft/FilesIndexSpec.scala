@@ -83,4 +83,38 @@ class FilesIndexSpec extends AnyFunSuite {
     assert(!names.exists(_.endsWith(".parquet")))
     assert(Readers.snapshot(t).count() === 50)
   }
+
+  test("time travel between two snapshots sees commits archived past the older one") {
+    // max 12 / min 6 active instants: commit 12 snapshots and archives
+    // 0-6, commit 19 snapshots and archives 7-13. An as-of read at 13 sits
+    // above snapshot 12, but instant 13 is gone from the active timeline:
+    // the view must take it from snapshot 19, not fold past it. Both
+    // snapshot forms (JSON, parquet past 10 entries) are exercised.
+    for (threshold <- Seq(FileSystemView.DefaultParquetThreshold, 10L)) {
+      val name = s"fidx_tt_$threshold"
+      val t = GraftTable.create(spark, tmpDir(name).toString + "/t", TableConfig(
+        name, TableType.CopyOnWrite, Seq("id"), "concat('p=', pmod(id, 2))", "ver",
+        Map(ConfigKeys.ArchiveMaxCommits -> "12",
+          ConfigKeys.ArchiveMinCommits -> "6",
+          ConfigKeys.FilesIndexParquetThreshold -> threshold.toString)))
+      val instants = t.bulkInsert((1L to 50L).map(i => (i, 0L)).toDF("id", "ver")) +:
+        (1 to 19).map(k => t.upsert(Seq((1L, k.toLong), (1000L + k, k.toLong))
+          .toDF("id", "ver")))
+      val snapshots = Storage.listPaths(t.basePath.resolve(".graft").resolve("index"))
+        .map(_.getName).filter(_.startsWith("files_"))
+        .map(_.stripPrefix("files_").takeWhile(_ != '.')).distinct.sorted
+      assert(snapshots === Seq(instants(12), instants(19)), s"snapshots $snapshots")
+      assert(t.timeline.completedInstants().head.ts === instants(14))
+      FileSystemView.invalidate(t.basePath)
+      for (k <- 0 to 19) {
+        val asOf = Some(instants(k))
+        val snap = Readers.snapshot(t, asOf = asOf)
+        assert(snap.count() === 50 + k, s"as of commit $k ($threshold)")
+        assert(snap.filter($"id" === 1L).select("ver").as[Long].collect().toSeq === Seq(k.toLong),
+          s"id 1 as of commit $k ($threshold)")
+        assert(Readers.snapshot(t, asOf = asOf, partitions = Some(Seq("p=1"))).count() ===
+          25 + (1 to k).count(_ % 2 == 1), s"pruned as of commit $k ($threshold)")
+      }
+    }
+  }
 }

@@ -52,7 +52,7 @@ class JobCountSpec extends AnyFunSuite {
     }
     info(s"jobs: bulkInsert=$bulk upsert=$up delete=$del read=$read incremental=$inc")
     // r17 tightened from (6, 12, 12): engine-internal actions plan
-    // statically now (WritePipeline.withStaticPlanning), so AQE's
+    // statically now (WritePipeline.staticPlan), so AQE's
     // per-stage jobs no longer multiply the commit's action count —
     // measured bulk=2 up=4 del=4 at sf0.001, pinned with ~2x slack
     assert(bulk <= 4, s"bulkInsert grew to $bulk jobs")
