@@ -21,17 +21,24 @@ import graft.table.{GraftTable, WritePipeline}
   *  - `bands` (band, bucket, doc_id) — every band row of every doc EVER
   *    SEEN (kept and dropped: from-scratch semantics drop a doc that
   *    near-dups ANY lower-id doc, surviving or not, so dropped docs keep
-  *    vetoing their later near-dups). PARTITIONED BY `pmod(bucket, P)`:
-  *    a tick's probe computes its distinct bucket hashes and reads ONLY
-  *    the matching partitions — plan-time pruning bounds probe IO by the
-  *    tick's band fan-out, not the corpus.
+  *    vetoing their later near-dups). PARTITIONED BY `pmod(bucket, P)`.
   *  - `sigs` (doc_id, sig) — signatures for candidate verification,
-  *    partitioned by `pmod(doc_id, SP)` for the same pruned lookup of
-  *    the candidate ids' signatures.
+  *    partitioned by `pmod(doc_id, SP)`.
+  *
+  * New indexes default to ONE partition each (P = SP = 1). Partition
+  * pruning cannot pay here: `bucket` is an xxhash64, so a tick of n docs
+  * has `bands`·n band rows (16n by default) spread uniformly, and it
+  * skips any one of P partitions with probability ((P-1)/P)^(16n) —
+  * about e^(-n/4) at P = 64, e^(-100) at n = 400. Every partition is
+  * read every tick, and every partition costs a small-file rewrite per
+  * append (inserts top up a partition's small file before opening a
+  * new one), so one partition means at most one file per table per
+  * tick. Indexes created with P or SP above 1 keep their stored counts
+  * and still probe only the partitions their tick hashes into.
   *
   * Each tick: incremental-pull new docs since the checkpoint → candidate
-  * pairs from (a) an in-batch band self-join and (b) a pruned probe of
-  * the persisted band index → signature-similarity verification → losers
+  * pairs from (a) an in-batch band self-join and (b) a probe of the
+  * persisted band index → signature-similarity verification → losers
   * dropped, survivors upserted into `clean` with the source checkpoint in
   * the SAME commit metadata (crash-atomic), and all pulled docs' band
   * rows + signatures appended to the index.
@@ -84,10 +91,10 @@ object DedupService {
     * tick reads them back — old ticks' signatures and band rows were
     * computed with them, so a drifting per-call parameter would silently
     * corrupt results. Loading an existing index ignores the arguments and
-    * returns the stored parameters.
+    * returns the stored parameters, partition counts included.
     */
   def openIndex(spark: SparkSession, indexPath: String,
-      bucketParts: Int = 64, sigParts: Int = 32,
+      bucketParts: Int = 1, sigParts: Int = 1,
       threshold: Double = 0.7, numHashes: Int = 64, bands: Int = 16,
       shingleN: Int = 3): DedupIndex = {
     val bandsT = GraftTable.createOrLoad(spark, s"$indexPath/bands", TableConfig(
@@ -186,8 +193,9 @@ object DedupService {
           .filter(col("_l_id") < col("_r_id"))
           .select("_l_id", "_r_id")
 
-        // (b) corpus candidates: probe ONLY the index partitions this
-        // tick's buckets hash into (plan-time pruning). Postings whose
+        // (b) corpus candidates: probe the band index — on a layout of
+        // more than one partition, ONLY the partitions this tick's
+        // buckets hash into (plan-time pruning). Postings whose
         // doc_id is in the CURRENT batch are anti-joined away first —
         // they exist when this tick's own append has published, or when
         // a crashed tick's append replays; without the exclusion such a
@@ -200,11 +208,13 @@ object DedupService {
         val indexPairs =
           if (bandsEmpty) None
           else {
-            val parts = WritePipeline.staticPlan(bandRows
-              .select(pmod(col("bucket"), lit(index.bucketParts.toLong)).as("p"))
-              .distinct()).collect().map(x => s"p=${x.getLong(0)}").toSeq
+            val parts =
+              if (index.bucketParts == 1) None
+              else Some(WritePipeline.staticPlan(bandRows
+                .select(pmod(col("bucket"), lit(index.bucketParts.toLong)).as("p"))
+                .distinct()).collect().map(x => s"p=${x.getLong(0)}").toSeq)
             val batchIds = sig.select(col("_d_id").as("doc_id")).distinct()
-            val stored = Readers.snapshot(index.bands, partitions = Some(parts))
+            val stored = Readers.snapshot(index.bands, partitions = parts)
               .join(batchIds, Seq("doc_id"), "left_anti")
               .select(col("band"), col("bucket"), col("doc_id").as("_l_id"))
             Some(stored.join(
@@ -212,22 +222,29 @@ object DedupService {
                 Seq("band", "bucket"))
               .select("_l_id", "_r_id"))
           }
-        val pairs = indexPairs.map(batchPairs.unionByName(_)).getOrElse(batchPairs)
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val pruneSigs = index.sigParts > 1
+        val pairs = {
+          val all = indexPairs.map(batchPairs.unionByName(_)).getOrElse(batchPairs).distinct()
+          // read twice only where the sigs probe is pruned (below)
+          if (pruneSigs) all.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          else all
+        }
 
-        // l-side signatures: from the batch, else from the sigs table
-        // pruned to the candidate ids' partitions
+        // l-side signatures: from the batch, else from the sigs table —
+        // on a layout of more than one partition, pruned to the candidate
+        // ids' partitions
         val dups = try {
-          val lIds = pairs.select(col("_l_id")).distinct()
-          val missing = WritePipeline.staticPlan(
-              lIds.join(sig.select(col("_d_id").as("_l_id")), Seq("_l_id"), "left_anti")
-                .select(pmod(col("_l_id"), lit(index.sigParts.toLong)).as("p"))
-                .distinct())
-            .collect().map(x => s"s=${x.getLong(0)}").toSeq
+          val missing =
+            if (!pruneSigs) None
+            else Some(WritePipeline.staticPlan(
+                pairs.select(col("_l_id")).distinct()
+                  .join(sig.select(col("_d_id").as("_l_id")), Seq("_l_id"), "left_anti")
+                  .select(pmod(col("_l_id"), lit(index.sigParts.toLong)).as("p"))
+                  .distinct())
+              .collect().map(x => s"s=${x.getLong(0)}").toSeq)
           val storedSigs =
-            if (missing.isEmpty || sigsEmpty) sig.select(col("_d_id"), col("_d_sig"))
-            else Readers.snapshot(index.sigs, partitions = Some(missing))
+            if (missing.exists(_.isEmpty) || sigsEmpty) sig.select(col("_d_id"), col("_d_sig"))
+            else Readers.snapshot(index.sigs, partitions = missing)
               .select(col("doc_id").as("_d_id"), col("sig").as("_d_sig"))
               .unionByName(sig.select(col("_d_id"), col("_d_sig")))
           val verified = WritePipeline.staticPlan(pairs

@@ -36,8 +36,8 @@ object PipelineQueries {
       Dedup.minhashClusters(docs(s, d), threshold = 0.6)),
 
     // INCREMENTAL dedup service: the corpus arrives in three id-ordered
-    // batches; each tick probes the persisted LSH band index (pruned to
-    // the tick's bucket partitions) instead of re-scanning the corpus.
+    // batches; each tick joins its own band rows against the persisted
+    // LSH band index instead of re-running the pairwise dedup.
     // The final clean table must be BIT-IDENTICAL to the from-scratch
     // minhash dedup — same oracle as p_dedup_minhash.
     "p_dedup_incremental" -> ((s, d) => {

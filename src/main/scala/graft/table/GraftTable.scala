@@ -564,7 +564,7 @@ final class GraftTable(
         .withColumn(FileIdCol,
           BucketIndex.fileIdColFor(newBuckets, col(MetaCols.RecordKey)))
         .withColumn(MetaCols.FileName,
-          concat(col(FileIdCol), lit(s"_0_$instant.${cfg.baseFormat}")))
+          fileNameCol(instant, cfg.baseFormat))
       val stats = writeFiles(spark, basePath, routed, instant,
         isDelta = false, baseFormat = cfg.baseFormat, dict = dictStats)
       val written = stats.map(s => (s.partitionPath, s.fileId)).toSet
@@ -618,7 +618,7 @@ final class GraftTable(
             lit(1L << (node.d + 1))) === lit(node.v), lit(a.fileId))
             .otherwise(lit(b.fileId)))
         .withColumn(MetaCols.FileName,
-          concat(col(FileIdCol), lit(s"_0_$instant.${cfg.baseFormat}")))
+          fileNameCol(instant, cfg.baseFormat))
       val stats = writeFiles(spark, basePath, routed, instant,
         isDelta = false, baseFormat = cfg.baseFormat, dict = dictStats)
       (stats, Map(partition -> Seq(fileId)), latestSchema.map(_.json).getOrElse(""))
@@ -658,7 +658,7 @@ final class GraftTable(
               live.map(s => (partition, s.fileId)).toSet)
             .withColumn(FileIdCol, lit(parentFileId))
             .withColumn(MetaCols.FileName,
-              concat(col(FileIdCol), lit(s"_0_$instant.${cfg.baseFormat}")))
+              fileNameCol(instant, cfg.baseFormat))
           writeFiles(spark, basePath, routed, instant,
             isDelta = false, baseFormat = cfg.baseFormat, dict = dictStats)
         }
@@ -1568,7 +1568,7 @@ final class GraftTable(
     val merged = deduped
       // rewritten rows land in a new physical file: refresh the name column
       .withColumn(MetaCols.FileName,
-        concat(col(FileIdCol), lit(s"_0_$instant.${cfg.baseFormat}")))
+        fileNameCol(instant, cfg.baseFormat))
 
     // internal plan: tagged-cache scan ∪ file-index scans, broadcast-
     // hinted routing only, files keyed by pre-assigned (partition, fileId)
@@ -1671,7 +1671,7 @@ final class GraftTable(
           .withColumn(MetaCols.CommitSeqno, coalesce(col(MetaCols.CommitSeqno),
             concat(lit(instant + "_"), monotonically_increasing_id().cast("string"))))
           .withColumn(MetaCols.FileName,
-            concat(col(FileIdCol), lit(s"_0_$instant.${cfg.baseFormat}")))
+            fileNameCol(instant, cfg.baseFormat))
         val dataCols = stamped.columns.filterNot(c => MetaCols.All.contains(c))
         val framed = stamped.select((MetaCols.All ++ dataCols).map(col): _*)
         val stats = writeFiles(spark, basePath, framed, instant, isDelta = false,

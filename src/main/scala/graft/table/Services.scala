@@ -103,7 +103,7 @@ object Services {
         else Payload.mergeFusedWithWriteLayout(t.cfg, unioned, del)
       val merged = merged0
         .withColumn(MetaCols.FileName,
-          concat(col(WritePipeline.FileIdCol), lit(s"_0_$ts.${t.cfg.baseFormat}")))
+          WritePipeline.fileNameCol(ts, t.cfg.baseFormat))
       // internal plan (file-index scans + fused merge, no joins): static
       // planning skips AQE's per-stage driver latency — see
       // WritePipeline.staticPlan
@@ -289,7 +289,7 @@ object Services {
             .sortWithinPartitions(sortExprs: _*)
             .withColumn(WritePipeline.FileIdCol, fileIdExpr)
             .withColumn(MetaCols.FileName,
-              concat(col(WritePipeline.FileIdCol), lit(s"_0_$ts.${t.cfg.baseFormat}")))
+              WritePipeline.fileNameCol(ts, t.cfg.baseFormat))
             .drop(ZOrder.ZCol)
           // internal plan: file-index scans + explicitly-pinned range
           // exchange (numFiles) — static planning, see staticPlan
@@ -313,7 +313,7 @@ object Services {
             .withColumn(WritePipeline.FileIdCol, col("_b_fid"))
             .drop("_b_part", "_b_lo", "_b_hi", "_b_total", "_b_fid")
             .withColumn(MetaCols.FileName,
-              concat(col(WritePipeline.FileIdCol), lit(s"_0_$ts.${t.cfg.baseFormat}")))
+              WritePipeline.fileNameCol(ts, t.cfg.baseFormat))
           // internal plan: file-index scans + broadcast-hinted bucket
           // route — static planning, see staticPlan
           WritePipeline.writeFiles(t.spark, t.basePath,

@@ -5,7 +5,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.core._
 import graft.core.Storage.PathOps
@@ -54,6 +54,11 @@ object WritePipeline extends Serializable {
     s"${fileId}_${token}_$instant.$format"
   def deltaFileName(fileId: String, instant: String, token: Int = 0): String =
     s"${fileId}_${token}_$instant.delta.parquet"
+  /** Per-row `_hoodie_file_name` of the token-0 file a write at `instant`
+    * opens for the row's file group: `<fileId>_0_<instant>.<format>`.
+    */
+  def fileNameCol(instant: String, format: String): Column =
+    concat(col(FileIdCol), lit(s"_0_$instant.$format"))
   def isDeltaFile(name: String): Boolean = name.endsWith(".delta.parquet")
   def fileIdOf(name: String): String = name.takeWhile(_ != '_')
 
@@ -75,12 +80,12 @@ object WritePipeline extends Serializable {
     */
   def withCommitMeta(df: DataFrame, instant: String, isDelta: Boolean,
       baseFormat: String = "parquet"): DataFrame = {
-    val suffix = if (isDelta) s"_0_$instant.delta.parquet" else s"_0_$instant.$baseFormat"
     val withCols = df
       .withColumn(MetaCols.CommitTime, lit(instant))
       .withColumn(MetaCols.CommitSeqno,
         concat(lit(instant + "_"), monotonically_increasing_id().cast("string")))
-      .withColumn(MetaCols.FileName, concat(col(FileIdCol), lit(suffix)))
+      .withColumn(MetaCols.FileName,
+        fileNameCol(instant, if (isDelta) "delta.parquet" else baseFormat))
     val dataCols = withCols.columns.filterNot(c => MetaCols.All.contains(c))
     withCols.select((MetaCols.All ++ dataCols).map(col): _*)
   }

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.core.{TableConfig, TableType}
+import graft.core.{CommitMetadata, TableConfig, TableType}
 import graft.pipeline.{Dedup, DedupService}
 import graft.read.Readers
 import graft.table.GraftTable
@@ -19,6 +19,14 @@ class DedupServiceSpec extends AnyFunSuite {
     TableConfig(name, TableType.CopyOnWrite, Seq("doc_id"), "", "")
 
   private def docs = spark.read.parquet(s"$sf001/documents.parquet")
+
+  private def ids(df: org.apache.spark.sql.DataFrame) =
+    df.select("doc_id").orderBy("doc_id").collect()
+
+  /** Files the table's latest commit wrote. */
+  private def lastCommitFiles(t: GraftTable): Seq[String] =
+    CommitMetadata.fromJson(t.timeline.readContent(t.timeline.completedDataInstants().last))
+      .writeStats.map(_.path)
 
   test("three id-ordered ticks equal the from-scratch minhash dedup") {
     val root = tmpDir("dedup_svc").toString
@@ -178,6 +186,94 @@ class DedupServiceSpec extends AnyFunSuite {
     val want = Dedup.minhashDedup(base, threshold = 0.6)
       .select("doc_id").orderBy("doc_id").collect()
     assert(got.sameElements(want), "replayed tick != from-scratch")
+    assert(DedupService.sync(srcT, cleanT, idx).isEmpty)
+  }
+
+  test("default index: one partition per table, one new base file per table per tick") {
+    val root = tmpDir("dedup_svc_one").toString
+    val srcT = GraftTable.create(spark, s"$root/source", docsCfg("src"))
+    val cleanT = GraftTable.create(spark, s"$root/clean", docsCfg("clean"))
+    val idx = DedupService.openIndex(spark, s"$root/index", threshold = 0.6)
+    assert((idx.bucketParts, idx.sigParts) === (1, 1))
+    val base = docs.filter(col("doc_id") < 160)
+    val ticks = Seq(
+      base.filter(col("doc_id") < 50),
+      base.filter(col("doc_id") >= 50 && col("doc_id") < 100),
+      base.filter(col("doc_id") >= 100),
+      base.filter(col("doc_id") < 50).withColumn("doc_id", col("doc_id") + 1000000L))
+    for (t <- ticks) {
+      srcT.bulkInsert(t)
+      assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+      for (i <- Seq(idx.bands, idx.sigs)) {
+        assert(lastCommitFiles(i).size === 1, s"${i.basePath}: ${lastCommitFiles(i)}")
+        assert(i.view.latestBaseFiles().size === 1)
+      }
+    }
+    assert(idx.bands.view.partitions() === Seq("p=0"))
+    assert(idx.sigs.view.partitions() === Seq("s=0"))
+    val got = ids(Readers.snapshot(cleanT))
+    assert(got.sameElements(ids(Dedup.minhashDedup(ticks.reduce(_ unionByName _), threshold = 0.6))),
+      "one-partition incremental != from-scratch")
+    assert(got.forall(_.getLong(0) < 1000000L), "re-submitted copies survived")
+  }
+
+  test("an explicit 64/32 index keeps its layout on reopen and still equals from-scratch") {
+    val root = tmpDir("dedup_svc_64").toString
+    val srcT = GraftTable.create(spark, s"$root/source", docsCfg("src"))
+    val cleanT = GraftTable.create(spark, s"$root/clean", docsCfg("clean"))
+    val idx0 = DedupService.openIndex(spark, s"$root/index",
+      bucketParts = 64, sigParts = 32, threshold = 0.6)
+    val base = docs.filter(col("doc_id") < 150)
+    val ticks = Seq(
+      base.filter(col("doc_id") < 50),
+      base.filter(col("doc_id") >= 50 && col("doc_id") < 100),
+      base.filter(col("doc_id") >= 100),
+      base.filter(col("doc_id") < 50).withColumn("doc_id", col("doc_id") + 1000000L))
+    srcT.bulkInsert(ticks.head)
+    assert(DedupService.sync(srcT, cleanT, idx0).nonEmpty)
+    // reopening with no arguments returns the STORED layout and parameters
+    val idx = DedupService.openIndex(spark, s"$root/index")
+    assert((idx.bucketParts, idx.sigParts, idx.threshold) === (64, 32, 0.6))
+    for (t <- ticks.tail) {
+      srcT.bulkInsert(t)
+      assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+    }
+    assert(idx.bands.view.partitions().size > 1 && idx.sigs.view.partitions().size > 1)
+    assert(idx.bands.view.partitions().forall(p => p.stripPrefix("p=").toInt < 64))
+    val got = ids(Readers.snapshot(cleanT))
+    assert(got.sameElements(ids(Dedup.minhashDedup(ticks.reduce(_ unionByName _), threshold = 0.6))),
+      "64/32 incremental != from-scratch")
+    assert(got.forall(_.getLong(0) < 1000000L), "re-submitted copies survived")
+  }
+
+  test("one-partition layout: a tick that fails after both appends replays to from-scratch") {
+    val root = tmpDir("dedup_svc_replay").toString
+    val srcT = GraftTable.create(spark, s"$root/source", docsCfg("src"))
+    val cleanT = GraftTable.create(spark, s"$root/clean", docsCfg("clean"))
+    val idx = DedupService.openIndex(spark, s"$root/index", threshold = 0.6)
+    val base = docs.filter(col("doc_id") < 90)
+    srcT.bulkInsert(base.filter(col("doc_id") < 45))
+    assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+    val ckpt = DedupService.lastCheckpoint(cleanT)
+    // tick 2 plus copies of tick-1 docs under higher ids: the replay must
+    // still veto the copies from the index, and must not let the tick's
+    // own postings and signatures (published before the failure) veto it
+    srcT.bulkInsert(base.filter(col("doc_id") >= 45)
+      .unionByName(base.filter(col("doc_id") < 20).withColumn("doc_id", col("doc_id") + 1000000L)))
+    @volatile var armed = true
+    cleanT.registerPreCommitValidator { _ =>
+      if (armed) throw new IllegalStateException("injected clean commit failure")
+    }
+    val e = intercept[IllegalStateException](DedupService.sync(srcT, cleanT, idx))
+    assert(e.getMessage === "injected clean commit failure")
+    assert(DedupService.lastCheckpoint(cleanT) === ckpt)
+    assert(idx.bands.timeline.completedDataInstants().size === 2)
+    assert(idx.sigs.timeline.completedDataInstants().size === 2)
+    armed = false
+    assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+    val want = ids(Dedup.minhashDedup(Readers.snapshot(srcT)
+      .select("doc_id", "text"), threshold = 0.6))
+    assert(ids(Readers.snapshot(cleanT)).sameElements(want), "replayed tick != from-scratch")
     assert(DedupService.sync(srcT, cleanT, idx).isEmpty)
   }
 }

@@ -1,9 +1,11 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.{DataFrame, ExecutionCapture}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -14,7 +16,7 @@ import graft.table.{GraftTable, WritePipeline}
   * AQE off; the shared session's conf is never written, so queries and
   * commits on other threads keep their own planning mode.
   */
-class StaticPlanningSpec extends AnyFunSuite {
+class StaticPlanningSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   import SparkTestBase._
   import spark.implicits._
 
@@ -93,5 +95,52 @@ class StaticPlanningSpec extends AnyFunSuite {
     assert(readerFailures.isEmpty,
       s"${readerFailures.size} of $reads reads lost AQE: ${readerFailures.peek()}")
     assert(Readers.snapshot(t).count() === 397)
+  }
+
+  test("a skewed user source keeps AQE's skew-join split inside a static upsert") {
+    val t = GraftTable.create(spark, tmpDir("static_skew").toString + "/t",
+      TableConfig("static_skew", TableType.CopyOnWrite, Seq("id"), "", ""))
+    t.bulkInsert(spark.range(0, 10).select($"id", lit(-1L).as("k"), lit("").as("name")))
+    // 90% of 20k rows join on k = 0: one reduce partition far above the
+    // others, fed by 8 map tasks so AQE can split it
+    val facts = spark.range(0, 20000, 1, 8)
+      .select($"id", when($"id" % 10 < 9, 0L).otherwise($"id" % 100).as("k"))
+    val dim = spark.range(0, 100).select($"id".as("k"), concat(lit("n"), $"id").as("name"))
+    val conf = Map(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.shuffle.partitions" -> "8",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k")
+    val prev = conf.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    conf.foreach { case (k, v) => spark.conf.set(k, v) }
+    val (_, executions) = try ExecutionCapture.during(spark) {
+      t.upsert(facts.join(dim, "k").select($"id", $"k", $"name"))
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    assert(executions.nonEmpty)
+    // the engine's own actions plan statically, on the child session
+    val adaptiveTop = executions.filter(qe =>
+      qe.executedPlan.find(_.isInstanceOf[AdaptiveSparkPlanExec]).nonEmpty)
+    assert(adaptiveTop.isEmpty, adaptiveTop.map(_.executedPlan).mkString("\n"))
+    assert(executions.forall(_.sparkSession ne spark))
+    // the user plan, cached at persist() under the parent's conf, ran
+    // under AQE and split the skewed join partition
+    def cachedPlans(p: SparkPlan): Seq[SparkPlan] = p.collect {
+      case s: InMemoryTableScanExec => s.relation.cachedPlan
+    }.flatMap(c => c +: cachedPlans(c))
+    val userPlans = executions.flatMap(qe => cachedPlans(qe.executedPlan))
+      .collect { case a: AdaptiveSparkPlanExec => a }
+    assert(userPlans.nonEmpty, executions.map(_.executedPlan).mkString("\n"))
+    // the helper's collect descends into the final plan's query stages
+    val skewJoins = userPlans.flatMap(collect(_) {
+      case j: SortMergeJoinExec if j.isSkewJoin => j
+    })
+    assert(skewJoins.nonEmpty, userPlans.mkString("\n"))
+    // ids 0-9 update in place
+    assert(Readers.snapshot(t).count() === 20000)
+    assert(Readers.snapshot(t).filter($"k" === -1L).count() === 0)
   }
 }
