@@ -22,13 +22,9 @@ import graft.table.GraftTable
   * upsert is keyed).
   *
   * State: ONE graft table under `indexPath` holding the benchmark's
-  * DISTINCT shingles, PARTITIONED BY `pmod(abs(xxhash64(s)), P)`, ONE
-  * partition by default: a doc of w tokens has w-n+1 shingles hashed
-  * uniformly, so a tick's shingle fan-out covers every one of P
-  * partitions and pruning reads them all, while each partition costs a
-  * small-file rewrite per benchmark upsert (see [[DedupService]]).
-  * Indexes created with P above 1 keep it and probe only the partitions
-  * their tick's shingles hash into.
+  * DISTINCT shingles, PARTITIONED BY `pmod(abs(xxhash64(s)), P)` — a
+  * tick's probe computes its own shingles' partitions and reads only
+  * those, so probe IO ∝ the tick's shingle fan-out, not the benchmark.
   * [[updateBenchmark]] upserts new benchmark suites into the same index
   * (keyed by shingle, so re-registration is idempotent); docs already
   * published before a suite was added are NOT retroactively rewritten —
@@ -50,7 +46,7 @@ object DecontaminateService {
     * reads the same partitions regardless of suite count.
     */
   def openIndex(spark: SparkSession, indexPath: String,
-      fpParts: Int = 1, n: Int = 8): GraftTable = {
+      fpParts: Int = 64, n: Int = 8): GraftTable = {
     val t = GraftTable.createOrLoad(spark, indexPath, TableConfig(
       "decon_shingles", TableType.CopyOnWrite,
       Seq("s", "suite"),
@@ -100,8 +96,7 @@ object DecontaminateService {
       .getOrElse((None, ""))
 
   /** One tick: incremental-pull new docs → shingle row-locally → probe
-    * the index (on a layout of more than one partition, only the
-    * partitions this tick's shingles hash into) →
+    * ONLY the index partitions this tick's shingles hash into →
     * contaminated ids drop, survivors upsert into `clean` with the source
     * checkpoint in the SAME commit (crash-atomic). Returns the clean
     * commit ts, or None when the source has nothing new.
@@ -156,12 +151,10 @@ object DecontaminateService {
           if (index.timeline.completedDataInstants().isEmpty)
             pulled.select(col(idCol).as("_dc_id")).limit(0)
           else {
-            val parts =
-              if (fpParts == 1) None
-              else Some(tickShingles
-                .select(pmod(abs(xxhash64(col("s"))), lit(fpParts)).as("p"))
-                .distinct().collect().map(x => s"p=${x.getLong(0)}").toSeq)
-            val idxRows = Readers.snapshot(index, partitions = parts)
+            val parts = tickShingles
+              .select(pmod(abs(xxhash64(col("s"))), lit(fpParts)).as("p"))
+              .distinct().collect().map(x => s"p=${x.getLong(0)}").toSeq
+            val idxRows = Readers.snapshot(index, partitions = Some(parts))
             if (thresholds.isEmpty)
               tickShingles
                 .join(idxRows.select("s"), Seq("s"))

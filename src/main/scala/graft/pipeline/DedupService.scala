@@ -21,20 +21,26 @@ import graft.table.{GraftTable, WritePipeline}
   *  - `bands` (band, bucket, doc_id) — every band row of every doc EVER
   *    SEEN (kept and dropped: from-scratch semantics drop a doc that
   *    near-dups ANY lower-id doc, surviving or not, so dropped docs keep
-  *    vetoing their later near-dups). PARTITIONED BY `pmod(bucket, P)`.
-  *  - `sigs` (doc_id, sig) — signatures for candidate verification,
-  *    partitioned by `pmod(doc_id, SP)`.
+  *    vetoing their later near-dups).
+  *  - `sigs` (doc_id, sig) — signatures for candidate verification.
   *
-  * New indexes default to ONE partition each (P = SP = 1). Partition
-  * pruning cannot pay here: `bucket` is an xxhash64, so a tick of n docs
-  * has `bands`·n band rows (16n by default) spread uniformly, and it
-  * skips any one of P partitions with probability ((P-1)/P)^(16n) —
-  * about e^(-n/4) at P = 64, e^(-100) at n = 400. Every partition is
-  * read every tick, and every partition costs a small-file rewrite per
-  * append (inserts top up a partition's small file before opening a
-  * new one), so one partition means at most one file per table per
-  * tick. Indexes created with P or SP above 1 keep their stored counts
-  * and still probe only the partitions their tick hashes into.
+  * Both are ONE partition. `bucket` is an xxhash64, so a tick of n docs
+  * has `bands`·n band rows (16n by default) spread uniformly over any
+  * bucket partitioning, and it misses a given one of P partitions with
+  * probability ((P-1)/P)^(16n) — about e^(-n/4) at P = 64, e^(-100) at
+  * n = 400: the band probe reads the whole `bands` index at any tick
+  * size worth a sync, however it is partitioned, and more partitions
+  * only cost more files (an insert tops up each touched partition's
+  * small file, so a tick rewrites one small file per partition). `sigs`
+  * is different: a tick's stored candidates are few, so doc-id
+  * partitions could prune its read, but they cost the same per-append
+  * rewrites. Instead the `sigs` read is skipped on ticks whose band
+  * probe found no stored candidate, and otherwise reads the whole table.
+  * At one partition an append tops up one file per table (more once it
+  * passes the small-file limit); that rewrite grows with the index up
+  * to that limit. Indexes written with more partitions (64 and 32 were
+  * the old defaults) keep appending through their stored partition
+  * expressions and are read whole, like new ones.
   *
   * Each tick: incremental-pull new docs since the checkpoint → candidate
   * pairs from (a) an in-batch band self-join and (b) a probe of the
@@ -70,16 +76,12 @@ import graft.table.{GraftTable, WritePipeline}
 object DedupService {
 
   val CheckpointKey = "graft.dedup.source.checkpoint"
-  private val BucketPartsKey = "graft.dedup.bucket.partitions"
-  private val SigPartsKey = "graft.dedup.sig.partitions"
   private val ThresholdKey = "graft.dedup.threshold"
   private val NumHashesKey = "graft.dedup.num.hashes"
   private val BandsKey = "graft.dedup.bands"
   private val ShingleKey = "graft.dedup.shingle.n"
 
   final case class DedupIndex(bands: GraftTable, sigs: GraftTable) {
-    def bucketParts: Int = bands.cfg.propLong(BucketPartsKey, 64L).toInt
-    def sigParts: Int = sigs.cfg.propLong(SigPartsKey, 32L).toInt
     def threshold: Double = bands.cfg.prop(ThresholdKey, "0.7").toDouble
     def numHashes: Int = bands.cfg.propLong(NumHashesKey, 64L).toInt
     def numBands: Int = bands.cfg.propLong(BandsKey, 16L).toInt
@@ -91,24 +93,21 @@ object DedupService {
     * tick reads them back — old ticks' signatures and band rows were
     * computed with them, so a drifting per-call parameter would silently
     * corrupt results. Loading an existing index ignores the arguments and
-    * returns the stored parameters, partition counts included.
+    * returns the stored parameters.
     */
   def openIndex(spark: SparkSession, indexPath: String,
-      bucketParts: Int = 1, sigParts: Int = 1,
       threshold: Double = 0.7, numHashes: Int = 64, bands: Int = 16,
       shingleN: Int = 3): DedupIndex = {
     val bandsT = GraftTable.createOrLoad(spark, s"$indexPath/bands", TableConfig(
       "dedup_bands", TableType.CopyOnWrite,
       Seq("band", "bucket", "doc_id"),
-      s"concat('p=', cast(pmod(bucket, $bucketParts) as string))", "",
-      Map(BucketPartsKey -> bucketParts.toString,
-        ThresholdKey -> threshold.toString, NumHashesKey -> numHashes.toString,
+      "'p=0'", "",
+      Map(ThresholdKey -> threshold.toString, NumHashesKey -> numHashes.toString,
         BandsKey -> bands.toString, ShingleKey -> shingleN.toString)))
     val sigsT = GraftTable.createOrLoad(spark, s"$indexPath/sigs", TableConfig(
       "dedup_sigs", TableType.CopyOnWrite,
       Seq("doc_id"),
-      s"concat('s=', cast(pmod(doc_id, $sigParts) as string))", "",
-      Map(SigPartsKey -> sigParts.toString)))
+      "'s=0'", ""))
     DedupIndex(bandsT, sigsT)
   }
 
@@ -193,9 +192,8 @@ object DedupService {
           .filter(col("_l_id") < col("_r_id"))
           .select("_l_id", "_r_id")
 
-        // (b) corpus candidates: probe the band index — on a layout of
-        // more than one partition, ONLY the partitions this tick's
-        // buckets hash into (plan-time pruning). Postings whose
+        // (b) corpus candidates: probe the whole band index (see the
+        // scaladoc for why no partition pruning). Postings whose
         // doc_id is in the CURRENT batch are anti-joined away first —
         // they exist when this tick's own append has published, or when
         // a crashed tick's append replays; without the exclusion such a
@@ -208,43 +206,27 @@ object DedupService {
         val indexPairs =
           if (bandsEmpty) None
           else {
-            val parts =
-              if (index.bucketParts == 1) None
-              else Some(WritePipeline.staticPlan(bandRows
-                .select(pmod(col("bucket"), lit(index.bucketParts.toLong)).as("p"))
-                .distinct()).collect().map(x => s"p=${x.getLong(0)}").toSeq)
             val batchIds = sig.select(col("_d_id").as("doc_id")).distinct()
-            val stored = Readers.snapshot(index.bands, partitions = parts)
+            val stored = Readers.snapshot(index.bands)
               .join(batchIds, Seq("doc_id"), "left_anti")
               .select(col("band"), col("bucket"), col("doc_id").as("_l_id"))
             Some(stored.join(
                 bandRows.select(col("band"), col("bucket"), col("_d_id").as("_r_id")),
                 Seq("band", "bucket"))
-              .select("_l_id", "_r_id"))
+              .select("_l_id", "_r_id")
+              .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
           }
-        val pruneSigs = index.sigParts > 1
-        val pairs = {
-          val all = indexPairs.map(batchPairs.unionByName(_)).getOrElse(batchPairs).distinct()
-          // read twice only where the sigs probe is pruned (below)
-          if (pruneSigs) all.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          else all
-        }
+        val pairs = indexPairs.map(batchPairs.unionByName(_)).getOrElse(batchPairs).distinct()
 
-        // l-side signatures: from the batch, else from the sigs table —
-        // on a layout of more than one partition, pruned to the candidate
-        // ids' partitions
+        // l-side signatures: from the batch, plus the sigs table when the
+        // probe found stored candidates (their l-side docs are never in
+        // the batch: self-postings were anti-joined away above)
         val dups = try {
-          val missing =
-            if (!pruneSigs) None
-            else Some(WritePipeline.staticPlan(
-                pairs.select(col("_l_id")).distinct()
-                  .join(sig.select(col("_d_id").as("_l_id")), Seq("_l_id"), "left_anti")
-                  .select(pmod(col("_l_id"), lit(index.sigParts.toLong)).as("p"))
-                  .distinct())
-              .collect().map(x => s"s=${x.getLong(0)}").toSeq)
+          val storedCandidates = !sigsEmpty &&
+            indexPairs.exists(p => WritePipeline.staticPlan(p).count() > 0)
           val storedSigs =
-            if (missing.exists(_.isEmpty) || sigsEmpty) sig.select(col("_d_id"), col("_d_sig"))
-            else Readers.snapshot(index.sigs, partitions = missing)
+            if (!storedCandidates) sig.select(col("_d_id"), col("_d_sig"))
+            else Readers.snapshot(index.sigs)
               .select(col("doc_id").as("_d_id"), col("sig").as("_d_sig"))
               .unionByName(sig.select(col("_d_id"), col("_d_sig")))
           val verified = WritePipeline.staticPlan(pairs
@@ -256,7 +238,7 @@ object DedupService {
           // back onto the caller's session: the checkpointed rows are
           // session-free, the survivors' upsert plans under the caller's
           GraftSqlBridge.ofRows(spark, verified.queryExecution.analyzed)
-        } finally pairs.unpersist()
+        } finally indexPairs.foreach(_.unpersist())
 
         val survivors = pulled.join(dups, col(idCol) === col("_dup_id"), "left_anti")
         appends.foreach(awaitOrRethrow)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.{CommitMetadata, TableConfig, TableType}
 import graft.read.Readers
-import graft.table.{GraftTable, WritePipeline}
+import graft.table.GraftTable
 
 /** INCREMENTAL near-dup dedup service for 64-BIT HASH operators — the
   * [[DedupService]] (MinHash) mechanics generalized to any row-local
@@ -18,21 +18,17 @@ import graft.table.{GraftTable, WritePipeline}
   *  - `bands` (band, bucket, doc_id, hash) — one row per 16-bit hash
   *    slice per doc EVER SEEN (kept and dropped: a dropped doc keeps
   *    vetoing its later near-dups, matching from-scratch semantics).
-  *    PARTITIONED BY `pmod(bucket, P)`, ONE partition by default: a
-  *    tick of n rows has `bands`·n slice values (4n by default), so it
-  *    skips any one of P partitions with probability ((P-1)/P)^(4n) —
-  *    e^(-25) at P = 64 and n = 400 — and pruning reads every partition
-  *    while each one costs a small-file rewrite per append (see
-  *    [[DedupService]]). Indexes created with P above 1 keep it and
-  *    probe only the partitions their slice values hash into. The full
-  *    hash rides in the band row, so candidate verification
-  *    (`bit_count(xor) <= maxDist`) needs no second lookup table —
-  *    unlike MinHash signatures, the verifier is 8 bytes.
+  *    PARTITIONED BY `pmod(bucket, P)` so a tick's probe reads only the
+  *    partitions its own slice values hash into (plan-time pruning —
+  *    probe IO ∝ tick fan-out, not corpus). The full hash rides in the
+  *    band row, so candidate verification (`bit_count(xor) <= maxDist`)
+  *    needs no second lookup table — unlike MinHash signatures, the
+  *    verifier is 8 bytes.
   *
   * Each tick: incremental-pull new rows since the checkpoint → hash
   * (rows the extractor cannot hash — undecodable media — pass through
   * unhashed: they are kept and not indexed) → candidates from an
-  * in-batch band self-join plus the index probe → Hamming verify
+  * in-batch band self-join plus the pruned index probe → Hamming verify
   * → losers dropped, survivors upserted into `clean` with the source
   * checkpoint in the SAME commit metadata (crash-atomic), and the
   * tick's band rows appended to the index.
@@ -62,7 +58,7 @@ object HashDedupService {
   }
 
   def openIndex(spark: SparkSession, indexPath: String,
-      bucketParts: Int = 1, maxDist: Int = 3, bands: Int = 4): HashIndex = {
+      bucketParts: Int = 64, maxDist: Int = 3, bands: Int = 4): HashIndex = {
     require(64 % bands == 0 && maxDist < bands,
       s"need bands | 64 and maxDist < bands for exact banded recall (got $bands, $maxDist)")
     HashIndex(GraftTable.createOrLoad(spark, s"$indexPath/bands", TableConfig(
@@ -136,9 +132,8 @@ object HashDedupService {
           .filter(col("_l_id") < col("_r_id"))
           .select("_l_id", "_l_hash", "_r_id", "_r_hash")
 
-        // (b) corpus candidates: probe the band index — on a layout of
-        // more than one partition, ONLY the partitions this tick's slice
-        // values hash into (plan-time pruning). Postings
+        // (b) corpus candidates: probe ONLY the index partitions this
+        // tick's slice values hash into (plan-time pruning). Postings
         // whose doc_id is in the CURRENT batch are anti-joined away first
         // — they exist only when a crashed tick's index append replays,
         // and without the exclusion a replayed doc would veto itself (and
@@ -151,13 +146,11 @@ object HashDedupService {
         val indexPairs =
           if (index.bands.timeline.completedDataInstants().isEmpty) None
           else {
-            val parts =
-              if (index.bucketParts == 1) None
-              else Some(WritePipeline.staticPlan(bandRows
-                .select(pmod(col("bucket"), lit(index.bucketParts.toLong)).as("p"))
-                .distinct()).collect().map(x => s"p=${x.getLong(0)}").toSeq)
+            val parts = bandRows
+              .select(pmod(col("bucket"), lit(index.bucketParts.toLong)).as("p"))
+              .distinct().collect().map(x => s"p=${x.getLong(0)}").toSeq
             val batchIds = hashes.select(col("_h_id").as("doc_id")).distinct()
-            val stored = Readers.snapshot(index.bands, partitions = parts)
+            val stored = Readers.snapshot(index.bands, partitions = Some(parts))
               .join(batchIds, Seq("doc_id"), "left_anti")
               .select(col("band"), col("bucket"),
                 col("doc_id").as("_l_id"), col("hash").as("_l_hash"))

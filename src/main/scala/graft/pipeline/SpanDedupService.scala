@@ -27,13 +27,10 @@ import graft.table.GraftTable
   *
   * State: ONE graft table under `indexPath` mapping window fingerprint →
   * the LOWEST doc id that ever carried it, keyed by `fp`, PARTITIONED BY
-  * `pmod(abs(xxhash64(fp)), P)`, ONE partition by default: a doc of w
-  * tokens has w-k+1 windows hashed uniformly, so a tick's window fan-out
-  * covers every one of P partitions and pruning reads them all, while
-  * each partition costs a small-file rewrite per upsert (see
-  * [[DedupService]]). Indexes created with P above 1 keep it and probe
-  * only the partitions their fingerprints hash into. The EVENT_TIME
-  * payload on a negated-id precombine keeps the smallest
+  * `pmod(abs(xxhash64(fp)), P)` — a tick's probe computes its distinct
+  * fp-hash partitions and reads only those (plan-time pruning bounds
+  * probe IO by the tick's window fan-out, not the corpus). The
+  * EVENT_TIME payload on a negated-id precombine keeps the smallest
   * owner id under replays and appends, which makes the service
   * crash-idempotent: a replayed tick (index appended, clean commit lost)
   * re-probes and finds each unique window still owned by ITS OWN doc —
@@ -42,7 +39,7 @@ import graft.table.GraftTable
   *
   * Each tick: incremental-pull new docs since the checkpoint → window
   * fingerprints (row-local) → duplicated starts from (a) an in-tick
-  * fingerprint count and (b) the index probe with owner≠current →
+  * fingerprint count and (b) the pruned index probe with owner≠current →
   * row-local span surgery → cleaned docs upserted into `clean` with the
   * source checkpoint in the SAME commit metadata (crash-atomic); the
   * tick's fingerprints upsert into the index FIRST (replay-safe, see
@@ -60,7 +57,7 @@ object SpanDedupService {
     * silently stop matching.
     */
   def openIndex(spark: SparkSession, indexPath: String,
-      fpParts: Int = 1, k: Int = 20): GraftTable =
+      fpParts: Int = 64, k: Int = 20): GraftTable =
     GraftTable.createOrLoad(spark, indexPath, TableConfig(
       "span_fps", TableType.CopyOnWrite,
       Seq("fp"),
@@ -125,19 +122,16 @@ object SpanDedupService {
         val batchDup = wins
           .withColumn("_n", count(lit(1)).over(Window.partitionBy(col("_sd_fp"))))
           .filter(col("_n") >= 2).select(col(idCol), col("_sd_s"))
-        // (b) seen in an EARLIER tick: probe the index (on a layout of
-        // more than one partition, only the partitions this tick's
-        // fingerprints hash into); owner≠current makes a replayed tick's
-        // own unique windows invisible (crash-idempotence)
+        // (b) seen in an EARLIER tick: probe only the index partitions
+        // this tick's fingerprints hash into; owner≠current makes a
+        // replayed tick's own unique windows invisible (crash-idempotence)
         val indexDup =
           if (index.timeline.completedDataInstants().isEmpty) None
           else {
-            val parts =
-              if (fpParts == 1) None
-              else Some(wins
-                .select(pmod(abs(xxhash64(col("_sd_fp"))), lit(fpParts.toLong)).as("p"))
-                .distinct().collect().map(r => s"p=${r.getLong(0)}").toSeq)
-            val seen = Readers.snapshot(index, partitions = parts)
+            val parts = wins
+              .select(pmod(abs(xxhash64(col("_sd_fp"))), lit(fpParts.toLong)).as("p"))
+              .distinct().collect().map(r => s"p=${r.getLong(0)}").toSeq
+            val seen = Readers.snapshot(index, partitions = Some(parts))
               .select(col("fp"), col("owner_id"))
             Some(wins.join(seen, col("_sd_fp") === col("fp"))
               .filter(col("owner_id") =!= col(idCol))

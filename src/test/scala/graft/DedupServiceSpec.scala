@@ -1,6 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.ExecutionCapture
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.functions._
 
 import graft.core.{CommitMetadata, TableConfig, TableType}
@@ -194,7 +196,6 @@ class DedupServiceSpec extends AnyFunSuite {
     val srcT = GraftTable.create(spark, s"$root/source", docsCfg("src"))
     val cleanT = GraftTable.create(spark, s"$root/clean", docsCfg("clean"))
     val idx = DedupService.openIndex(spark, s"$root/index", threshold = 0.6)
-    assert((idx.bucketParts, idx.sigParts) === (1, 1))
     val base = docs.filter(col("doc_id") < 160)
     val ticks = Seq(
       base.filter(col("doc_id") < 50),
@@ -204,6 +205,8 @@ class DedupServiceSpec extends AnyFunSuite {
     for (t <- ticks) {
       srcT.bulkInsert(t)
       assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+      // one file per table while the index is below the small-file limit:
+      // each append tops up that file
       for (i <- Seq(idx.bands, idx.sigs)) {
         assert(lastCommitFiles(i).size === 1, s"${i.basePath}: ${lastCommitFiles(i)}")
         assert(i.view.latestBaseFiles().size === 1)
@@ -217,33 +220,73 @@ class DedupServiceSpec extends AnyFunSuite {
     assert(got.forall(_.getLong(0) < 1000000L), "re-submitted copies survived")
   }
 
-  test("an explicit 64/32 index keeps its layout on reopen and still equals from-scratch") {
+  test("an index written with the old 64/32 layout keeps it and still equals from-scratch") {
     val root = tmpDir("dedup_svc_64").toString
     val srcT = GraftTable.create(spark, s"$root/source", docsCfg("src"))
     val cleanT = GraftTable.create(spark, s"$root/clean", docsCfg("clean"))
-    val idx0 = DedupService.openIndex(spark, s"$root/index",
-      bucketParts = 64, sigParts = 32, threshold = 0.6)
+    // the tables as earlier versions created them: hash-partitioned, with
+    // the partition counts among the stored properties
+    GraftTable.create(spark, s"$root/index/bands", TableConfig(
+      "dedup_bands", TableType.CopyOnWrite, Seq("band", "bucket", "doc_id"),
+      "concat('p=', cast(pmod(bucket, 64) as string))", "",
+      Map("graft.dedup.bucket.partitions" -> "64", "graft.dedup.threshold" -> "0.6",
+        "graft.dedup.num.hashes" -> "64", "graft.dedup.bands" -> "16",
+        "graft.dedup.shingle.n" -> "3")))
+    GraftTable.create(spark, s"$root/index/sigs", TableConfig(
+      "dedup_sigs", TableType.CopyOnWrite, Seq("doc_id"),
+      "concat('s=', cast(pmod(doc_id, 32) as string))", "",
+      Map("graft.dedup.sig.partitions" -> "32")))
+    val idx = DedupService.openIndex(spark, s"$root/index")
+    assert(idx.threshold === 0.6)
     val base = docs.filter(col("doc_id") < 150)
     val ticks = Seq(
       base.filter(col("doc_id") < 50),
       base.filter(col("doc_id") >= 50 && col("doc_id") < 100),
       base.filter(col("doc_id") >= 100),
       base.filter(col("doc_id") < 50).withColumn("doc_id", col("doc_id") + 1000000L))
-    srcT.bulkInsert(ticks.head)
-    assert(DedupService.sync(srcT, cleanT, idx0).nonEmpty)
-    // reopening with no arguments returns the STORED layout and parameters
-    val idx = DedupService.openIndex(spark, s"$root/index")
-    assert((idx.bucketParts, idx.sigParts, idx.threshold) === (64, 32, 0.6))
-    for (t <- ticks.tail) {
+    for (t <- ticks) {
       srcT.bulkInsert(t)
       assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
     }
     assert(idx.bands.view.partitions().size > 1 && idx.sigs.view.partitions().size > 1)
     assert(idx.bands.view.partitions().forall(p => p.stripPrefix("p=").toInt < 64))
+    assert(idx.sigs.view.partitions().forall(p => p.stripPrefix("s=").toInt < 32))
     val got = ids(Readers.snapshot(cleanT))
     assert(got.sameElements(ids(Dedup.minhashDedup(ticks.reduce(_ unionByName _), threshold = 0.6))),
       "64/32 incremental != from-scratch")
     assert(got.forall(_.getLong(0) < 1000000L), "re-submitted copies survived")
+  }
+
+  test("the signature index is read only on ticks with stored candidates") {
+    val root = tmpDir("dedup_svc_sigs").toString
+    val srcT = GraftTable.create(spark, s"$root/source", docsCfg("src"))
+    val cleanT = GraftTable.create(spark, s"$root/clean", docsCfg("clean"))
+    val idx = DedupService.openIndex(spark, s"$root/index", threshold = 0.6)
+    val sigsPath = idx.sigs.basePath.toUri.getPath
+    // the verification join (the only plan with `_l_sig`) scans the sigs table
+    def verifyReadsSigs(qes: Seq[QueryExecution]): Boolean = qes.exists { qe =>
+      qe.executedPlan.toString.contains("_l_sig") &&
+        qe.executedPlan.collect { case s: FileSourceScanExec => s }
+          .exists(_.relation.location.rootPaths.exists(_.toUri.getPath.startsWith(sigsPath)))
+    }
+    // distinct words per doc: no band bucket in common across docs
+    def fresh(from: Long, n: Int) = spark.range(from, from + n).select(col("id").as("doc_id"),
+      concat_ws(" ", transform(sequence(lit(0), lit(30)),
+        i => concat(lit("w"), col("id").cast("string"), lit("x"), i.cast("string")))).as("text"))
+    srcT.bulkInsert(fresh(0, 40))
+    assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+    // no stored candidate: the sigs table is not read
+    srcT.bulkInsert(fresh(100, 40))
+    val (t2, quiet) = ExecutionCapture.during(spark)(DedupService.sync(srcT, cleanT, idx))
+    assert(t2.nonEmpty)
+    assert(!verifyReadsSigs(quiet), "sigs read on a tick without stored candidates")
+    // copies of stored docs: the sigs table is read, the copies dropped
+    srcT.bulkInsert(fresh(0, 10).withColumn("doc_id", col("doc_id") + 1000L))
+    val (t3, busy) = ExecutionCapture.during(spark)(DedupService.sync(srcT, cleanT, idx))
+    assert(t3.nonEmpty)
+    assert(verifyReadsSigs(busy), "sigs not read on a tick with stored candidates")
+    assert(ids(Readers.snapshot(cleanT)).map(_.getLong(0)).toSeq ===
+      ((0L until 40L) ++ (100L until 140L)))
   }
 
   test("one-partition layout: a tick that fails after both appends replays to from-scratch") {

@@ -100,32 +100,4 @@ class HashDedupServiceSpec extends AnyFunSuite {
     // evens collapse to 0; odds (unhashable) all pass through
     assert(kept === Set(0L, 1L, 3L, 5L, 7L, 9L), s"got $kept")
   }
-
-  test("default index is one partition; an explicit 64-partition index agrees") {
-    def run(root: String, open: () => HashDedupService.HashIndex): Set[Long] = {
-      val srcT = GraftTable.create(spark, s"$root/source", cfg("src"))
-      val cleanT = GraftTable.create(spark, s"$root/clean", cfg("clean"))
-      srcT.bulkInsert(ids(48))
-      HashDedupService.sync(srcT, cleanT, open(), imageHash)
-      // tick 2 is answered from the persisted index (reopened: the stored
-      // layout wins over the defaults)
-      srcT.upsert(spark.range(48, 96).select(col("id").as("doc_id")))
-      assert(HashDedupService.sync(srcT, cleanT,
-        HashDedupService.openIndex(spark, s"$root/index"), imageHash).nonEmpty)
-      Readers.snapshot(cleanT).select("doc_id").as[Long].collect().toSet
-    }
-    val one = tmpDir("hash_svc_one").toString
-    val kept1 = run(one, () => HashDedupService.openIndex(spark, s"$one/index"))
-    val idx1 = HashDedupService.openIndex(spark, s"$one/index")
-    assert(idx1.bucketParts === 1)
-    assert(idx1.bands.view.partitions() === Seq("p=0"))
-    assert(idx1.bands.view.latestBaseFiles().size === 1)
-    val wide = tmpDir("hash_svc_64").toString
-    val kept64 = run(wide, () => HashDedupService.openIndex(spark, s"$wide/index", bucketParts = 64))
-    val idx64 = HashDedupService.openIndex(spark, s"$wide/index")
-    assert(idx64.bucketParts === 64)
-    assert(idx64.bands.view.partitions().size > 1)
-    assert(kept1 === (0L until 8L).toSet)
-    assert(kept64 === kept1)
-  }
 }
