@@ -3,9 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{CommitMetadata, TableConfig, TableType}
+import graft.core.{TableConfig, TableType}
 import graft.read.Readers
-import graft.table.GraftTable
+import graft.table.{GraftTable, IncrementalSync}
 
 /** INCREMENTAL benchmark decontamination as a table service — the 100 TB
   * form of [[Decontaminate.decontaminate]]: maintain a leakage-free
@@ -33,8 +33,7 @@ import graft.table.GraftTable
   */
 object DecontaminateService {
 
-  val CheckpointKey = "graft.decon.source.checkpoint"
-  val RewindSeenKey = "graft.decon.source.rewind.seen"
+  val SyncKeys = IncrementalSync.Keys("graft.decon.source")
   private val PartsKey = "graft.decon.fp.partitions"
   private val ShingleKey = "graft.decon.shingle.n"
 
@@ -86,20 +85,14 @@ object DecontaminateService {
       .withColumn("suite", lit(suite)))
   }
 
-  def lastCheckpoint(clean: GraftTable): Option[String] = syncMarks(clean)._1
+  def lastCheckpoint(clean: GraftTable): Option[String] =
+    IncrementalSync.checkpoint(clean, SyncKeys)
 
-  private def syncMarks(clean: GraftTable): (Option[String], String) =
-    clean.timeline.completedDataInstants().reverse.iterator
-      .map(i => CommitMetadata.fromJson(clean.timeline.readContent(i)).extraMetadata)
-      .collectFirst { case m if m.contains(CheckpointKey) =>
-        (m.get(CheckpointKey), m.getOrElse(RewindSeenKey, "")) }
-      .getOrElse((None, ""))
-
-  /** One tick: incremental-pull new docs → shingle row-locally → probe
+  /** One tick ([[graft.table.IncrementalSync]] plans it and owns the
+    * checkpoint marks): pull the new docs → shingle row-locally → probe
     * ONLY the index partitions this tick's shingles hash into →
-    * contaminated ids drop, survivors upsert into `clean` with the source
-    * checkpoint in the SAME commit (crash-atomic). Returns the clean
-    * commit ts, or None when the source has nothing new.
+    * contaminated ids drop, survivors upsert into `clean` with the marks.
+    * Returns the clean commit ts, or None when the source has nothing new.
     *
     * `thresholds` selects the rule, matching the batch operators exactly:
     *  - empty (default): the hard `Decontaminate.decontaminate` rule —
@@ -118,27 +111,16 @@ object DecontaminateService {
     requireSuiteKeyedIndex(index)
     val n = index.cfg.propLong(ShingleKey, 8L).toInt
     val fpParts = index.cfg.propLong(PartsKey, 64L)
-    val head = source.timeline.completedDataInstants().lastOption.map(_.ts)
-      .getOrElse(return None)
-    val (ckpt0, rewindSeen) = syncMarks(clean)
-    val rewindNow = graft.table.MaterializedView.lastRewind(source, includeArchived = true)
-    val rewound = rewindNow > rewindSeen
-    if (ckpt0.contains(head) && !rewound) return None
+    val work = IncrementalSync.plan(source, clean, SyncKeys) match {
+      case IncrementalSync.Idle => return None
+      case w: IncrementalSync.Work => w
+    }
     // a source rewind invalidates published outputs (they may derive from
     // removed commits) but NOT the benchmark index (independent of the
-    // source) — wipe clean only and rebuild from the surviving snapshot
-    val ckpt = if (rewound && ckpt0.isDefined) {
-      if (clean.timeline.completedDataInstants().nonEmpty) clean.truncate()
-      None
-    } else ckpt0
-    val marks = Map(CheckpointKey -> head, RewindSeenKey -> rewindNow)
+    // source) — wipe clean only
+    if (work.recovering) IncrementalSync.wipe(clean)
 
-    val pulledRaw = ckpt match {
-      case None => Readers.snapshot(source, asOf = Some(head))
-      case Some(b) => Readers.incremental(source, b, Some(head))
-    }
-    val dataCols = pulledRaw.columns.filterNot(graft.core.MetaCols.All.contains)
-    val pulled = pulledRaw.select(dataCols.toIndexedSeq.map(col): _*)
+    val pulled = IncrementalSync.pull(source, work)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val tickShingles = pulled
@@ -179,7 +161,7 @@ object DecontaminateService {
           }
         val survivors = pulled.join(contaminated,
           col(idCol) === col("_dc_id"), "left_anti")
-        Some(clean.upsert(survivors, extraMetadata = marks))
+        Some(clean.upsert(survivors, extraMetadata = work.marks))
       } finally tickShingles.unpersist()
     } finally pulled.unpersist()
   }

@@ -5,9 +5,9 @@ import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
 import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{CommitMetadata, TableConfig, TableType}
+import graft.core.{TableConfig, TableType}
 import graft.read.Readers
-import graft.table.{GraftTable, WritePipeline}
+import graft.table.{GraftTable, IncrementalSync, WritePipeline}
 
 /** INCREMENTAL MinHash-LSH deduplication as a table service: maintain a
   * near-dup-free `clean` table from an append-shaped `source` documents
@@ -42,12 +42,12 @@ import graft.table.{GraftTable, WritePipeline}
   * the old defaults) keep appending through their stored partition
   * expressions and are read whole, like new ones.
   *
-  * Each tick: incremental-pull new docs since the checkpoint → candidate
-  * pairs from (a) an in-batch band self-join and (b) a probe of the
-  * persisted band index → signature-similarity verification → losers
-  * dropped, survivors upserted into `clean` with the source checkpoint in
-  * the SAME commit metadata (crash-atomic), and all pulled docs' band
-  * rows + signatures appended to the index.
+  * Each tick ([[graft.table.IncrementalSync]] plans it and owns the
+  * checkpoint marks): pull the new docs → candidate pairs from (a) an
+  * in-batch band self-join and (b) a probe of the persisted band index →
+  * signature-similarity verification → losers dropped, survivors
+  * upserted into `clean` with the marks, and all pulled docs' band rows
+  * + signatures appended to the index.
   *
   * Concurrency and crash safety: the two index appends need nothing from
   * the probe, so they start on their own threads as soon as the tick's
@@ -75,7 +75,7 @@ import graft.table.{GraftTable, WritePipeline}
   */
 object DedupService {
 
-  val CheckpointKey = "graft.dedup.source.checkpoint"
+  val SyncKeys = IncrementalSync.Keys("graft.dedup.source")
   private val ThresholdKey = "graft.dedup.threshold"
   private val NumHashesKey = "graft.dedup.num.hashes"
   private val BandsKey = "graft.dedup.bands"
@@ -111,17 +111,8 @@ object DedupService {
     DedupIndex(bandsT, sigsT)
   }
 
-  /** Newest source rollback/restore instant observed at sync time. */
-  val RewindSeenKey = "graft.dedup.source.rewind.seen"
-
-  def lastCheckpoint(clean: GraftTable): Option[String] = syncMarks(clean)._1
-
-  private def syncMarks(clean: GraftTable): (Option[String], String) =
-    clean.timeline.completedDataInstants().reverse.iterator
-      .map(i => CommitMetadata.fromJson(clean.timeline.readContent(i)).extraMetadata)
-      .collectFirst { case m if m.contains(CheckpointKey) =>
-        (m.get(CheckpointKey), m.getOrElse(RewindSeenKey, "")) }
-      .getOrElse((None, ""))
+  def lastCheckpoint(clean: GraftTable): Option[String] =
+    IncrementalSync.checkpoint(clean, SyncKeys)
 
   /** One tick. Returns the clean-table commit ts, or None when the source
     * has nothing new. Matching parameters come from the INDEX (persisted
@@ -132,36 +123,20 @@ object DedupService {
     val (threshold, numHashes, bands, shingleN) =
       (index.threshold, index.numHashes, index.numBands, index.shingleN)
     val spark = source.spark
-    val head = source.timeline.completedDataInstants().lastOption.map(_.ts)
-      .getOrElse(return None)
-    val (ckpt0, rewindSeen) = syncMarks(clean)
-    val rewindNow = graft.table.MaterializedView.lastRewind(source, includeArchived = true)
-    val rewound = rewindNow > rewindSeen
-    if (ckpt0.contains(head) && !rewound) return None
-    // rollback recovery: ghost postings would mark new docs as dups of
-    // rolled-back docs, and the clean table keeps their outputs — wipe
-    // index + clean once and rebuild from the surviving snapshot. A crash
-    // mid-recovery re-enters here (marks only publish with the rebuild's
-    // clean commit), so the wipe is replay-safe.
-    val ckpt = if (rewound && ckpt0.isDefined) {
-      Seq(clean, index.bands, index.sigs)
-        .filter(_.timeline.completedDataInstants().nonEmpty)
-        .foreach(_.truncate())
-      None
-    } else ckpt0
-    val marks = Map(CheckpointKey -> head, RewindSeenKey -> rewindNow)
+    val work = IncrementalSync.plan(source, clean, SyncKeys) match {
+      case IncrementalSync.Idle => return None
+      case w: IncrementalSync.Work => w
+    }
+    // ghost postings would mark new docs as dups of rolled-back docs, and
+    // the clean table keeps their outputs
+    if (work.recovering) IncrementalSync.wipe(clean, index.bands, index.sigs)
     val rows = numHashes / bands
     // index emptiness BEFORE this tick's appends start: once they publish,
     // the answer would depend on how far they got
     val bandsEmpty = index.bands.timeline.completedDataInstants().isEmpty
     val sigsEmpty = index.sigs.timeline.completedDataInstants().isEmpty
 
-    val pulledRaw = ckpt match {
-      case None => Readers.snapshot(source, asOf = Some(head))
-      case Some(b) => Readers.incremental(source, b, Some(head))
-    }
-    val dataCols = pulledRaw.columns.filterNot(graft.core.MetaCols.All.contains)
-    val pulled = pulledRaw.select(dataCols.toIndexedSeq.map(col): _*)
+    val pulled = IncrementalSync.pull(source, work)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // signatures once per doc (native expression), band rows id-only —
@@ -242,7 +217,7 @@ object DedupService {
 
         val survivors = pulled.join(dups, col(idCol) === col("_dup_id"), "left_anti")
         appends.foreach(awaitOrRethrow)
-        Some(clean.upsert(survivors, extraMetadata = marks))
+        Some(clean.upsert(survivors, extraMetadata = work.marks))
       } finally {
         // a failed probe must not leave an append running past the call
         // (or reading the frames unpersisted below)

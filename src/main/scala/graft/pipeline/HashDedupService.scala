@@ -3,9 +3,9 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{CommitMetadata, TableConfig, TableType}
+import graft.core.{TableConfig, TableType}
 import graft.read.Readers
-import graft.table.GraftTable
+import graft.table.{GraftTable, IncrementalSync}
 
 /** INCREMENTAL near-dup dedup service for 64-BIT HASH operators — the
   * [[DedupService]] (MinHash) mechanics generalized to any row-local
@@ -25,13 +25,13 @@ import graft.table.GraftTable
   *    needs no second lookup table — unlike MinHash signatures, the
   *    verifier is 8 bytes.
   *
-  * Each tick: incremental-pull new rows since the checkpoint → hash
-  * (rows the extractor cannot hash — undecodable media — pass through
-  * unhashed: they are kept and not indexed) → candidates from an
-  * in-batch band self-join plus the pruned index probe → Hamming verify
-  * → losers dropped, survivors upserted into `clean` with the source
-  * checkpoint in the SAME commit metadata (crash-atomic), and the
-  * tick's band rows appended to the index.
+  * Each tick ([[graft.table.IncrementalSync]] plans it and owns the
+  * checkpoint marks): pull the new rows → hash (rows the extractor
+  * cannot hash — undecodable media — pass through unhashed: they are
+  * kept and not indexed) → candidates from an in-batch band self-join
+  * plus the pruned index probe → Hamming verify → losers dropped,
+  * survivors upserted into `clean` with the marks, and the tick's band
+  * rows appended to the index.
   *
   * Crash/replay and rollback-rewind behavior are identical to
   * [[DedupService]] (index appends land first; duplicate band rows are
@@ -45,8 +45,7 @@ import graft.table.GraftTable
   */
 object HashDedupService {
 
-  val CheckpointKey = "graft.hashdedup.source.checkpoint"
-  val RewindSeenKey = "graft.hashdedup.source.rewind.seen"
+  val SyncKeys = IncrementalSync.Keys("graft.hashdedup.source")
   private val BucketPartsKey = "graft.hashdedup.bucket.partitions"
   private val MaxDistKey = "graft.hashdedup.max.dist"
   private val BandsKey = "graft.hashdedup.bands"
@@ -69,14 +68,8 @@ object HashDedupService {
         BandsKey -> bands.toString))))
   }
 
-  def lastCheckpoint(clean: GraftTable): Option[String] = syncMarks(clean)._1
-
-  private def syncMarks(clean: GraftTable): (Option[String], String) =
-    clean.timeline.completedDataInstants().reverse.iterator
-      .map(i => CommitMetadata.fromJson(clean.timeline.readContent(i)).extraMetadata)
-      .collectFirst { case m if m.contains(CheckpointKey) =>
-        (m.get(CheckpointKey), m.getOrElse(RewindSeenKey, "")) }
-      .getOrElse((None, ""))
+  def lastCheckpoint(clean: GraftTable): Option[String] =
+    IncrementalSync.checkpoint(clean, SyncKeys)
 
   /** One tick. `hashOf` maps a frame of source rows to (idCol, hash:
     * LONG), at most one row per input row; inputs it drops are kept
@@ -86,33 +79,17 @@ object HashDedupService {
     */
   def sync(source: GraftTable, clean: GraftTable, index: HashIndex,
       hashOf: DataFrame => DataFrame, idCol: String = "doc_id"): Option[String] = {
-    val spark = source.spark
-    val head = source.timeline.completedDataInstants().lastOption.map(_.ts)
-      .getOrElse(return None)
-    val (ckpt0, rewindSeen) = syncMarks(clean)
-    val rewindNow = graft.table.MaterializedView.lastRewind(source, includeArchived = true)
-    val rewound = rewindNow > rewindSeen
-    if (ckpt0.contains(head) && !rewound) return None
-    val ckpt = if (rewound && ckpt0.isDefined) {
-      // ghost postings from rolled-back docs would veto live arrivals —
-      // wipe once and rebuild from the surviving snapshot (replay-safe:
-      // marks only publish with the rebuild's clean commit)
-      Seq(clean, index.bands)
-        .filter(_.timeline.completedDataInstants().nonEmpty)
-        .foreach(_.truncate())
-      None
-    } else ckpt0
-    val marks = Map(CheckpointKey -> head, RewindSeenKey -> rewindNow)
+    val work = IncrementalSync.plan(source, clean, SyncKeys) match {
+      case IncrementalSync.Idle => return None
+      case w: IncrementalSync.Work => w
+    }
+    // ghost postings from rolled-back docs would veto live arrivals
+    if (work.recovering) IncrementalSync.wipe(clean, index.bands)
     val bands = index.numBands
     val width = 64 / bands
     val mask = if (width == 64) -1L else (1L << width) - 1
 
-    val pulledRaw = ckpt match {
-      case None => Readers.snapshot(source, asOf = Some(head))
-      case Some(b) => Readers.incremental(source, b, Some(head))
-    }
-    val dataCols = pulledRaw.columns.filterNot(graft.core.MetaCols.All.contains)
-    val pulled = pulledRaw.select(dataCols.toIndexedSeq.map(col): _*)
+    val pulled = IncrementalSync.pull(source, work)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val hashes = hashOf(pulled)
@@ -172,7 +149,7 @@ object HashDedupService {
         index.bands.insert(bandRows.select(
           col("band"), col("bucket"), col("_h_id").as("doc_id"),
           col("_h_hash").as("hash")))
-        Some(clean.upsert(survivors, extraMetadata = marks))
+        Some(clean.upsert(survivors, extraMetadata = work.marks))
       } finally bandRows.unpersist()
     } finally pulled.unpersist()
   }

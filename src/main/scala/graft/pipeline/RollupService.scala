@@ -3,9 +3,8 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.CommitMetadata
 import graft.read.Readers
-import graft.table.GraftTable
+import graft.table.{GraftTable, IncrementalSync}
 
 /** Incremental materialized-aggregate maintenance: keep a ROLLUP graft
   * table (`GROUP BY groupCols` + arbitrary aggregates) in sync with a
@@ -21,8 +20,8 @@ import graft.table.GraftTable
   *  1. pulls the CDC change feed since the last tick's checkpoint
   *     (before AND after images — a row UPDATEd out of a group must
   *     retrigger the group it LEFT, which the after-image alone would
-  *     miss; the checkpoint rides in the rollup table's commit metadata,
-  *     so data + checkpoint publish atomically);
+  *     miss; [[graft.table.IncrementalSync]] plans the tick and owns the
+  *     checkpoint marks);
   *  2. derives the affected group keys (bounded by groups-touched-per-
   *     tick, not table size — collected only onto the plan as an isin /
   *     join filter, the same bounded-driver contract as the services);
@@ -41,64 +40,49 @@ import graft.table.GraftTable
   */
 object RollupService {
 
-  val CheckpointKey = "graft.rollup.source.checkpoint"
-  /** Newest source rollback/restore instant observed at sync time. */
-  val RewindSeenKey = "graft.rollup.source.rewind.seen"
+  val SyncKeys = IncrementalSync.Keys("graft.rollup.source")
 
-  def lastCheckpoint(rollup: GraftTable): Option[String] = syncMarks(rollup)._1
-
-  private def syncMarks(rollup: GraftTable): (Option[String], String) =
-    rollup.timeline.completedDataInstants().reverse.iterator
-      .map(i => CommitMetadata.fromJson(rollup.timeline.readContent(i)).extraMetadata)
-      .collectFirst { case m if m.contains(CheckpointKey) =>
-        (m.get(CheckpointKey), m.getOrElse(RewindSeenKey, "")) }
-      .getOrElse((None, ""))
+  def lastCheckpoint(rollup: GraftTable): Option[String] =
+    IncrementalSync.checkpoint(rollup, SyncKeys)
 
   /** One tick. Returns the rollup commit ts, or None when the source has
     * nothing new since the checkpoint.
     */
   def sync(source: GraftTable, rollup: GraftTable, groupCols: Seq[String],
       aggs: Seq[Column]): Option[String] = {
-    val head = source.timeline.completedDataInstants().lastOption.map(_.ts)
-      .getOrElse(return None)
-    val (ckpt, rewindSeen) = syncMarks(rollup)
-    // a rollback/restore since the last tick may have removed commits
-    // whose groups this service never retriggers (the change feed replays
-    // only SURVIVING commits) — recompute everything once instead
-    val rewindNow = graft.table.MaterializedView.lastRewind(source, includeArchived = true)
-    val rewound = rewindNow > rewindSeen
-    if (ckpt.contains(head) && !rewound) return None
-    val marks = Map(CheckpointKey -> head, RewindSeenKey -> rewindNow)
-
     val gcols = groupCols.map(col)
     def aggregate(df: DataFrame): DataFrame =
       df.groupBy(gcols: _*).agg(aggs.head, aggs.tail: _*)
+    // upserts for the `fresh` groups + tombstones for the `gone` keys
+    def withTombstones(fresh: DataFrame, gone: DataFrame): DataFrame = {
+      val deletes = fresh.columns.filterNot(groupCols.contains).foldLeft(gone)((df, c) =>
+        df.withColumn(c, lit(null).cast(fresh.schema(c).dataType)))
+      fresh.withColumn("_op", lit("U")).unionByName(deletes.withColumn("_op", lit("D")))
+    }
 
-    ckpt match {
-      case None =>
+    IncrementalSync.plan(source, rollup, SyncKeys) match {
+      case IncrementalSync.Idle => None
+      case IncrementalSync.Rebuild(head, false, marks) =>
         // first tick: full build, plain upsert (nothing can vanish)
         val full = aggregate(Readers.snapshot(source, asOf = Some(head)))
           .withColumn("_op", lit("U"))
         Some(rollup.applyCdc(full, opCol = "_op", extraMetadata = marks))
-      case Some(_) if rewound =>
-        // rollback recovery: full recompute + tombstones for rollup
-        // groups the fresh state no longer has, in one commit
+      case IncrementalSync.Rebuild(head, true, marks) =>
+        // recovery: removed commits' groups are never retriggered by the
+        // change feed — full recompute + tombstones for rollup groups the
+        // fresh state no longer has, in one commit
         val full = aggregate(Readers.snapshot(source, asOf = Some(head)))
-        val oldKeys = Readers.snapshot(rollup).select(gcols: _*)
-        val gone = oldKeys.join(full, groupCols, "left_anti")
-        val aggNames = full.columns.filterNot(groupCols.contains)
-        val deletes = aggNames.foldLeft(gone)((df, c) =>
-          df.withColumn(c, lit(null).cast(full.schema(c).dataType)))
-        val batch = full.withColumn("_op", lit("U"))
-          .unionByName(deletes.withColumn("_op", lit("D")))
+        val gone = Readers.snapshot(rollup).select(gcols: _*)
+          .join(full, groupCols, "left_anti")
+        val batch = withTombstones(full, gone)
         Some(rollup.applyCdc(batch, opCol = "_op", extraMetadata = marks))
-      case Some(begin) =>
+      case IncrementalSync.Delta(begin, head, marks, _) =>
         // both change images: a row that LEFT a group retriggers it too
         val touched = Readers.incrementalChanges(source, begin, Some(head))
           .select(gcols: _*).distinct()
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          // a head that changed no logical rows (clustering, compaction)
+          // a logical commit that changed no rows (a no-op delete, say)
           // yields no groups: skip the commit, the next tick re-pulls the
           // same (cheap, empty) range
           if (touched.isEmpty) return None
@@ -107,12 +91,8 @@ object RollupService {
           val recomputed = aggregate(scoped)
           // groups touched by the feed but absent from the recompute lost
           // their last source row → tombstone them out of the rollup
-          val gone = touched.join(recomputed, groupCols, "left_anti")
-          val aggNames = recomputed.columns.filterNot(groupCols.contains)
-          val deletes = aggNames.foldLeft(gone)((df, c) =>
-            df.withColumn(c, lit(null).cast(recomputed.schema(c).dataType)))
-          val batch = recomputed.withColumn("_op", lit("U"))
-            .unionByName(deletes.withColumn("_op", lit("D")))
+          val batch = withTombstones(recomputed,
+            touched.join(recomputed, groupCols, "left_anti"))
           Some(rollup.applyCdc(batch, opCol = "_op", extraMetadata = marks))
         } finally touched.unpersist()
     }

@@ -2,9 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.functions._
 
-import graft.core.CommitMetadata
 import graft.read.Readers
-import graft.table.GraftTable
+import graft.table.{GraftTable, IncrementalSync}
 
 /** Incremental sessionization as a table service: maintain a SESSIONS
   * graft table from a keyed EVENTS graft table, recomputing only what
@@ -17,9 +16,8 @@ import graft.table.GraftTable
   * partitioned by a hash bucket of the entity column and each tick:
   *
   *  1. incrementally pulls events committed since the last tick's
-  *     checkpoint (stored in the sessions table's commit metadata, so
-  *     data + checkpoint publish atomically — a crash between them is
-  *     impossible);
+  *     checkpoint ([[graft.table.IncrementalSync]] plans the tick and
+  *     owns the checkpoint marks);
   *  2. derives the affected entity BUCKETS (tiny driver set, bounded by
   *     `buckets`);
   *  3. recomputes sessions for those buckets only, reading the events
@@ -38,18 +36,10 @@ import graft.table.GraftTable
   */
 object SessionService {
 
-  val CheckpointKey = "graft.sessions.events.checkpoint"
-  /** Newest events-table rollback/restore instant observed at sync time. */
-  val RewindSeenKey = "graft.sessions.events.rewind.seen"
+  val SyncKeys = IncrementalSync.Keys("graft.sessions.events")
 
-  def lastCheckpoint(sessions: GraftTable): Option[String] = syncMarks(sessions)._1
-
-  private def syncMarks(sessions: GraftTable): (Option[String], String) =
-    sessions.timeline.completedDataInstants().reverse.iterator
-      .map(i => CommitMetadata.fromJson(sessions.timeline.readContent(i)).extraMetadata)
-      .collectFirst { case m if m.contains(CheckpointKey) =>
-        (m.get(CheckpointKey), m.getOrElse(RewindSeenKey, "")) }
-      .getOrElse((None, ""))
+  def lastCheckpoint(sessions: GraftTable): Option[String] =
+    IncrementalSync.checkpoint(sessions, SyncKeys)
 
   /** One tick. Returns the sessions commit ts, or None when the events
     * table has nothing new. `buckets` must match the sessions table's
@@ -59,43 +49,31 @@ object SessionService {
       userCol: String = "user_id", tsCol: String = "ts", valueCol: String = "value",
       maxGapSeconds: Long = 1800, tieBreak: Option[String] = Some("event_id"),
       buckets: Int = 64): Option[String] = {
-    val head = events.timeline.completedDataInstants().lastOption.map(_.ts)
-      .getOrElse(return None)
-    val (ckpt, rewindSeen) = syncMarks(sessions)
-    // an events-table rollback/restore removes rows whose buckets the
-    // incremental pull would never surface again — recompute every bucket
-    // once (incremental-pull deltas only replay SURVIVING commits)
-    val rewindNow = graft.table.MaterializedView.lastRewind(events, includeArchived = true)
-    val rewound = rewindNow > rewindSeen
-    if (ckpt.contains(head) && !rewound) return None
-    val marks = Map(CheckpointKey -> head, RewindSeenKey -> rewindNow)
-
-    val bucketOf = pmod(col(userCol).cast("long"), lit(buckets.toLong))
-    val affected: Option[Seq[String]] = ckpt match {
-      case None => None // first tick: every bucket
-      case Some(_) if rewound => None // rollback recovery: every bucket
-      case Some(begin) =>
-        Some(Readers.incremental(events, begin, Some(head))
-          .select(bucketOf.cast("string")).distinct()
-          .collect().map(_.getString(0)).toSeq)
+    val work = IncrementalSync.plan(events, sessions, SyncKeys) match {
+      case IncrementalSync.Idle => return None
+      case w: IncrementalSync.Work => w
     }
-    // recompute reads the events snapshot pruned to the affected buckets
-    // (partition pruning when the events table is bucketed the same way;
-    // a filter otherwise)
-    val scope = affected match {
-      case None => Readers.snapshot(events, asOf = Some(head))
-      case Some(bs) =>
-        Readers.snapshot(events, asOf = Some(head))
-          .filter(bucketOf.cast("string").isin(bs: _*))
+    val bucketOf = pmod(col(userCol).cast("long"), lit(buckets.toLong))
+    // a rebuild recomputes every bucket; a delta reads the events snapshot
+    // pruned to the buckets its window touched (partition pruning when
+    // the events table is bucketed the same way; a filter otherwise)
+    val snapshot = Readers.snapshot(events, asOf = Some(work.head))
+    val scope = work match {
+      case IncrementalSync.Delta(begin, head, _, _) =>
+        val affected = Readers.incremental(events, begin, Some(head))
+          .select(bucketOf.cast("string")).distinct()
+          .collect().map(_.getString(0)).toSeq
+        snapshot.filter(bucketOf.cast("string").isin(affected: _*))
+      case _ => snapshot
     }
     val recomputed = Sessions.sessionStats(scope, userCol, tsCol, valueCol,
       maxGapSeconds, tieBreak)
     // recovery replaces the WHOLE table: a bucket whose every event rolled
     // back yields no recomputed rows, so partition-scoped overwrite would
     // leave its stale sessions behind
-    if (rewound && ckpt.isDefined)
-      Some(sessions.insertOverwriteTable(recomputed, extraMetadata = marks))
+    if (work.recovering)
+      Some(sessions.insertOverwriteTable(recomputed, extraMetadata = work.marks))
     else
-      Some(sessions.insertOverwrite(recomputed, extraMetadata = marks))
+      Some(sessions.insertOverwrite(recomputed, extraMetadata = work.marks))
   }
 }

@@ -4,9 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{CommitMetadata, ConfigKeys, TableConfig, TableType}
+import graft.core.{ConfigKeys, TableConfig, TableType}
 import graft.read.Readers
-import graft.table.GraftTable
+import graft.table.{GraftTable, IncrementalSync}
 
 /** INCREMENTAL exact-substring span dedup as a table service — the 100 TB
   * form of [[Dedup.exactSpanDedup]]: maintain a boilerplate-cut `clean`
@@ -37,17 +37,19 @@ import graft.table.GraftTable
   * owner≠current is the cut condition, so nothing self-cuts; duplicated
   * windows cut exactly as the original run did.
   *
-  * Each tick: incremental-pull new docs since the checkpoint → window
-  * fingerprints (row-local) → duplicated starts from (a) an in-tick
-  * fingerprint count and (b) the pruned index probe with owner≠current →
-  * row-local span surgery → cleaned docs upserted into `clean` with the
-  * source checkpoint in the SAME commit metadata (crash-atomic); the
+  * Each tick ([[graft.table.IncrementalSync]] plans it and owns the
+  * checkpoint marks): pull the new docs → window fingerprints
+  * (row-local) → duplicated starts from (a) an in-tick fingerprint count
+  * and (b) the pruned index probe with owner≠current → row-local span
+  * surgery → cleaned docs upserted into `clean` with the marks; the
   * tick's fingerprints upsert into the index FIRST (replay-safe, see
-  * above).
+  * above). A source rollback wipes index + clean once and rebuilds:
+  * fingerprints owned by rolled-back docs would cut spans out of new
+  * docs forever.
   */
 object SpanDedupService {
 
-  val CheckpointKey = "graft.spans.source.checkpoint"
+  val SyncKeys = IncrementalSync.Keys("graft.spans.source")
   private val PartsKey = "graft.spans.fp.partitions"
   private val WindowKey = "graft.spans.window.k"
 
@@ -67,17 +69,8 @@ object SpanDedupService {
         // highest neg_id wins = LOWEST doc id stays the owner forever
         ConfigKeys.Payload -> "EVENT_TIME")))
 
-  /** Newest source rollback/restore instant observed at sync time. */
-  val RewindSeenKey = "graft.spans.source.rewind.seen"
-
-  def lastCheckpoint(clean: GraftTable): Option[String] = syncMarks(clean)._1
-
-  private def syncMarks(clean: GraftTable): (Option[String], String) =
-    clean.timeline.completedDataInstants().reverse.iterator
-      .map(i => CommitMetadata.fromJson(clean.timeline.readContent(i)).extraMetadata)
-      .collectFirst { case m if m.contains(CheckpointKey) =>
-        (m.get(CheckpointKey), m.getOrElse(RewindSeenKey, "")) }
-      .getOrElse((None, ""))
+  def lastCheckpoint(clean: GraftTable): Option[String] =
+    IncrementalSync.checkpoint(clean, SyncKeys)
 
   /** One tick. Returns the clean-table commit ts, or None when the
     * source has nothing new.
@@ -86,30 +79,15 @@ object SpanDedupService {
       textCol: String = "text", idCol: String = "doc_id"): Option[String] = {
     val k = index.cfg.propLong(WindowKey, 20L).toInt
     val fpParts = index.cfg.propLong(PartsKey, 64L).toInt
-    val head = source.timeline.completedDataInstants().lastOption.map(_.ts)
-      .getOrElse(return None)
-    val (ckpt0, rewindSeen) = syncMarks(clean)
-    val rewindNow = graft.table.MaterializedView.lastRewind(source, includeArchived = true)
-    val rewound = rewindNow > rewindSeen
-    if (ckpt0.contains(head) && !rewound) return None
-    // rollback recovery: fingerprints owned by rolled-back docs would cut
-    // spans out of new docs forever — wipe index + clean once and rebuild
-    // from the surviving snapshot (replay-safe: marks publish with the
-    // rebuild's clean commit)
-    val ckpt = if (rewound && ckpt0.isDefined) {
-      Seq(clean, index)
-        .filter(_.timeline.completedDataInstants().nonEmpty)
-        .foreach(_.truncate())
-      None
-    } else ckpt0
-    val marks = Map(CheckpointKey -> head, RewindSeenKey -> rewindNow)
-
-    val pulledRaw = ckpt match {
-      case None => Readers.snapshot(source, asOf = Some(head))
-      case Some(b) => Readers.incremental(source, b, Some(head))
+    val work = IncrementalSync.plan(source, clean, SyncKeys) match {
+      case IncrementalSync.Idle => return None
+      case w: IncrementalSync.Work => w
     }
-    val dataCols = pulledRaw.columns.filterNot(graft.core.MetaCols.All.contains)
-    val toks = pulledRaw.select(dataCols.toIndexedSeq.map(col): _*)
+    if (work.recovering) IncrementalSync.wipe(clean, index)
+
+    val pulled = IncrementalSync.pull(source, work)
+    val dataCols = pulled.columns
+    val toks = pulled
       .withColumn("_sd_ts", split(col(textCol), " "))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -153,7 +131,7 @@ object SpanDedupService {
           .groupBy(col("_sd_fp").as("fp"))
           .agg(min(col(idCol)).as("owner_id"))
           .withColumn("neg_id", -col("owner_id")))
-        Some(clean.upsert(cleaned, extraMetadata = marks))
+        Some(clean.upsert(cleaned, extraMetadata = work.marks))
       } finally wins.unpersist()
     } finally toks.unpersist()
   }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.spark.GraftRelation
-import graft.table.{GraftTable, MaterializedView}
+import graft.table.{GraftTable, IncrementalSync, MaterializedView}
 import graft.table.MaterializedView.ViewAgg
 
 /** SQL statements Spark has no grammar for — materialized views — parsed
@@ -436,10 +436,7 @@ final case class ShowMaterializedViewsCommand(name: String) extends LeafRunnable
     val t = GraftSqlParser.tableOf(spark, name)
     MaterializedView.registered(t).map { p =>
       val v = GraftTable.load(spark, p)
-      val ckpt = v.timeline.completedDataInstants().reverse.iterator
-        .map(i => graft.core.CommitMetadata.fromJson(v.timeline.readContent(i)))
-        .flatMap(_.extraMetadata.get(MaterializedView.CheckpointKey))
-        .take(1).toSeq.headOption.getOrElse("")
+      val ckpt = IncrementalSync.checkpoint(v, MaterializedView.SyncKeys).getOrElse("")
       Row(p, ckpt, MaterializedView.isFresh(v, t))
     }
   }

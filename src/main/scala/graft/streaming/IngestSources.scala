@@ -6,8 +6,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-import graft.core.CommitMetadata
-import graft.table.GraftTable
+import graft.table.{GraftTable, IncrementalSync}
 
 /** Batch ingest sources — the DeltaStreamer source family
   * (reference hudi-utilities/.../sources: {Json,Csv,Parquet}DFSSource with
@@ -176,10 +175,7 @@ object IngestJob {
   val CheckpointKey: String = Streaming.CheckpointKey
 
   def lastCheckpoint(dst: GraftTable): Option[String] =
-    dst.timeline.completedDataInstants().reverse.iterator
-      .map(i => CommitMetadata.fromJson(dst.timeline.readContent(i)))
-      .flatMap(_.extraMetadata.get(CheckpointKey))
-      .take(1).toSeq.headOption
+    IncrementalSync.marks(dst, CheckpointKey).get(CheckpointKey)
 
   /** One ingest tick: fetch-new → transform → upsert. Returns the commit
     * ts, or None when the source had nothing new.

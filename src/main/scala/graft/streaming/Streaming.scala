@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger
 import org.apache.spark.sql.Row
 
 import graft.core._
-import graft.table.GraftTable
+import graft.table.{GraftTable, IncrementalSync}
 import graft.read.Readers
 
 /** Structured-Streaming integration.
@@ -94,10 +94,7 @@ object Streaming {
   }
 
   def lastCommittedBatchId(t: GraftTable): Option[Long] =
-    t.timeline.completedDataInstants().reverse.iterator
-      .map(i => CommitMetadata.fromJson(t.timeline.readContent(i)))
-      .flatMap(_.extraMetadata.get(BatchIdKey))
-      .take(1).toSeq.headOption.map(_.toLong)
+    IncrementalSync.marks(t, BatchIdKey).get(BatchIdKey).map(_.toLong)
 
   /** A poll-based incremental source: returns (changed records, new offset)
     * for everything committed after `offset` (exclusive). Feed the offset
@@ -176,10 +173,7 @@ object Streaming {
 
   def syncOnce(src: GraftTable, dst: GraftTable,
       transform: DataFrame => DataFrame = identity): Option[String] = {
-    val lastCkpt = dst.timeline.completedDataInstants().reverse.iterator
-      .map(i => CommitMetadata.fromJson(dst.timeline.readContent(i)))
-      .flatMap(_.extraMetadata.get(CheckpointKey))
-      .take(1).toSeq.headOption
+    val lastCkpt = IngestJob.lastCheckpoint(dst)
     val (batch, newOffset) = pollIncremental(src, lastCkpt)
     newOffset match {
       case Some(off) if !lastCkpt.contains(off) =>

@@ -9,7 +9,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{CommitMetadata, MetaCols, Storage, TableConfig, TableType}
+import graft.core.{MetaCols, Storage, TableConfig, TableType}
 import graft.core.Storage.PathOps
 import graft.read.Readers
 
@@ -44,19 +44,14 @@ import graft.read.Readers
   *    column-stats/dictionary file skipping prunes the scan when the
   *    group correlates with the layout.
   *
-  * Crash safety: the source checkpoint instant is recorded in the SAME
-  * view commit as the folded state (the DedupService discipline), so a
-  * replayed tick either sees the advanced checkpoint (no-op) or re-pulls
-  * the identical window against unchanged state — effectively-once
-  * without multi-table transactions. Groups whose maintained row count
-  * reaches zero are tombstoned through the delete-marker upsert, one
-  * commit for the whole fold.
+  * Crash safety: [[IncrementalSync]] plans each tick and owns the
+  * checkpoint marks, which publish in the SAME view commit as the folded
+  * state. Groups whose maintained row count reaches zero are tombstoned
+  * through the delete-marker upsert, one commit for the whole fold.
   */
 object MaterializedView {
 
-  val CheckpointKey = "graft.view.source.checkpoint"
-  /** Newest source rollback/restore instant observed at sync time. */
-  val RewindSeenKey = "graft.view.source.rewind.seen"
+  val SyncKeys = IncrementalSync.Keys("graft.view.source")
   /** Per-dimension head instants observed at sync (`alias=ts` ';'-joined). */
   val DimHeadsKey = "graft.view.dim.heads"
   /** Which fold the sync's commit ran: "delta" or "rebuild" (observable
@@ -149,15 +144,15 @@ object MaterializedView {
       val Array(a, pa, c) = p.split(":", 3); (dec(a), dec(pa), dec(c))
     }
 
+  /** The fact table's alias in the view's expressions ("f" by default). */
+  private[graft] def factAliasOf(view: GraftTable): String =
+    Option(view.cfg.prop(FactAliasKey, null)).map(dec).getOrElse("f")
+
   /** Fact frame (aliased `f`) inner-joined to every dim's CURRENT
     * snapshot under its alias. Dims are lookup-sized by star-schema
     * convention — Spark broadcasts them under the join threshold, and
     * AQE handles the rest.
     */
-  /** The fact table's alias in the view's expressions ("f" by default). */
-  private[graft] def factAliasOf(view: GraftTable): String =
-    Option(view.cfg.prop(FactAliasKey, null)).map(dec).getOrElse("f")
-
   private def joinDims(view: GraftTable, df: DataFrame): DataFrame =
     dimsOf(view).foldLeft(df.alias(factAliasOf(view))) {
       case (acc, (al, p, cond)) =>
@@ -272,40 +267,6 @@ object MaterializedView {
       }
     } :+ sum(col("_w").cast("long")).as(RowsCol)
 
-  /** The newest commit's sync marks: `(checkpoint, rewind-seen)` — the
-    * source data instant the state folds through, and the newest source
-    * rollback/restore instant the sync observed (both written by the same
-    * commit, so a view rollback rewinds them together).
-    */
-  private def syncMarks(view: GraftTable): (Option[String], String, String) =
-    view.timeline.completedDataInstants().reverse.iterator
-      .map(i => CommitMetadata.fromJson(view.timeline.readContent(i)).extraMetadata)
-      .collectFirst { case m if m.contains(CheckpointKey) =>
-        (m.get(CheckpointKey), m.getOrElse(RewindSeenKey, ""),
-          m.getOrElse(DimHeadsKey, "")) }
-      .getOrElse((None, "", ""))
-
-  private def lastCheckpoint(view: GraftTable): Option[String] = syncMarks(view)._1
-
-  /** Newest rollback/restore instant ts on the source ("" when none).
-    * Archived instants only matter for SYNC's staleness decision: by the
-    * time a rewind archives, either newer data instants made the view
-    * data-stale anyway, or a sync already ran (and recorded the rewind)
-    * — so the hot [[isFresh]] path can stay active-timeline-only.
-    */
-  private[graft] def lastRewind(source: GraftTable, includeArchived: Boolean): String = {
-    def isRewind(a: String) =
-      a == graft.core.Action.Rollback || a == graft.core.Action.Restore
-    val active = source.timeline.completedInstants()
-      .filter(i => isRewind(i.action)).map(_.ts)
-    val archived =
-      if (includeArchived)
-        source.timeline.archivedInstants()
-          .collect { case (i, _) if isRewind(i.action) => i.ts }
-      else Seq.empty
-    (active ++ archived).maxOption.getOrElse("")
-  }
-
   /** True when the view's checkpoint covers every completed data instant
     * on the source AND no rollback/restore landed since the last sync —
     * the gate [[graft.sql.MvRewriteRule]] requires before answering a
@@ -314,15 +275,18 @@ object MaterializedView {
     * stale even though the logical content is unchanged — the query then
     * simply answers from the source, which is always correct.
     */
-  def isFresh(view: GraftTable, source: GraftTable): Boolean =
-    syncMarks(view) match {
-      case (Some(c), seen, dimsSeen) =>
+  def isFresh(view: GraftTable, source: GraftTable): Boolean = {
+    val marks = IncrementalSync.marks(view, SyncKeys.checkpoint)
+    marks.get(SyncKeys.checkpoint) match {
+      case Some(c) =>
         !source.timeline.completedDataInstants().exists(_.ts > c) &&
-          lastRewind(source, includeArchived = false) <= seen &&
+          IncrementalSync.lastRewind(source, includeArchived = false) <=
+            marks.getOrElse(SyncKeys.rewindSeen, "") &&
           // star views: any dim write since the sync makes the state stale
-          (dimsOf(view).isEmpty || dimHeads(view) == dimsSeen)
-      case _ => source.timeline.completedDataInstants().isEmpty
+          (dimsOf(view).isEmpty || dimHeads(view) == marks.getOrElse(DimHeadsKey, ""))
+      case None => source.timeline.completedDataInstants().isEmpty
     }
+  }
 
   /** Fold the source's changes since the last sync into the view.
     * Returns the view commit instant, or None when already up to date.
@@ -340,19 +304,21 @@ object MaterializedView {
       graft.core.TableLock.withLock(view.basePath) {
     val groups = groupsOf(view)
     val aggs = aggsOf(view)
-    val head = source.timeline.lastCompleted().map(_.ts)
-      .getOrElse(return None) // empty source: nothing to fold yet
-    val (ckpt, rewindSeen, dimsSeen) = syncMarks(view)
-    // set by the delta path when it materializes the folded state;
-    // released after the view upsert consumed it
-    var toRelease: Option[DataFrame] = None
-    val rewindNow = lastRewind(source, includeArchived = true)
-    val rewound = rewindNow > rewindSeen
+    val stored = IncrementalSync.marks(view, SyncKeys.checkpoint)
     // star views: a dim write since the last sync invalidates the folded
     // state (old change images would join to NEW dim rows) — rebuild once
     val dimHeadsNow = dimHeads(view)
-    val dimsChanged = dimsOf(view).nonEmpty && dimHeadsNow != dimsSeen
-    if (ckpt.contains(head) && !rewound && !dimsChanged) return None
+    val dimsChanged = dimsOf(view).nonEmpty && dimHeadsNow != stored.getOrElse(DimHeadsKey, "")
+    // a source rewind needs no view-specific recovery: the rebuild's
+    // tombstones retract the groups only removed commits fed
+    val work = IncrementalSync.plan(source, stored, SyncKeys, forceRebuild = dimsChanged) match {
+      case IncrementalSync.Idle => return None
+      case w: IncrementalSync.Work => w
+    }
+    val head = work.head
+    // set by the delta path when it materializes the folded state;
+    // released after the view upsert consumed it
+    var toRelease: Option[DataFrame] = None
     val groupCols = groups.map { case (n, e) => expr(e).as(n) }
     val names = groups.map(_._1)
     // reads pin to `head` (time travel), never "latest": a writer
@@ -365,7 +331,7 @@ object MaterializedView {
       joinDims(view, Readers.timeTravel(source, head).drop(MetaCols.All: _*)))(
       (df, w) => df.where(expr(w)))
     // full re-aggregate + tombstones for groups the fresh state no longer
-    // has (first sync, and the rollback-recovery path)
+    // has (every Rebuild)
     def rebuild(): DataFrame = {
       val fa = fullAggs(aggs)
       val full = sourceAt.groupBy(groupCols: _*).agg(fa.head, fa.tail: _*)
@@ -387,30 +353,9 @@ object MaterializedView {
     // join, analysis of the tombstone column) must still release the cache
     var foldKind = "rebuild"
     try {
-    val state = ckpt match {
-      case None => rebuild()
-      case Some(_) if dimsChanged => rebuild()
-      case Some(_) if rewound =>
-        // a rollback/restore since the last sync may have removed commits
-        // whose folds are baked into the view — no delta window can
-        // express the un-fold, so recover with a full re-aggregate
-        // (vanished groups tombstone through the same commit). Without
-        // this the view keeps rolled-back rows FOREVER: the (begin, head]
-        // window would replay only surviving commits.
-        rebuild()
-      case Some(begin) =>
-        // no LOGICAL changes inside the window -> skip the read entirely.
-        // Layout rewrites (compaction, clustering, bucket split/merge/
-        // rescale) are data instants but project zero change images, so a
-        // window holding only them must not commit an empty fold either —
-        // timeline + commit-metadata check, zero Spark jobs
-        val window = source.timeline.completedDataInstants()
-          .filter(i => i.ts > begin && i.ts <= head)
-          .map(i => i -> graft.core.CommitMetadata.fromJson(
-            source.timeline.readContent(i)))
-        val logical = window.filterNot { case (i, md) =>
-          Readers.isLayoutRewrite(i, md) }
-        if (logical.isEmpty) return None
+    val state = work match {
+      case _: IncrementalSync.Rebuild => rebuild()
+      case IncrementalSync.Delta(begin, _, _, logical) =>
         // Adaptive fold (metadata-only decision): the CDC diff reads the
         // window's NEW files AND the prior versions they replace, so once
         // the window's volume rivals the live table it costs MORE than a
@@ -418,7 +363,7 @@ object MaterializedView {
         // repair machinery entirely). Small ticks — the 100-TB steady
         // state — keep the incremental path.
         val windowBytes = logical.iterator
-          .map(_._2.writeStats.map(_.fileSizeInBytes).sum).sum
+          .map(_.writeStats.map(_.fileSizeInBytes).sum).sum
         val slices = source.view.fileSlices(None)
         val liveBytes = slices.flatMap(_.baseFile).map(_.sizeBytes).sum +
           slices.map(_.totalDeltaBytes).sum
@@ -524,8 +469,7 @@ object MaterializedView {
         folded
         }
     }
-    val marks = Map(CheckpointKey -> head, RewindSeenKey -> rewindNow,
-      FoldKindKey -> foldKind) ++
+    val marks = work.marks + (FoldKindKey -> foldKind) ++
       (if (dimsOf(view).isEmpty) Map.empty
        else Map(DimHeadsKey -> dimHeadsNow))
     if (view.timeline.completedDataInstants().isEmpty)

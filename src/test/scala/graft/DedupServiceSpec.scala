@@ -319,4 +319,27 @@ class DedupServiceSpec extends AnyFunSuite {
     assert(ids(Readers.snapshot(cleanT)).sameElements(want), "replayed tick != from-scratch")
     assert(DedupService.sync(srcT, cleanT, idx).isEmpty)
   }
+
+  test("a source window holding only a clustering publishes nothing; the next tick equals from-scratch") {
+    val root = tmpDir("dedup_svc_cluster").toString
+    val srcT = GraftTable.create(spark, s"$root/source", docsCfg("src"))
+    val cleanT = GraftTable.create(spark, s"$root/clean", docsCfg("clean"))
+    val idx = DedupService.openIndex(spark, s"$root/index", threshold = 0.6)
+    val base = docs
+    val mx = base.agg(max("doc_id")).head.getLong(0)
+    srcT.bulkInsert(base.filter(col("doc_id") <= mx / 3))
+    srcT.bulkInsert(base.filter(col("doc_id") > mx / 3 && col("doc_id") <= 2 * mx / 3))
+    assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+    def commits = Seq(cleanT, idx.bands, idx.sigs).map(_.timeline.completedDataInstants().size)
+    val before = commits
+    // clustering rewrites the source's files without changing a record:
+    // no clean commit, and no index append either
+    assert(graft.table.Services.cluster(srcT).nonEmpty)
+    assert(DedupService.sync(srcT, cleanT, idx).isEmpty)
+    assert(commits === before)
+    srcT.bulkInsert(base.filter(col("doc_id") > 2 * mx / 3))
+    assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+    val want = ids(Dedup.minhashDedup(base, threshold = 0.6))
+    assert(ids(Readers.snapshot(cleanT)).sameElements(want), "incremental != from-scratch")
+  }
 }

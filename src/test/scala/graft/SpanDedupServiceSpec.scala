@@ -81,4 +81,25 @@ class SpanDedupServiceSpec extends AnyFunSuite {
     assert(SpanDedupService.sync(src, clean, idx).isEmpty)
     assert(clean.timeline.completedDataInstants().size === n)
   }
+
+  test("source rollback wipes ghost fingerprints and rebuilds") {
+    val (src, clean, idx) = mk(tmpDir("span_svc_rb").toString)
+    src.bulkInsert(Seq((1L, "a b c d e f"), (2L, "g h i j k")).toDF("doc_id", "text"))
+    SpanDedupService.sync(src, clean, idx)
+    // tick 2 introduces a passage, then rolls back — without the rewind
+    // check its fingerprints would keep cutting the passage out of every
+    // later doc
+    val c2 = src.bulkInsert(Seq((3L, "x y p q r s z")).toDF("doc_id", "text"))
+    SpanDedupService.sync(src, clean, idx)
+    graft.table.Services.rollback(src, c2)
+    assert(SpanDedupService.sync(src, clean, idx).nonEmpty)
+    assert(texts(clean) === Map(1L -> "a b c d e f", 2L -> "g h i j k"),
+      "rolled-back docs linger in clean")
+    // the passage is new again: its first copy keeps it
+    src.bulkInsert(Seq((4L, "m p q r s n")).toDF("doc_id", "text"))
+    SpanDedupService.sync(src, clean, idx)
+    assert(texts(clean)(4L) === "m p q r s n")
+    // steady state: next tick is a no-op
+    assert(SpanDedupService.sync(src, clean, idx).isEmpty)
+  }
 }
