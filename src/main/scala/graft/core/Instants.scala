@@ -151,6 +151,13 @@ final class Timeline(val basePath: Path) {
     GraftInstant(i.ts, i.action, State.Completed)
   }
 
+  /** Publish an instant whose content is known up front (rollback,
+    * restore, savepoint, a copied timeline): requested, then inflight,
+    * then completed with `metadataJson`.
+    */
+  def publishInstant(ts: String, action: String, metadataJson: String): GraftInstant =
+    saveAsComplete(transitionToInflight(createRequested(ts, action)), metadataJson)
+
   def readContent(i: GraftInstant): String =
     Storage.readString(dir.resolve(i.fileName))
 

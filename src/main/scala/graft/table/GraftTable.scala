@@ -293,7 +293,7 @@ final class GraftTable(
   def upsertOptimistic(df: DataFrame): String = {
     requireKeyed("upsertOptimistic")
     enforceConstraints(df, "upsert")
-    runCommitOptimistic(commitAction, "upsert")(
+    runCommit(commitAction, "upsert", optimistic = true)(
       if (partitionEvolved) globalMixedBody(df) else upsertBody(df))
   }
 
@@ -1836,33 +1836,155 @@ final class GraftTable(
 
   // ------------------------------------------------------------- commit
 
-  /** Commit protocol: requested → inflight → [build + write files] →
-    * atomic completed-instant publish. On failure the staging dir and
-    * instant markers are removed (auto-rollback of inflight writes).
+  /** instant => (write stats, replaced file groups, schema JSON) */
+  private[table] type CommitBody =
+    String => (Seq[WriteStat], Map[String, Seq[String]], String)
+
+  /** The commit protocol, in six phases. A lock-held write (`upsert` and
+    * every other write but `upsertOptimistic`) holds the table lock from
+    * phase 1 through phase 4; an optimistic write (`optimistic = true`)
+    * takes it only for phases 1 and 4.
+    *  1. Begin, under the lock: reap failed writes, check routing,
+    *     allocate the instant, move it from requested to inflight.
+    *  2. Body: write the files.
+    *  3. Validate: the pre-commit validators, then the bloom sidecars.
+    *  4. Publish, under the lock: the conflict check (optimistic writes
+    *     only), the duration stamp, the completed instant, finalize,
+    *     dictionary poisons, then `postCommit`.
+    *  5. Abort, on any failure before publish: [[abortCommit]].
+    *  6. After the lock: record-index, secondary-index and view syncs,
+    *     then callbacks.
+    * Phases 3-5 are [[commitInflight]], which compaction and clustering
+    * enter directly with their planned instants.
     */
   private def runCommit(action: String, opType: String,
-      extraMetadata: Map[String, String] = Map.empty)(
-      body: String => (Seq[WriteStat], Map[String, Seq[String]], String)): String = {
-    val (ts, stats, opT) = TableLock.withLock(basePath) {
-      runCommitLocked(action, opType, extraMetadata)(body)
+      extraMetadata: Map[String, String] = Map.empty, optimistic: Boolean = false)(
+      body: CommitBody): String = {
+    def begin(): GraftInstant = {
+      reapFailedWritesPerPolicy()
+      requireRoutingCurrent()
+      val ts = InstantTime.newInstant(timeline) // clamped above all timeline instants
+      timeline.transitionToInflight(timeline.createRequested(ts, action))
     }
+    val (inst, stats) =
+      if (optimistic) {
+        val readPoint = timeline.completedDataInstants().lastOption.map(_.ts).getOrElse("0")
+        val inst = TableLock.withLock(basePath)(begin())
+        (inst, commitInflight(inst, opType, extraMetadata, dataCommit = true,
+          Some(optimisticConflicts(readPoint) _))(body))
+      } else TableLock.withLock(basePath) {
+        val inst = begin()
+        (inst, commitInflight(inst, opType, extraMetadata, dataCommit = true)(body))
+      }
     // callbacks fire OUTSIDE the table lock: a slow notification transport
-    // must not stall other writers or the async service threads (the
-    // optimistic path already fires after its publish lock releases)
-    // eager record-index maintenance also runs unlocked — best-effort,
+    // must not stall other writers or the async service threads. Eager
+    // record-index maintenance also runs unlocked — best-effort,
     // changeset-sized; a failure only defers to the next tag's catch-up
     RecordIndex.maybeSync(this)
     SecondaryIndex.maybeSync(this)
     MaterializedView.maybeSyncRegistered(this)
-    fireCommitCallbacks(ts, opT, stats)
-    ts
+    fireCommitCallbacks(inst.ts, opType, stats)
+    inst.ts
   }
 
-  /** Reap crashed writers before starting (reference startCommit runs
-    * rollbackFailedWrites the same way; see Services.rollbackFailedWrites
-    * for the EAGER/LAZY policy semantics). Costs one pending-instant
-    * listing when the timeline is clean.
+  /** Phases 3-5 of [[runCommit]] for an instant already inflight; returns
+    * the write stats. Only data commits run the validators and
+    * `postCommit`. A failure after the completed instant lands propagates
+    * without un-publishing the commit.
     */
+  private[table] def commitInflight(inst: GraftInstant, opType: String,
+      extraMetadata: Map[String, String] = Map.empty, dataCommit: Boolean = false,
+      conflicts: Option[(String, Seq[WriteStat], Map[String, Seq[String]]) => Unit] = None)(
+      body: CommitBody): Seq[WriteStat] = {
+    val ts = inst.ts
+    var written: Seq[WriteStat] = Seq.empty
+    var published = false
+    val t0 = System.nanoTime()
+    try {
+      val (stats, replaced, schemaJson) = body(ts)
+      written = stats
+      // unlocked for an optimistic writer: a validator may scan the new files
+      if (dataCommit) firePreCommitValidators(ts, opType, stats)
+      if (BloomIndex.enabled(cfg)) BloomIndex.buildSidecars(spark, basePath, stats, cfg)
+      if (conflicts.isDefined) beforeOptimisticPublish()
+      TableLock.withLock(basePath) {
+        conflicts.foreach(_(ts, stats, replaced))
+        // commit duration rides in the metadata itself (reference
+        // hudi-client-common/.../metrics/HoodieMetrics.java
+        // updateCommitMetrics publishes the same figure to a registry; a
+        // registry is a sidecar service, the commit log is already durable)
+        val durMs = (System.nanoTime() - t0) / 1000000L
+        timeline.saveAsComplete(inst, Json.write(CommitMetadata(opType, stats, replaced,
+          schemaJson, extraMetadata + (GraftTable.DurationMsKey -> durMs.toString))))
+        published = true
+        // the markers' crash-reconciliation duty ends at publish
+        WritePipeline.finalizeInstant(basePath, ts)
+        persistNewDictPoisons(stats)
+        if (dataCommit) postCommit()
+      }
+      stats
+    } catch {
+      case e: Throwable =>
+        if (!published) abortCommit(inst, written)
+        throw e
+    }
+  }
+
+  /** Phase 5, the only code that deletes a commit's files when it fails
+    * before publish: the marker-listed files and the staging dir, then
+    * every file the body reported (a staged-fallback write leaves
+    * final-named files without markers) with its bloom sidecar, then the
+    * instant files. A compaction keeps its requested plan, which stays
+    * retryable.
+    */
+  private def abortCommit(inst: GraftInstant, written: Seq[WriteStat]): Unit = {
+    WritePipeline.cleanupFailedWrite(basePath, inst.ts)
+    written.foreach { ws =>
+      val p = basePath.resolve(ws.path)
+      if (p.startsWith(basePath)) {
+        Storage.deleteIfExists(p)
+        if (!ws.isDelta && BloomIndex.enabled(cfg))
+          Storage.deleteIfExists(BloomIndex.sidecarPath(basePath, ws.path))
+      }
+    }
+    if (inst.action == Action.Compaction)
+      Storage.deleteIfExists(timeline.dir.resolve(s"${inst.ts}.${inst.action}.${State.Inflight}"))
+    else timeline.deleteInstantFiles(inst.ts, inst.action)
+  }
+
+  /** Phase-4 conflict check of an optimistic write (reference
+    * SimpleConcurrentFileWritesConflictResolutionStrategy.java:44-85),
+    * run under the publish lock. Throws [[WriteConflictException]] when a
+    * failed-writes reap rolled this writer back mid-flight, or when a
+    * commit completed since `readPoint` touched one of its file groups.
+    */
+  private def optimisticConflicts(readPoint: String)(ts: String,
+      stats: Seq[WriteStat], replaced: Map[String, Seq[String]]): Unit = {
+    // a reap past graft.failed.writes.stale.ms removed the inflight marker
+    // and the files: publishing would commit dangling file refs
+    if (!timeline.listInstants().exists(i =>
+      i.ts == ts && i.state == State.Inflight))
+      throw new WriteConflictException(
+        s"commit $ts was rolled back while in flight (failed-writes reap " +
+          "— the write outlived graft.failed.writes.stale.ms); retry")
+    val mine: Set[(String, String)] =
+      stats.map(s => (s.partitionPath, s.fileId)).toSet ++
+        replaced.toSeq.flatMap { case (p, fids) => fids.map(p -> _) }
+    val conflict = timeline.completedDataInstants()
+      .filter(i => i.ts > readPoint && i.ts != ts)
+      .find { i =>
+        val md = CommitMetadata.fromJson(timeline.readContent(i))
+        val theirs = md.writeStats.map(s => (s.partitionPath, s.fileId)).toSet ++
+          md.replacedFileIds.toSeq.flatMap { case (p, fids) => fids.map(p -> _) }
+        mine.exists(theirs.contains)
+      }
+    conflict.foreach { c =>
+      throw new WriteConflictException(
+        s"commit $ts conflicts with ${c.ts}: overlapping file groups " +
+          s"written after read point $readPoint")
+    }
+  }
+
   /** Guard against the one config drift that CORRUPTS data: a handle
     * loaded before another writer's bucket rescale would route keys by
     * the OLD count, landing a key's new copy in a group its existing
@@ -1917,6 +2039,13 @@ final class GraftTable(
         (ConfigKeys.DictionaryPoisoned -> (have ++ np).toSeq.sorted.mkString(","))))
   }
 
+  /** Reap crashed writers before starting (reference startCommit runs
+    * rollbackFailedWrites the same way; see Services.rollbackFailedWrites
+    * for the EAGER/LAZY policy semantics). Optimistic-only deployments
+    * reclaim crashed writers here too: LAZY's staleness window keeps live
+    * unlocked writers safe. Costs one pending-instant listing when the
+    * timeline is clean.
+    */
   private def reapFailedWritesPerPolicy(): Unit =
     cfg.prop(ConfigKeys.FailedWritesPolicy, "LAZY") match {
       case "EAGER" => Services.rollbackFailedWrites(this, 0L)
@@ -1924,49 +2053,6 @@ final class GraftTable(
         cfg.propLong(ConfigKeys.FailedWritesStaleMs, 3600000L))
       case _ => () // NEVER: explicit admin calls only
     }
-
-  private def runCommitLocked(action: String, opType: String,
-      extraMetadata: Map[String, String])(
-      body: String => (Seq[WriteStat], Map[String, Seq[String]], String))
-      : (String, Seq[WriteStat], String) = {
-    reapFailedWritesPerPolicy()
-    requireRoutingCurrent()
-    val ts = InstantTime.newInstant(timeline) // clamped above all timeline instants
-    val inst = timeline.createRequested(ts, action)
-    timeline.transitionToInflight(inst)
-    // once saveAsComplete lands the commit is DURABLE: a failure in
-    // post-commit work (inline services, user callbacks) must propagate
-    // without un-publishing it — the catch below only rolls back writes
-    // that never published
-    var published = false
-    val t0 = System.nanoTime()
-    try {
-      val (stats, replaced, schemaJson) = body(ts)
-      firePreCommitValidators(ts, opType, stats) // throw aborts pre-publish
-      if (BloomIndex.enabled(cfg)) BloomIndex.buildSidecars(spark, basePath, stats, cfg)
-      // commit duration rides in the metadata itself (reference
-      // hudi-client-common/.../metrics/HoodieMetrics.java
-      // updateCommitMetrics publishes the same figure to a registry; a
-      // registry is a sidecar service, the commit log is already durable)
-      val durMs = (System.nanoTime() - t0) / 1000000L
-      val md = CommitMetadata(opType, stats, replaced, schemaJson,
-        extraMetadata + (GraftTable.DurationMsKey -> durMs.toString))
-      timeline.saveAsComplete(inst, Json.write(md))
-      published = true
-      // the markers' crash-reconciliation duty ends at publish
-      WritePipeline.finalizeInstant(basePath, ts)
-      persistNewDictPoisons(stats)
-      postCommit()
-      (ts, stats, opType)
-    } catch {
-      case e: Throwable =>
-        if (!published) {
-          WritePipeline.cleanupFailedWrite(basePath, ts)
-          timeline.deleteInstantFiles(ts, action)
-        }
-        throw e
-    }
-  }
 
   /** Test hook: runs between the optimistic body and the publish lock. */
   private[graft] var beforeOptimisticPublish: () => Unit = () => ()
@@ -2011,17 +2097,7 @@ final class GraftTable(
         () => readEntriesRaw(stats.map(ws => FileEntry(ws.partitionPath, ws.fileId,
           instant, ws.path, ws.fileSizeInBytes, ws.isDelta,
           ws.minRecordKey, ws.maxRecordKey, ws.numWrites))))
-      try preCommitValidators.foreach(_(ctx))
-      catch {
-        case e: Throwable =>
-          // validator rejected: remove this commit's files NOW (they were
-          // already renamed into place) so nothing waits on the reaper
-          stats.foreach { ws =>
-            val p = basePath.resolve(ws.path)
-            if (p.startsWith(basePath)) Storage.deleteIfExists(p)
-          }
-          throw e
-      }
+      preCommitValidators.foreach(_(ctx))
     }
 
   private def fireCommitCallbacks(instant: String, opType: String,
@@ -2032,92 +2108,6 @@ final class GraftTable(
         stats.map(_.numWrites).sum, stats.map(_.numDeletes).sum)
       commitCallbacks.foreach(_(msg))
     }
-
-  /** Optimistic commit protocol: allocate + mark inflight under a short
-    * lock, run the write unlocked, then re-acquire the lock to validate
-    * (fileId-overlap conflict check against commits completed since the
-    * read point) and publish. The loser's already-renamed files are
-    * removed on conflict, so a failed optimistic write leaves no trace.
-    */
-  private def runCommitOptimistic(action: String, opType: String,
-      extraMetadata: Map[String, String] = Map.empty)(
-      body: String => (Seq[WriteStat], Map[String, Seq[String]], String)): String = {
-    val readPoint = timeline.completedDataInstants().lastOption.map(_.ts).getOrElse("0")
-    val (ts, inst) = TableLock.withLock(basePath) {
-      // optimistic-only deployments must reclaim crashed writers too —
-      // LAZY's staleness window keeps live unlocked writers safe
-      reapFailedWritesPerPolicy()
-      requireRoutingCurrent()
-      val ts = InstantTime.newInstant(timeline)
-      val i = timeline.createRequested(ts, action)
-      (ts, timeline.transitionToInflight(i))
-    }
-    var written: Seq[WriteStat] = Seq.empty
-    var published = false
-    val t0 = System.nanoTime()
-    try {
-      val (stats, replaced, schemaJson) = body(ts)
-      written = stats
-      // validation runs UNLOCKED (it may scan the new files); the abort
-      // path below reclaims the written files like any pre-publish failure
-      firePreCommitValidators(ts, opType, stats)
-      if (BloomIndex.enabled(cfg)) BloomIndex.buildSidecars(spark, basePath, stats, cfg)
-      beforeOptimisticPublish()
-      TableLock.withLock(basePath) {
-        // a failed-writes reap may have rolled this writer back mid-flight
-        // (LAZY staleness window exceeded): its inflight marker is gone and
-        // its files deleted — publishing would commit dangling file refs.
-        // Fail cleanly instead; the caller retries like any conflict.
-        if (!timeline.listInstants().exists(i =>
-          i.ts == ts && i.state == State.Inflight))
-          throw new WriteConflictException(
-            s"commit $ts was rolled back while in flight (failed-writes reap " +
-              "— the write outlived graft.failed.writes.stale.ms); retry")
-        val mine: Set[(String, String)] =
-          stats.map(s => (s.partitionPath, s.fileId)).toSet ++
-            replaced.toSeq.flatMap { case (p, fids) => fids.map(p -> _) }
-        val conflict = timeline.completedDataInstants()
-          .filter(i => i.ts > readPoint && i.ts != ts)
-          .find { i =>
-            val md = CommitMetadata.fromJson(timeline.readContent(i))
-            val theirs = md.writeStats.map(s => (s.partitionPath, s.fileId)).toSet ++
-              md.replacedFileIds.toSeq.flatMap { case (p, fids) => fids.map(p -> _) }
-            mine.exists(theirs.contains)
-          }
-        conflict.foreach { c =>
-          throw new WriteConflictException(
-            s"commit $ts conflicts with ${c.ts}: overlapping file groups " +
-              s"written after read point $readPoint")
-        }
-        val durMs = (System.nanoTime() - t0) / 1000000L
-        timeline.saveAsComplete(inst,
-          Json.write(CommitMetadata(opType, stats, replaced, schemaJson,
-            extraMetadata + (GraftTable.DurationMsKey -> durMs.toString))))
-        published = true
-        WritePipeline.finalizeInstant(basePath, ts)
-        persistNewDictPoisons(stats)
-        postCommit()
-      }
-      RecordIndex.maybeSync(this)
-      SecondaryIndex.maybeSync(this)
-      MaterializedView.maybeSyncRegistered(this)
-      fireCommitCallbacks(ts, opType, written)
-      ts
-    } catch {
-      case e: Throwable =>
-        // only roll back what never published — a post-publish failure
-        // (inline service, user callback) must not destroy a durable commit
-        if (!published) {
-          WritePipeline.cleanupFailedWrite(basePath, ts)
-          written.foreach { ws =>
-            val p = basePath.resolve(ws.path)
-            if (p.startsWith(basePath)) Storage.deleteIfExists(p)
-          }
-          timeline.deleteInstantFiles(ts, action)
-        }
-        throw e
-    }
-  }
 
   /** Inline table services after a successful commit: MOR compaction every
     * N delta commits (reference inline compaction,
@@ -2225,11 +2215,6 @@ object GraftTable {
   private[table] val inAutoSplit: ThreadLocal[java.lang.Boolean] =
     ThreadLocal.withInitial(() => java.lang.Boolean.FALSE)
 
-  /** What a commit callback receives (reference
-    * HoodieWriteCommitCallbackMessage: commitTime + tableName + basePath;
-    * operation and row counts added because every consumer immediately
-    * wants them).
-    */
   /** extraMetadata key holding the commit's wall-clock duration. */
   val DurationMsKey = "graft.commit.durationMs"
 
@@ -2292,6 +2277,11 @@ object GraftTable {
     }
   }
 
+  /** What a commit callback receives (reference
+    * HoodieWriteCommitCallbackMessage: commitTime + tableName + basePath;
+    * operation and row counts added because every consumer immediately
+    * wants them).
+    */
   final case class CommitCallbackMessage(
       commitTime: String,
       tableName: String,

@@ -7,10 +7,6 @@ import org.apache.spark.sql.functions._
 import graft.core._
 import graft.core.Storage.PathOps
 
-/** Table maintenance services (reference §2.6: compaction, clustering,
-  * clean, rollback, savepoint/restore). All planning is a pure function
-  * over the metadata view; all data movement is a declarative Spark job.
-  */
 /** Compaction candidate-selection strategies (reference
   * compact/strategy package).
   */
@@ -21,6 +17,10 @@ object CompactionStrategy {
   val Unbounded = "UNBOUNDED"
 }
 
+/** Table maintenance services (reference §2.6: compaction, clustering,
+  * clean, rollback, savepoint/restore). All planning is a pure function
+  * over the metadata view; all data movement is a declarative Spark job.
+  */
 object Services {
 
   // ------------------------------------------------------------ compaction
@@ -77,7 +77,7 @@ object Services {
   def runCompaction(t: GraftTable, ts: String): String = graft.core.TableLock.withLock(t.basePath) {
     val plan = Json.read[CompactionPlan](t.timeline.readRequestedContent(ts, Action.Compaction))
     val inst = t.timeline.transitionToInflight(GraftInstant(ts, Action.Compaction, State.Requested))
-    try {
+    t.commitInflight(inst, "compact") { _ =>
       val slices = t.view.fileSlices(Some(preCompactionView(t, ts))).filter(s =>
         plan.operations.exists(op => op.fileId == s.fileId && op.partitionPath == s.partitionPath))
       val del = MetaCols.DeleteFlag
@@ -111,19 +111,10 @@ object Services {
         WritePipeline.staticPlan(merged), ts, isDelta = false,
         alreadyPartitioned = true, baseFormat = t.cfg.baseFormat,
         dict = t.dictStats)
-      val md = CommitMetadata("compact", stats, Map.empty,
-        t.latestSchema.map(_.json).getOrElse(""))
-      t.timeline.saveAsComplete(inst, Json.write(md))
-      WritePipeline.finalizeInstant(t.basePath, ts)
-      Metrics.refreshIfOn(t)
-      ts
-    } catch {
-      case e: Throwable =>
-        WritePipeline.cleanupFailedWrite(t.basePath, ts)
-        // leave the requested instant for retry; remove only inflight
-        Storage.deleteIfExists(t.timeline.dir.resolve(s"$ts.${Action.Compaction}.${State.Inflight}"))
-        throw e
+      (stats, Map.empty, t.latestSchema.map(_.json).getOrElse(""))
     }
+    Metrics.refreshIfOn(t)
+    ts
   }
 
   /** The view instant just below the compaction ts, so the merge reads the
@@ -254,7 +245,7 @@ object Services {
       }, sortColumns)
     t.timeline.createRequested(ts, Action.ReplaceCommit, Json.write(plan))
     val inst = t.timeline.transitionToInflight(GraftInstant(ts, Action.ReplaceCommit, State.Requested))
-    try {
+    t.commitInflight(inst, "cluster") { _ =>
       val entries = t.view.fileSlices(None)
         .filter(s => plan.groups.exists(g => g.partitionPath == s.partitionPath && g.fileIds.contains(s.fileId)))
         .flatMap(_.baseFile)
@@ -320,19 +311,11 @@ object Services {
             WritePipeline.staticPlan(routed), ts, isDelta = false,
             baseFormat = t.cfg.baseFormat, dict = t.dictStats)
         }
-      val replaced = plan.groups.map(g => g.partitionPath -> g.fileIds).toMap
-      val md = CommitMetadata("cluster", stats, replaced,
+      (stats, plan.groups.map(g => g.partitionPath -> g.fileIds).toMap,
         t.latestSchema.map(_.json).getOrElse(""))
-      t.timeline.saveAsComplete(inst, Json.write(md))
-      WritePipeline.finalizeInstant(t.basePath, ts)
-      Metrics.refreshIfOn(t)
-      Some(ts)
-    } catch {
-      case e: Throwable =>
-        WritePipeline.cleanupFailedWrite(t.basePath, ts)
-        t.timeline.deleteInstantFiles(ts, Action.ReplaceCommit)
-        throw e
     }
+    Metrics.refreshIfOn(t)
+    Some(ts)
   }
 
   // ------------------------------------------------------------------ clean
@@ -679,11 +662,18 @@ object Services {
     // (a completed one already listed its files in writeStats above) —
     // the markers name them without a layout walk
     WritePipeline.cleanupFailedWrite(t.basePath, ts)
+    recordRollback(t, ts, action, deleted.toSeq)
+  }
+
+  /** The last step of both rollbacks: remove the target instant's files,
+    * record a rollback instant naming the data files deleted, and refresh
+    * the metrics. Returns the rollback instant.
+    */
+  private def recordRollback(t: GraftTable, ts: String, action: String,
+      deleted: Seq[String]): String = {
     t.timeline.deleteInstantFiles(ts, action)
-    val rts = InstantTime.newInstant(t.timeline)
-    val inst = t.timeline.createRequested(rts, Action.Rollback)
-    t.timeline.transitionToInflight(inst)
-    t.timeline.saveAsComplete(inst, Json.write(RollbackMetadata(Seq(ts), deleted.toSeq)))
+    val rts = t.timeline.publishInstant(InstantTime.newInstant(t.timeline),
+      Action.Rollback, Json.write(RollbackMetadata(Seq(ts), deleted))).ts
     Metrics.refreshIfOn(t)
     rts
   }
@@ -785,13 +775,7 @@ object Services {
         WritePipeline.deleteRecursively(WritePipeline.stagingDir(t.basePath, ts))
         val action = t.timeline.listInstants().filter(_.ts == ts).map(_.action)
           .headOption.getOrElse(Action.Commit)
-        t.timeline.deleteInstantFiles(ts, action)
-        val rts = InstantTime.newInstant(t.timeline)
-        val inst = t.timeline.createRequested(rts, Action.Rollback)
-        t.timeline.transitionToInflight(inst)
-        t.timeline.saveAsComplete(inst, Json.write(RollbackMetadata(Seq(ts), deleted)))
-        Metrics.refreshIfOn(t)
-        rts
+        recordRollback(t, ts, action, deleted)
       }
     }
 
@@ -835,11 +819,8 @@ object Services {
     */
   def savepoint(t: GraftTable, ts: String): String = graft.core.TableLock.withLock(t.basePath) {
     require(t.timeline.completedDataInstants().exists(_.ts == ts), s"no completed instant $ts")
-    val sts = InstantTime.newInstant(t.timeline)
-    val inst = t.timeline.createRequested(sts, Action.Savepoint)
-    t.timeline.transitionToInflight(inst)
-    t.timeline.saveAsComplete(inst, Json.write(SavepointMetadata(ts)))
-    sts
+    t.timeline.publishInstant(InstantTime.newInstant(t.timeline),
+      Action.Savepoint, Json.write(SavepointMetadata(ts))).ts
   }
 
   /** Delete a savepoint so the cleaner may reclaim the file versions it
@@ -863,11 +844,8 @@ object Services {
   def restore(t: GraftTable, ts: String): String = graft.core.TableLock.withLock(t.basePath) {
     val toUndo = t.timeline.completedDataInstants().filter(_.ts > ts).reverse
     toUndo.foreach(i => rollback(t, i.ts))
-    val rts = InstantTime.newInstant(t.timeline)
-    val inst = t.timeline.createRequested(rts, Action.Restore)
-    t.timeline.transitionToInflight(inst)
-    t.timeline.saveAsComplete(inst,
-      Json.write(RollbackMetadata(toUndo.map(_.ts), Seq.empty)))
+    val rts = t.timeline.publishInstant(InstantTime.newInstant(t.timeline),
+      Action.Restore, Json.write(RollbackMetadata(toUndo.map(_.ts), Seq.empty))).ts
     Metrics.refreshIfOn(t)
     rts
   }

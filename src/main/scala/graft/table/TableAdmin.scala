@@ -297,11 +297,8 @@ object TableAdmin {
     TableConfig.save(dstPath, t.cfg)
     val dstTimeline = new Timeline(dstPath)
     dstTimeline.init()
-    t.timeline.completedInstants().foreach { i =>
-      val inst = dstTimeline.createRequested(i.ts, i.action)
-      dstTimeline.transitionToInflight(inst)
-      dstTimeline.saveAsComplete(inst, t.timeline.readContent(i))
-    }
+    t.timeline.completedInstants().foreach(i =>
+      dstTimeline.publishInstant(i.ts, i.action, t.timeline.readContent(i)))
     // archived commits and files-index snapshots carry over too: for a
     // table whose early commits were archived, the view resolves file
     // groups through the archive/index — without them the copy would

@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.table.{BloomIndex, GraftTable, SortMode}
+import graft.table.{BloomIndex, GraftTable, Services, SortMode}
 import graft.read.Readers
 
 /** BLOOM index: sidecar build on write, probe-pruning at tag time, and
@@ -101,6 +101,32 @@ class BloomIndexSpec extends AnyFunSuite {
     val snap = Readers.snapshot(t)
     assert(snap.count() === src.count()) // migrated, not duplicated
     assert(snap.groupBy("o_orderkey").count().filter(col("count") > 1).count() === 0)
+  }
+
+  private def assertSidecars(t: GraftTable): Unit =
+    t.view.fileSlices(None).flatMap(_.baseFile).foreach { b =>
+      assert(graft.core.Storage.exists(BloomIndex.sidecarPath(t.basePath, b.relPath)),
+        s"missing sidecar for ${b.relPath}")
+    }
+
+  test("clustering builds a sidecar for every base file it writes") {
+    val src = spark.read.parquet(s"$sf001/orders.parquet")
+    val t = GraftTable.create(spark, tmpDir("bloom_cluster").toString, bloomCfg)
+    t.bulkInsert(src.filter(col("o_orderkey") % 2 === 0))
+    t.bulkInsert(src.filter(col("o_orderkey") % 2 =!= 0))
+    assert(Services.cluster(t).isDefined)
+    assertSidecars(t)
+  }
+
+  test("MOR compaction builds a sidecar for every base file it writes") {
+    val src = spark.read.parquet(s"$sf001/orders.parquet")
+    val t = GraftTable.create(spark, tmpDir("bloom_compact").toString, bloomCfg.copy(
+      tableType = TableType.MergeOnRead,
+      props = bloomCfg.props + ("graft.compact.inline" -> "false")))
+    t.bulkInsert(src)
+    t.upsert(src.filter(col("o_orderkey") % 10 === 0).withColumn("o_totalprice", lit(1.0)))
+    assert(Services.compact(t).isDefined)
+    assertSidecars(t)
   }
 
   test("files without sidecars are kept (conservative fallback)") {

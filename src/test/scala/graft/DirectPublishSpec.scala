@@ -98,6 +98,66 @@ class DirectPublishSpec extends AnyFunSuite {
       t.timeline.completedDataInstants().last.ts)))
   }
 
+  // Abort coverage: every pre-publish failure, in either commit mode and on
+  // either publish path, must leave the table as it was — the same data
+  // files, no pending instant or staging dir, the same snapshot. The
+  // staged fallback (a user-pinned commit protocol) writes no markers, so
+  // only the abort's own list of written files can reclaim its
+  // final-named files.
+  private val stagedProtocol = "org.apache.spark.internal.io.HadoopMapReduceCommitProtocol"
+
+  for {
+    optimistic <- Seq(false, true)
+    staged <- Seq(false, true)
+    afterValidation <- Seq(false, true)
+  } {
+    val mode = if (optimistic) "upsertOptimistic" else "locked upsert"
+    val publish = if (staged) "staged fallback" else "direct"
+    val failure = if (afterValidation) "failure after validation" else "validator refusal"
+    test(s"an aborted commit leaves no trace: $mode, $publish publish, $failure") {
+      val dir = tmpDir("direct_abort").toString + "/t"
+      val t = GraftTable.create(spark, dir, TableConfig(
+        "dab", TableType.CopyOnWrite, Seq("id"), "yr", "ver",
+        Map(ConfigKeys.IndexType -> "BLOOM")))
+      t.bulkInsert(threeRows)
+      def dataFiles = Storage.walk(t.basePath).filter(_.isFile).map(_.getPath)
+        .filterNot(_.toString.contains("/.graft/")).toSet
+      def rows = Readers.snapshot(t).select("id", "price")
+        .as[(Long, Double)].collect().toSet
+      val (filesBefore, rowsBefore) = (dataFiles, rows)
+      var validated = false
+      if (afterValidation) {
+        // the sidecar build after the validators throws: its directory
+        // is a plain file
+        val blooms = t.basePath.resolve(".graft").resolve("blooms")
+        WritePipeline.deleteRecursively(blooms)
+        Storage.write(blooms, Array[Byte](1))
+        t.registerPreCommitValidator(_ => validated = true)
+      } else t.registerPreCommitValidator(_ => throw new IllegalStateException("refused"))
+      val key = "spark.sql.sources.commitProtocolClass"
+      val pinned = spark.conf.getOption(key)
+      if (staged) spark.conf.set(key, stagedProtocol)
+      try {
+        val batch = Seq((2L, 2L, 99.0, "1995"), (4L, 1L, 40.0, "1996"))
+          .toDF("id", "ver", "price", "yr")
+        intercept[Exception] {
+          if (optimistic) t.upsertOptimistic(batch) else t.upsert(batch)
+        }
+      } finally if (staged) pinned match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      assert(validated === afterValidation)
+      val leaked = dataFiles -- filesBefore
+      assert(dataFiles === filesBefore, s"aborted commit leaked files: $leaked")
+      assert(t.timeline.pendingInstants().isEmpty)
+      val temp = t.basePath.resolve(".graft").resolve(".temp")
+      assert(!Storage.exists(temp) || Storage.listPaths(temp).isEmpty,
+        "the aborted commit's staging dir survived")
+      assert(rows === rowsBefore)
+    }
+  }
+
   test("failed-writes reaper finds a dead direct writer's files via markers (no walk)") {
     val dir = tmpDir("direct_reap").toString + "/t"
     val t = GraftTable.create(spark, dir, TableConfig(

@@ -67,6 +67,29 @@ class MetricsSpec extends AnyFunSuite {
     s.unpersist()
   }
 
+  test("compaction and cluster commits record their duration; replay parity holds") {
+    val mor = mk("m_dur_mor", TableType.MergeOnRead,
+      Map(Metrics.OnProp -> "true", "graft.compact.inline" -> "false"))
+    val s = src(200)
+    mor.bulkInsert(s)
+    mor.upsert(s.limit(30).withColumn("o_totalprice", lit(2.0)))
+    assert(Services.compact(mor).isDefined)
+    val cow = mk("m_dur_cow", props = Map(Metrics.OnProp -> "true"))
+    cow.bulkInsert(s.filter(col("o_orderkey") % 2 === 0))
+    cow.bulkInsert(s.filter(col("o_orderkey") % 2 =!= 0))
+    assert(Services.cluster(cow).isDefined)
+    for ((t, op) <- Seq(mor -> "compact", cow -> "cluster")) {
+      val durations = TableAdmin.commits(t).filter(col("operation") === op)
+        .select("duration_ms").collect().map(_.getLong(0))
+      assert(durations.nonEmpty && durations.forall(_ >= 0L),
+        s"$op duration_ms: ${durations.mkString(",")}")
+      val live = Metrics.registryFor(t).snapshot.toMap
+      assert(live === Metrics.replay(t).snapshot.toMap)
+    }
+    assert(Metrics.registryFor(mor).get("compaction.duration").exists(_ >= 0L))
+    s.unpersist()
+  }
+
   test("service actions publish clean/rollback gauges") {
     val t = mk("m_svc", props = Map(Metrics.OnProp -> "true"))
     val s = src(120)
