@@ -3,9 +3,8 @@ package graft.sql
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
-import org.apache.spark.sql.types.{BooleanType, LongType, StringType}
 
-import graft.table.{GraftTable, Services, TableAdmin}
+import graft.table.{AdminArgs, AdminCommand, AdminTarget, CliFrame, CliText, GraftTable}
 
 /** `CALL <procedure>(name => value, ...)` — the stored-procedure admin
   * surface the reference line later grew for exactly these operations
@@ -13,10 +12,10 @@ import graft.table.{GraftTable, Services, TableAdmin}
   * only through the Java client / CLI; the statement shapes here follow
   * that convention so scripts written against it port directly).
   *
-  * Procedures route to the same [[Services]]/[[TableAdmin]] entry points
-  * the programmatic API and the interactive CLI use — CALL is a pure
-  * SQL veneer, so behavior (locking, timeline actions, metrics hooks)
-  * is identical across all three surfaces.
+  * Procedures are the [[graft.table.AdminCommands]] entries with a `CALL`
+  * name — the same entries the interactive CLI runs — so CALL is a pure
+  * SQL veneer and behavior (locking, timeline actions, metrics hooks) is
+  * identical across the programmatic API, the CLI and SQL.
   *
   * {{{
   * CALL run_compaction(table => 't', op => 'scheduleandexecute')
@@ -86,299 +85,33 @@ object CallProcedures {
       Arg(name, unq)
     }
   }
-
-  /** Output schema per procedure — fixed at parse time (commands declare
-    * attributes before running). Maintenance procedures return one
-    * `result` row; show procedures mirror the TableAdmin frame columns.
-    */
-  def outputFor(proc: String): Seq[Attribute] = proc match {
-    case "show_commits" => Seq(
-      AttributeReference("instant", StringType)(),
-      AttributeReference("action", StringType)(),
-      AttributeReference("operation", StringType)(),
-      AttributeReference("num_files", LongType)(),
-      AttributeReference("total_records", LongType)(),
-      AttributeReference("total_deletes", LongType)(),
-      AttributeReference("total_bytes", LongType)(),
-      AttributeReference("replaced_groups", LongType)(),
-      AttributeReference("duration_ms", LongType)())
-    case "show_savepoints" => Seq(
-      AttributeReference("instant", StringType)(),
-      AttributeReference("savepointed_instant", StringType)())
-    case "show_cleans" => Seq(
-      AttributeReference("instant", StringType)(),
-      AttributeReference("earliest_retained", StringType)(),
-      AttributeReference("files_deleted", LongType)())
-    case "show_rollbacks" => Seq(
-      AttributeReference("instant", StringType)(),
-      AttributeReference("action", StringType)(),
-      AttributeReference("rolled_back", StringType)(),
-      AttributeReference("files_deleted", LongType)())
-    case "show_compaction" => Seq(
-      AttributeReference("instant", StringType)(),
-      AttributeReference("state", StringType)(),
-      AttributeReference("file_groups", LongType)())
-    case "show_fsview_all" => Seq(
-      AttributeReference("partition", StringType)(),
-      AttributeReference("file_id", StringType)(),
-      AttributeReference("base_instant", StringType)(),
-      AttributeReference("base_bytes", LongType)(),
-      AttributeReference("base_records", LongType)(),
-      AttributeReference("num_deltas", LongType)(),
-      AttributeReference("delta_bytes", LongType)())
-    case "show_table_properties" => Seq(
-      AttributeReference("key", StringType)(),
-      AttributeReference("value", StringType)())
-    case "show_column_stats" => Seq(
-      AttributeReference("partition", StringType)(),
-      AttributeReference("file_id", StringType)(),
-      AttributeReference("path", StringType)(),
-      AttributeReference("column", StringType)(),
-      AttributeReference("min_value", StringType)(),
-      AttributeReference("max_value", StringType)(),
-      AttributeReference("null_count", LongType, nullable = true)(),
-      AttributeReference("num_records", LongType)())
-    case "show_metrics" => Seq(
-      AttributeReference("name", StringType)(),
-      AttributeReference("value", LongType)())
-    case _ => Seq(AttributeReference("result", StringType)())
-  }
-
-  val Procedures: Set[String] = Set(
-    "run_compaction", "run_clustering", "run_clean",
-    "create_savepoint", "delete_savepoint", "rollback_to_savepoint",
-    "rollback_to_instant", "export_snapshot", "symlink_manifest",
-    "copy_snapshot", "snapshot_copy", // alias pair — HoodieSnapshotCopier analog
-    "show_commits", "show_savepoints", "show_cleans", "show_rollbacks",
-    "show_compaction", "show_fsview_all", "show_table_properties",
-    "show_column_stats", "show_metrics",
-    // pipeline services (round-15): the incremental corpus-maintenance
-    // ticks, drivable by SQL-only users
-    "run_decontaminate_sync", "update_benchmark", "run_dedup_sync",
-    "run_hash_dedup_sync", "run_span_dedup_sync", "run_session_sync",
-    "run_rollup_sync")
 }
 
-final case class GraftCallCommand(proc: String, args: Seq[CallProcedures.Arg])
+/** One admin command run from SQL: named arguments (`table` also as the
+  * first positional), the `table` argument resolved like a SQL name, and
+  * the entry's declared columns as the output.
+  */
+final case class GraftCallCommand(cmd: AdminCommand, args: Seq[CallProcedures.Arg])
     extends LeafRunnableCommand {
-  import CallProcedures._
+  import CallProcedures.Arg
 
-  override val output: Seq[Attribute] = outputFor(proc)
-
-  private def named(name: String): Option[String] =
-    args.collectFirst { case Arg(Some(n), v) if n == name => v }
-
-  /** `table` argument: named, or the first positional. */
-  private def tableArg: String =
-    named("table").orElse(args.collectFirst { case Arg(None, v) => v })
-      .getOrElse(throw new IllegalArgumentException(
-        s"CALL $proc needs a table argument: CALL $proc(table => 'name')"))
-
-  private def collectRows(df: org.apache.spark.sql.DataFrame): Seq[Row] = {
-    // align to the declared attribute order; admin frames are
-    // driver-built and small (timeline/file-group metadata)
-    val cols = output.map(a => org.apache.spark.sql.functions.col(a.name))
-    df.select(cols: _*).collect().toSeq
-  }
-
-  /** A graft table from a CALL argument: a `/`-bearing value loads by
-    * PATH (pipeline-service state tables are rarely cataloged), anything
-    * else resolves like a SQL name (temp view / catalog).
-    */
-  private def tableAt(spark: SparkSession, v: String): GraftTable =
-    if (v.contains("/")) GraftTable.load(spark, v)
-    else GraftSqlParser.tableOf(spark, v)
-
-  private def need(name: String): String =
-    named(name).getOrElse(throw new IllegalArgumentException(
-      s"CALL $proc needs $name => '...'"))
-
-  /** The pipeline-service procedures — SQL drivers for the incremental
-    * corpus-maintenance ticks (dedup / decontamination / sessionization /
-    * rollup services). Index tables auto-create at their path on first
-    * use (the services' own openIndex); source/output tables must exist.
-    */
-  private def runPipelineService(spark: SparkSession): Seq[Row] = {
-    import graft.pipeline._
-    def one(s: Option[String]): Seq[Row] = Seq(Row(s.getOrElse("no new data")))
-    def src = tableAt(spark, need("source"))
-    def clean = tableAt(spark, need("clean"))
-    val textCol = named("text_col").getOrElse("text")
-    val idCol = named("id_col").getOrElse("doc_id")
-    proc match {
-      case "run_decontaminate_sync" =>
-        // thresholds => 'easy:0.6,strict:0' selects GRADED mode per suite
-        val thresholds = named("thresholds").map(_.split(',').toSeq
-          .map(_.trim).filter(_.nonEmpty).map { kv =>
-            val i = kv.lastIndexOf(':')
-            require(i > 0, s"thresholds entries are suite:fraction, got '$kv'")
-            kv.substring(0, i).trim -> kv.substring(i + 1).trim.toDouble
-          }.toMap).getOrElse(Map.empty[String, Double])
-        val idx = DecontaminateService.openIndex(spark, need("index"))
-        one(DecontaminateService.sync(src, clean, idx, textCol, idCol, thresholds))
-      case "update_benchmark" =>
-        val idx = DecontaminateService.openIndex(spark, need("index"))
-        val benchArg = need("benchmark")
-        val bench =
-          if (benchArg.contains("/")) spark.read.parquet(benchArg)
-          else spark.table(benchArg)
-        Seq(Row(DecontaminateService.updateBenchmark(idx, bench, textCol,
-          named("suite").getOrElse("default"))))
-      case "run_dedup_sync" =>
-        val idx = DedupService.openIndex(spark, need("index"))
-        one(DedupService.sync(src, clean, idx, textCol, idCol))
-      case "run_span_dedup_sync" =>
-        val idx = SpanDedupService.openIndex(spark, need("index"))
-        one(SpanDedupService.sync(src, clean, idx, textCol, idCol))
-      case "run_hash_dedup_sync" =>
-        // simhash over the text column — the SQL-expressible hash mode;
-        // byte-level hashes (phash/audio) stay on the programmatic API,
-        // which takes an arbitrary hashOf function
-        val idx = HashDedupService.openIndex(spark, need("index"))
-        val hashOf: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
-          df => df.select(org.apache.spark.sql.functions.col(idCol),
-            Dedup.simhash(org.apache.spark.sql.functions.col(textCol)).as("hash"))
-        one(HashDedupService.sync(src, clean, idx, hashOf, idCol))
-      case "run_session_sync" =>
-        val events = tableAt(spark, need("events"))
-        val sessions = tableAt(spark, need("sessions"))
-        one(SessionService.sync(events, sessions,
-          userCol = named("user_col").getOrElse("user_id"),
-          tsCol = named("ts_col").getOrElse("ts"),
-          valueCol = named("value_col").getOrElse("value"),
-          maxGapSeconds = named("max_gap_seconds").map(_.toLong).getOrElse(1800L),
-          buckets = named("buckets").map(_.toInt).getOrElse(64)))
-      case "run_rollup_sync" =>
-        // aggs => 'sum(v) AS total; count(1) AS n' — ';'-separated Spark
-        // SQL aggregate expressions (CheckConstraints' separator, commas
-        // stay available inside the expressions)
-        val rollup = tableAt(spark, need("rollup"))
-        val groupCols = need("group_cols").split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-        val aggs = need("aggs").split(';').toSeq.map(_.trim).filter(_.nonEmpty)
-          .map(org.apache.spark.sql.functions.expr)
-        require(aggs.nonEmpty, "run_rollup_sync needs at least one aggregate in aggs")
-        one(RollupService.sync(src, rollup, groupCols, aggs))
-      case other => throw new IllegalStateException(s"not a service procedure: $other")
-    }
-  }
-
-  private val ServiceProcs = Set("run_decontaminate_sync", "update_benchmark",
-    "run_dedup_sync", "run_hash_dedup_sync", "run_span_dedup_sync",
-    "run_session_sync", "run_rollup_sync")
+  override val output: Seq[Attribute] =
+    cmd.columns.map(f => AttributeReference(f.name, f.dataType, f.nullable)())
 
   override def run(spark: SparkSession): Seq[Row] = {
-    if (ServiceProcs.contains(proc)) return runPipelineService(spark)
-    val t: GraftTable = GraftSqlParser.tableOf(spark, tableArg)
-    def one(s: String): Seq[Row] = Seq(Row(s))
-    proc match {
-      case "run_compaction" =>
-        val op = named("op").getOrElse("scheduleandexecute").toLowerCase
-        op match {
-          case "schedule" =>
-            one(Services.scheduleCompaction(t).getOrElse("nothing to compact"))
-          case "run" =>
-            val ts = named("instant").orElse(
-              t.timeline.pendingInstants()
-                .filter(_.action == graft.core.Action.Compaction)
-                .map(_.ts).headOption)
-              .getOrElse(throw new IllegalArgumentException(
-                "run_compaction(op => 'run') needs a scheduled plan or instant => '...'"))
-            one(Services.runCompaction(t, ts))
-          case "scheduleandexecute" =>
-            one(Services.compact(t).getOrElse("nothing to compact"))
-          case other => throw new IllegalArgumentException(
-            s"run_compaction op must be schedule|run|scheduleandexecute; got '$other'")
-        }
-      case "run_clustering" =>
-        val order = named("order").toSeq
-          .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-        val hilbert = named("hilbert").exists(_.toBoolean)
-        val inst =
-          if (hilbert) Services.cluster(t, zorderColumns = order, hilbert = true)
-          else if (order.nonEmpty) Services.cluster(t, zorderColumns = order)
-          else Services.cluster(t)
-        one(inst.getOrElse("no eligible file groups"))
-      case "run_clean" =>
-        val inst = named("retain_commits").map(n => Services.clean(t, n.toInt))
-          .getOrElse(Services.clean(t))
-        one(inst.getOrElse("nothing to clean"))
-      case "create_savepoint" =>
-        val ts = named("instant").orElse(
-          t.timeline.completedDataInstants().lastOption.map(_.ts))
-          .getOrElse(throw new IllegalArgumentException(
-            "create_savepoint: the table has no completed commits"))
-        one(Services.savepoint(t, ts))
-      case "delete_savepoint" =>
-        val ts = named("instant").getOrElse(throw new IllegalArgumentException(
-          "delete_savepoint needs instant => '...'"))
-        Services.deleteSavepoint(t, ts); one(ts)
-      case "rollback_to_savepoint" =>
-        // accepts the savepoint instant or the savepointed commit
-        val ts = named("instant").getOrElse(throw new IllegalArgumentException(
-          "rollback_to_savepoint needs instant => '...'"))
-        val target = t.timeline.completedInstants()
-          .filter(_.action == graft.core.Action.Savepoint)
-          .flatMap { i =>
-            val md = graft.core.Json.read[graft.core.SavepointMetadata](
-              t.timeline.readContent(i))
-            if (i.ts == ts || md.savepointedInstant == ts)
-              Some(md.savepointedInstant) else None
-          }.headOption.getOrElse(throw new IllegalArgumentException(
-            s"no savepoint for $ts"))
-        one(Services.restore(t, target))
-      case "rollback_to_instant" =>
-        val ts = named("instant").getOrElse(throw new IllegalArgumentException(
-          "rollback_to_instant needs instant => '...'"))
-        one(Services.rollback(t, ts))
-      case "show_commits" =>
-        val df = TableAdmin.commits(t)
-          .orderBy(org.apache.spark.sql.functions.col("instant").desc)
-        collectRows(named("limit").map(n => df.limit(n.toInt)).getOrElse(df))
-      case "show_savepoints" => collectRows(TableAdmin.savepoints(t))
-      case "show_cleans" => collectRows(TableAdmin.cleans(t))
-      case "show_rollbacks" => collectRows(TableAdmin.rollbacks(t))
-      case "show_compaction" =>
-        t.timeline.pendingInstants()
-          .filter(_.action == graft.core.Action.Compaction)
-          .map { i =>
-            val plan = graft.core.Json.read[graft.core.CompactionPlan](
-              t.timeline.readRequestedContent(i.ts, graft.core.Action.Compaction))
-            Row(i.ts, i.state, plan.operations.size.toLong)
-          }
-      case "show_fsview_all" => collectRows(TableAdmin.fileGroups(t))
-      case "export_snapshot" =>
-        val out = named("output").getOrElse(throw new IllegalArgumentException(
-          "export_snapshot needs output => '/path'"))
-        one(TableAdmin.exportSnapshot(t, out,
-          format = named("format").getOrElse("parquet"),
-          partitioned = named("partitioned").forall(_.toBoolean)))
-      case "symlink_manifest" =>
-        one(TableAdmin.generateSymlinkManifest(t).toString)
-      case "copy_snapshot" | "snapshot_copy" =>
-        // HoodieSnapshotCopier analog through SQL: a loadable copy of the
-        // latest snapshot's files + timeline at output (distributed copy,
-        // one task per file)
-        val out = named("output").getOrElse(throw new IllegalArgumentException(
-          "copy_snapshot needs output => '/path'"))
-        one(TableAdmin.copyTable(t, out).basePath.toString)
-      case "show_column_stats" =>
-        val df = named("column").map(c =>
-          TableAdmin.columnStats(t)
-            .filter(org.apache.spark.sql.functions.col("column") === c))
-          .getOrElse(TableAdmin.columnStats(t))
-        collectRows(df)
-      case "show_metrics" => collectRows(TableAdmin.metrics(t))
-      case "show_table_properties" =>
-        val c = t.cfg
-        (Seq(
-          Row("graft.table.name", c.tableName),
-          Row("graft.table.type", c.tableType),
-          Row("graft.table.recordkey.fields", c.recordKeyFields.mkString(",")),
-          Row("graft.table.partition.expr", c.partitionPathExpr),
-          Row("graft.table.precombine.field", c.precombineField)) ++
-          c.props.toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) })
-      case other => throw new IllegalArgumentException(
-        s"unknown procedure '$other'; supported: ${Procedures.toSeq.sorted.mkString(", ")}")
+    // the first of repeated names wins
+    val named = args.reverseIterator.collect { case Arg(Some(n), v) => n -> v }.toMap
+    def tableArg: String =
+      named.get("table").orElse(args.collectFirst { case Arg(None, v) => v })
+        .getOrElse(throw new IllegalArgumentException(
+          s"CALL ${cmd.call.head} needs a table argument: table => 'name'"))
+    // a `/`-bearing value loads by PATH (pipeline-service state tables are
+    // rarely cataloged), anything else resolves like a SQL name
+    val target = new AdminTarget(() => GraftSqlParser.tableOf(spark, tableArg),
+      v => if (v.contains("/")) GraftTable.load(spark, v) else GraftSqlParser.tableOf(spark, v))
+    cmd.run(AdminArgs(spark, named, target, n => s"$n => '...'")) match {
+      case CliFrame(df) => df.collect().toSeq
+      case t: CliText => Seq(Row(t.result))
     }
   }
 }

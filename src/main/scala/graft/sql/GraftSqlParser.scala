@@ -13,7 +13,7 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.spark.GraftRelation
-import graft.table.{GraftTable, IncrementalSync, MaterializedView}
+import graft.table.{AdminCommands, GraftTable, IncrementalSync, MaterializedView}
 import graft.table.MaterializedView.ViewAgg
 
 /** SQL statements Spark has no grammar for — materialized views — parsed
@@ -55,11 +55,11 @@ final class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
         Option(where).map(_.trim).filter(_.nonEmpty))
     case VacuumRe(name, retain, dry) =>
       GraftVacuumCommand(name, Option(retain).map(_.toInt), dry != null)
-    case HistoryRe(name) => GraftHistoryCommand(name)
+    case HistoryRe(name) => GraftCallCommand(AdminCommands.ShowCommits, tableArg(name))
     case DetailRe(name) if isGraftName(session, name) =>
       GraftDescribeDetailCommand(name)
     case ShowPartsRe(name) if isGraftName(session, name) =>
-      GraftShowPartitionsCommand(name)
+      GraftCallCommand(AdminCommands.ShowPartitions, tableArg(name))
     case ShowViewsRe(name) => ShowMaterializedViewsCommand(name)
     // ALTER TABLE is standard grammar Spark itself can parse (v2
     // constraints landed in Spark 4) — intercept only names that resolve
@@ -70,9 +70,8 @@ final class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
       GraftDropConstraintCommand(name, cname)
     // stored-procedure admin surface; unknown names fall through to
     // Spark's own CALL handling (if any), so only graft procedures bind
-    case CallRe(proc, rawArgs)
-        if CallProcedures.Procedures.contains(proc.toLowerCase) =>
-      GraftCallCommand(proc.toLowerCase, CallProcedures.parseArgs(rawArgs))
+    case CallRe(proc, rawArgs) if AdminCommands.ByCall.contains(proc.toLowerCase) =>
+      GraftCallCommand(AdminCommands.ByCall(proc.toLowerCase), CallProcedures.parseArgs(rawArgs))
     case _ =>
       val plan = delegate.parsePlan(sqlText)
       // TIMESTAMP/VERSION AS OF over a graft name substitutes the as-of
@@ -140,6 +139,8 @@ object GraftSqlParser {
   // `CALL proc(args)` with an optional `system.`/`graft.` qualifier
   private val CallRe =
     """(?is)\s*CALL\s+(?:(?:system|graft)\.)?(\w+)\s*\((.*)\)\s*""".r
+
+  private def tableArg(name: String) = Seq(CallProcedures.Arg(Some("table"), name))
 
   /** Whether a dotted SQL name resolves to a graft table. */
   private[sql] def isGraftName(spark: SparkSession, name: String): Boolean =
@@ -397,31 +398,6 @@ final case class GraftVacuumCommand(name: String, retain: Option[Int],
   }
 }
 
-/** `DESCRIBE HISTORY name` — per-commit write statistics (instant,
-  * action, operation, files/records/deletes/bytes, replaced groups,
-  * duration), newest first.
-  */
-final case class GraftHistoryCommand(name: String) extends LeafRunnableCommand {
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.{LongType, StringType}
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] = Seq(
-    AttributeReference("instant", StringType)(),
-    AttributeReference("action", StringType)(),
-    AttributeReference("operation", StringType)(),
-    AttributeReference("num_files", LongType)(),
-    AttributeReference("total_records", LongType)(),
-    AttributeReference("total_deletes", LongType)(),
-    AttributeReference("total_bytes", LongType)(),
-    AttributeReference("replaced_groups", LongType)(),
-    AttributeReference("duration_ms", LongType)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val t = GraftSqlParser.tableOf(spark, name)
-    graft.table.TableAdmin.commits(t)
-      .orderBy(org.apache.spark.sql.functions.col("instant").desc)
-      .collect().toSeq
-  }
-}
-
 /** `SHOW MATERIALIZED VIEWS ON name` — the auto-sync registrations on a
   * graft table, with each view's checkpoint and freshness.
   */
@@ -473,24 +449,6 @@ final case class GraftDescribeDetailCommand(name: String) extends LeafRunnableCo
       t.cfg.precombineField, slices.size.toLong, bytes,
       slices.map(_.partitionPath).distinct.size.toLong,
       commits.size.toLong, commits.lastOption.map(_.ts).getOrElse("")))
-  }
-}
-
-/** `SHOW PARTITIONS name` over a graft name — live partitions with
-  * file-group counts and sizes (TableAdmin.partitionStats as SQL).
-  */
-final case class GraftShowPartitionsCommand(name: String) extends LeafRunnableCommand {
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
-  import org.apache.spark.sql.types.{LongType, StringType}
-  override val output: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] = Seq(
-    AttributeReference("partition", StringType)(),
-    AttributeReference("num_file_groups", LongType)(),
-    AttributeReference("total_bytes", LongType)(),
-    AttributeReference("base_records", LongType)())
-  override def run(spark: SparkSession): Seq[Row] = {
-    val t = GraftSqlParser.tableOf(spark, name)
-    graft.table.TableAdmin.partitionStats(t)
-      .orderBy("partition").collect().toSeq
   }
 }
 

@@ -2,22 +2,26 @@ package graft.table
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.core.{TableConfig, TableType}
-
-/** Result of one CLI command: a tabular view or a status line. */
+/** Result of one admin command: a tabular view or a status line. */
 sealed trait CliResult {
   /** The frame, for commands that return one. */
   def frame: DataFrame = this match {
     case CliFrame(df) => df
-    case CliText(s) => throw new IllegalStateException(s"command returned text: $s")
+    case t: CliText => throw new IllegalStateException(s"command returned text: ${t.value}")
   }
   def text: String = this match {
-    case CliText(s) => s
+    case t: CliText => t.value
     case CliFrame(_) => throw new IllegalStateException("command returned a frame")
   }
 }
 final case class CliFrame(df: DataFrame) extends CliResult
-final case class CliText(value: String) extends CliResult
+/** A status line. `result` is its short form (an instant, a count or a
+  * no-op note), which `CALL` returns as its one `result` row.
+  */
+final case class CliText(value: String, result: String) extends CliResult
+object CliText {
+  def apply(value: String): CliText = CliText(value, value)
+}
 
 /** The reference's interactive admin shell re-expressed as a command
   * interpreter over the library (reference hudi-cli/.../commands/
@@ -28,387 +32,44 @@ final case class CliText(value: String) extends CliResult
   * `stats filesizes`). Command grammar matches the reference's shell
   * keys (`<noun> <verb> --opt value …`); results come back as DataFrames
   * (the reference renders the same tables as ASCII), so output composes
-  * with Spark instead of a terminal.
-  *
-  * Driver-side by design: every command is commit-metadata planning or a
-  * delegation to a distributed service — the CLI itself never touches
-  * data files.
+  * with Spark instead of a terminal. The commands are the
+  * [[AdminCommands]] entries with a CLI key; this class only parses.
   */
 final class GraftCli(spark: SparkSession) {
 
-  private var connected: Option[GraftTable] = None
+  private val target = new AdminTarget(
+    () => throw new IllegalStateException(
+      "no table connected — run: connect --path <basePath>"),
+    GraftTable.load(spark, _))
 
   /** The connected table; commands besides connect/create require one. */
-  def table: GraftTable = connected.getOrElse(throw new IllegalStateException(
-    "no table connected — run: connect --path <basePath>"))
+  def table: GraftTable = target.table
 
-  def run(command: String): CliResult = {
+  def run(command: String): CliResult = GraftCli.run(spark, target, command)
+}
+
+object GraftCli {
+
+  /** `--key value`, the value optionally single-quoted; a `--key`
+    * followed by another `--key` or by the end is a bare flag.
+    */
+  private val Opt = """--(\S+)(?:\s+('[^']*'|(?!--)\S+))?""".r
+
+  /** One command line against `target`: the longest command key that
+    * prefixes the normalised line, then its options under their argument
+    * names (a bare flag reads "true").
+    */
+  private[table] def run(spark: SparkSession, target: AdminTarget,
+      command: String): CliResult = {
     val norm = command.trim.replaceAll("\\s+", " ")
-    val (key, handler) = Commands.find { case (k, _) =>
+    val (key, cmd) = AdminCommands.ByCli.find { case (k, _) =>
       norm == k || norm.startsWith(k + " ")
     }.getOrElse(throw new IllegalArgumentException(
-      s"unknown command '$norm'; known: ${Commands.map(_._1).mkString(", ")}"))
-    handler(parseOpts(norm.drop(key.length).trim))
-  }
-
-  /** `--key value …` option list; values may be single-quoted. */
-  private def parseOpts(rest: String): Map[String, String] = {
-    val Opt = """--(\S+)\s+('[^']*'|\S+)""".r
-    Opt.findAllMatchIn(rest).map { m =>
-      m.group(1) -> m.group(2).stripPrefix("'").stripSuffix("'")
+      s"unknown command '$norm'; known: ${AdminCommands.ByCli.map(_._1).mkString(", ")}"))
+    val opts = Opt.findAllMatchIn(norm.drop(key.length)).map { m =>
+      cmd.fromCli(m.group(1)) ->
+        Option(m.group(2)).fold("true")(_.stripPrefix("'").stripSuffix("'"))
     }.toMap
+    cmd.run(AdminArgs(spark, opts, target, n => s"--${cmd.cliSpelling(n)}"))
   }
-
-  private def req(opts: Map[String, String], key: String): String =
-    opts.getOrElse(key, throw new IllegalArgumentException(s"--$key is required"))
-
-  // Longest-first so "compaction showarchived" wins over "compaction show".
-  private lazy val Commands: Seq[(String, Map[String, String] => CliResult)] = Seq[
-      (String, Map[String, String] => CliResult)](
-    "connect" -> { o =>
-      connected = Some(GraftTable.load(spark, req(o, "path")))
-      CliText(s"Metadata for table ${table.cfg.tableName} loaded")
-    },
-    "create" -> { o =>
-      connected = Some(GraftTable.create(spark, req(o, "path"), TableConfig(
-        req(o, "tableName"),
-        o.getOrElse("tableType", TableType.CopyOnWrite),
-        req(o, "recordKey").split(",").toSeq,
-        o.getOrElse("partitionPath", ""),
-        o.getOrElse("precombine", ""))))
-      CliText(s"Table ${table.cfg.tableName} created")
-    },
-    "desc" -> { _ =>
-      import spark.implicits._
-      val c = table.cfg
-      CliFrame(Seq(
-        "basePath" -> table.basePath.toString,
-        "tableName" -> c.tableName,
-        "tableType" -> c.tableType,
-        "recordKeyFields" -> c.recordKeyFields.mkString(","),
-        "partitionPathExpr" -> c.partitionPathExpr,
-        "precombineField" -> c.precombineField,
-      ).toDF("property", "value"))
-    },
-    "fetch table schema" -> { _ =>
-      CliText(table.latestSchema.map(_.json).getOrElse(""))
-    },
-    "commits showarchived" -> { _ => CliFrame(TableAdmin.archivedCommits(table)) },
-    "commits show" -> { _ => CliFrame(TableAdmin.commits(table)) },
-    "commits sync" -> { o =>
-      // reference CommitsCommand `commits sync`: catch a lagging copy up
-      // from a source table — here one checkpointed incremental pull
-      val src = GraftTable.load(spark, req(o, "path"))
-      CliText(graft.streaming.Streaming.syncOnce(src, table)
-        .map(ts => s"Synced as $ts").getOrElse("Already in sync"))
-    },
-    "commits compare" -> { o =>
-      CliFrame(TableAdmin.compareCommits(table,
-        GraftTable.load(spark, req(o, "path"))))
-    },
-    "commit showfiles" -> { o =>
-      CliFrame(TableAdmin.commitFiles(table, req(o, "commit")))
-    },
-    "commit showpartitions" -> { o =>
-      CliFrame(TableAdmin.commitPartitions(table, req(o, "commit")))
-    },
-    "record lookup" -> { o =>
-      // point reads from the shell: --keys k1,k2,... through the
-      // record-index probe (or the pushed-down key filter without it)
-      CliFrame(table.lookup(req(o, "keys").split(',').map(_.trim).toSeq))
-    },
-    "record lookupby" -> { o =>
-      // non-key point reads: --column c --values v1,v2,... through the
-      // secondary-index probe (or a filtered snapshot without one)
-      CliFrame(table.lookupBy(req(o, "column"),
-        req(o, "values").split(',').map(_.trim).toSeq))
-    },
-    "constraints show" -> { _ =>
-      // declared CHECK constraints (ALTER TABLE ADD CONSTRAINT analog)
-      val s2 = spark
-      import s2.implicits._
-      CliFrame(table.checkConstraints.toDF("name", "check_expr"))
-    },
-    "constraints add" -> { o =>
-      val t2 = table.addCheckConstraint(req(o, "name"), req(o, "expr"))
-      connected = Some(t2)
-      CliText(s"added CHECK constraint ${req(o, "name")}")
-    },
-    "constraints drop" -> { o =>
-      val t2 = table.dropCheckConstraint(req(o, "name"))
-      connected = Some(t2)
-      CliText(s"dropped CHECK constraint ${req(o, "name")}")
-    },
-    "show logfile metadata" -> { _ => CliFrame(TableAdmin.logFiles(table)) },
-    "metrics show" -> { _ => CliFrame(TableAdmin.metrics(table)) },
-    "metadata column-stats" -> { _ => CliFrame(TableAdmin.columnStats(table)) },
-    "catalog sync" -> { o =>
-      // HiveSyncTool-as-a-command analog: publish/refresh this table in
-      // the session catalog as `db.table`
-      val db = req(o, "db")
-      val name = o.getOrElse("table", table.cfg.tableName)
-      graft.sql.CatalogSync.sync(spark, table.basePath.toString, db, name)
-      CliText(s"Synced ${table.basePath} as $db.$name")
-    },
-    "buckets rescale" -> { o =>
-      // BUCKET-layout rescale from the shell: --num <target count>; the
-      // shell reconnects to the post-flip handle
-      val n = req(o, "num").toInt
-      val rescaled = table.rescaleBuckets(n)
-      connected = Some(rescaled)
-      CliText(s"Rescaled ${rescaled.cfg.tableName} to $n buckets")
-    },
-    "quality constraints" -> { o =>
-      // table-level data-quality report: key uniqueness + key/precombine
-      // non-null always; --notnull c1,c2 / --inset col:v1|v2 /
-      // --range col:lo..hi add rules. One aggregation pass (Constraints).
-      import graft.pipeline.Constraints
-      import graft.pipeline.Constraints._
-      val base: Seq[Constraint] =
-        (if (table.cfg.recordKeyFields.nonEmpty)
-           Seq(Unique(table.cfg.recordKeyFields)) ++
-             table.cfg.recordKeyFields.map(NotNull(_))
-         else Seq.empty) ++
-          Option(table.cfg.precombineField).filter(_.nonEmpty).map(NotNull(_))
-      val extra: Seq[Constraint] =
-        o.get("notnull").toSeq.flatMap(_.split(',')).map(c => NotNull(c.trim)) ++
-          o.get("inset").toSeq.map { spec =>
-            val Array(c, vs) = spec.split(":", 2)
-            InSet(c, vs.split('|').toSeq)
-          } ++
-          o.get("range").toSeq.map { spec =>
-            val Array(c, b) = spec.split(":", 2)
-            val Array(lo, hi) = b.split("\\.\\.", 2)
-            InRange(c, lo.toDouble, hi.toDouble)
-          }
-      val snap = graft.read.Readers.snapshot(table)
-        .drop(graft.core.MetaCols.All: _*)
-      CliFrame(Constraints.check(snap, base ++ extra))
-    },
-    "buckets split" -> { o =>
-      // CONSISTENT-engine split from the shell: --partition p --fileId
-      // bktd<d>v<v>, or --auto [--bytes n] for the hot-bucket sweep
-      if (o.contains("auto")) {
-        val split = Services.splitHotBuckets(table,
-          o.get("bytes").map(_.toLong))
-        CliText(if (split.isEmpty) "No buckets over the split threshold"
-          else split.map { case (p, f) => s"$p/$f" }
-            .mkString("Split ", ", ", ""))
-      } else {
-        val ts = table.splitBucket(req(o, "partition"), req(o, "fileId"))
-        CliText(s"Split ${o("fileId")} in ${o("partition")} at $ts")
-      }
-    },
-    "buckets merge" -> { o =>
-      // shrink direction: --partition p --parent bktd<d>v<v>, or --auto
-      // [--bytes n] to merge all cold sibling pairs
-      if (o.contains("auto")) {
-        val merged = Services.mergeColdBuckets(table,
-          o.get("bytes").map(_.toLong))
-        CliText(if (merged.isEmpty) "No sibling pairs under the merge threshold"
-          else merged.map { case (p, f) => s"$p/$f" }
-            .mkString("Merged into ", ", ", ""))
-      } else {
-        val ts = table.mergeBuckets(req(o, "partition"), req(o, "parent"))
-        CliText(s"Merged children of ${o("parent")} in ${o("partition")} at $ts")
-      }
-    },
-    "partitions evolve" -> { o =>
-      // partition-layout evolution from the shell: --expr '<sql expr>'
-      val evolved = table.alterPartitionExpr(req(o, "expr"))
-      connected = Some(evolved)
-      CliText(s"Partition layout of ${evolved.cfg.tableName} evolved to " +
-        s"'${evolved.cfg.partitionPathExpr}'")
-    },
-    "partitions expire" -> { o =>
-      // partition TTL from the shell: --keepLast n | --before <instant>
-      val expired = (o.get("keepLast"), o.get("before")) match {
-        case (Some(n), None) => Services.expirePartitions(table, keepLast = n.toInt)
-        case (None, Some(ts)) =>
-          Services.expirePartitions(table, lastWriteBefore = Some(ts))
-        case _ => throw new IllegalArgumentException(
-          "partitions expire needs exactly one of --keepLast / --before")
-      }
-      CliText(if (expired.isEmpty) "Nothing to expire"
-        else s"Expired ${expired.size} partition(s): ${expired.mkString(", ")}")
-    },
-    "records expire" -> { o =>
-      // record-level TTL from the shell: --column <ts col> --keepDays n
-      val ts = Services.expireRecords(table, req(o, "column"),
-        req(o, "keepDays").toInt)
-      CliText(ts.map(t => s"Expired as $t").getOrElse("Nothing to expire"))
-    },
-    "metadata list-partitions" -> { _ =>
-      import spark.implicits._
-      CliFrame(table.view.fileSlices(None).map(_.partitionPath)
-        .distinct.sorted.toDF("partition"))
-    },
-    "repair deduplicate" -> { _ =>
-      // keep the precombine-winner (falling back to latest commit) per
-      // (key, partition); reference RepairsCommand `repair deduplicate`
-      import org.apache.spark.sql.expressions.Window
-      import org.apache.spark.sql.functions.{col, desc, row_number}
-      val orderCol =
-        if (table.cfg.precombineField.nonEmpty) table.cfg.precombineField
-        else graft.core.MetaCols.CommitTime
-      val done = Services.dedupe(table, df => df
-        .withColumn("_cli_rank", row_number().over(
-          Window.partitionBy(col(graft.core.MetaCols.RecordKey),
-            col(graft.core.MetaCols.PartitionPath))
-            .orderBy(desc(orderCol), desc(graft.core.MetaCols.CommitTime))))
-        .filter(col("_cli_rank") === 1).drop("_cli_rank"))
-      CliText(done.map(ts => s"Deduplicated as $ts").getOrElse("No duplicates found"))
-    },
-    "commit rollback" -> { o =>
-      CliText(s"Commit ${req(o, "commit")} rolled back as " +
-        Services.rollback(table, req(o, "commit")))
-    },
-    "clean showpartitions" -> { _ => CliFrame(TableAdmin.partitionStats(table)) },
-    "cleans run" -> { o =>
-      val done = o.get("retain") match {
-        case Some(n) => Services.clean(table, n.toInt)
-        case None => Services.clean(table)
-      }
-      CliText(done.map(ts => s"Cleaned as $ts").getOrElse("Nothing to clean"))
-    },
-    "cleans show" -> { _ => CliFrame(TableAdmin.cleans(table)) },
-    // dry run: the files a `cleans run` would reclaim right now
-    "cleans plan" -> { o =>
-      val sp = table.spark
-      import sp.implicits._
-      val policy = Services.CleanPolicy.KeepLatestCommits(
-        o.get("retain").map(_.toInt)
-          .getOrElse(graft.core.ConfigKeys.DefaultCleanerRetained))
-      CliFrame(Services.planClean(table, policy)._1
-        .map(f => (f.partitionPath, f.relPath, f.sizeBytes, f.isDelta))
-        .toDF("partition", "path", "bytes", "is_delta"))
-    },
-    "compactions show all" -> { _ =>
-      import org.apache.spark.sql.functions.col
-      CliFrame(TableAdmin.timeline(table).filter(col("action") === "compaction"))
-    },
-    "compaction schedule" -> { _ =>
-      CliText(Services.scheduleCompaction(table)
-        .map(ts => s"Compaction scheduled as $ts").getOrElse("Nothing to compact"))
-    },
-    "compaction run" -> { o =>
-      CliText(s"Compacted as ${Services.runCompaction(table, req(o, "instant"))}")
-    },
-    "compaction validate" -> { o =>
-      CliFrame(Services.validateCompaction(table, req(o, "instant")))
-    },
-    "compaction unschedule" -> { o =>
-      Services.unscheduleCompaction(table, req(o, "instant"))
-      CliText(s"Compaction ${req(o, "instant")} unscheduled")
-    },
-    "clustering run" -> { o =>
-      val sortCols = o.get("sortColumns").map(_.split(",").toSeq).getOrElse(Seq.empty)
-      val curveCols = o.get("zorderColumns").map(_.split(",").toSeq).getOrElse(Seq.empty)
-      CliText(Services.cluster(table, sortColumns = sortCols,
-        zorderColumns = curveCols,
-        hilbert = o.get("curve").contains("hilbert"))
-        .map(ts => s"Clustered as $ts").getOrElse("Nothing to cluster"))
-    },
-    "bootstrap run" -> { o =>
-      // reference BootstrapCommand `bootstrap run --srcPath … --basePath …`
-      val srcDir = new org.apache.hadoop.fs.Path(req(o, "srcPath"))
-      val files = graft.core.Storage.walk(srcDir)
-        .filter(st => st.isFile &&
-          st.getPath.getName.endsWith(".parquet") &&
-          !st.getPath.getName.startsWith("_"))
-        .map(_.getPath.toString).sorted
-      connected = Some(GraftTable.bootstrap(spark, req(o, "path"), TableConfig(
-        req(o, "tableName"),
-        o.getOrElse("tableType", TableType.CopyOnWrite),
-        req(o, "recordKey").split(",").toSeq,
-        o.getOrElse("partitionPath", ""),
-        o.getOrElse("precombine", "")), files,
-        mode = o.getOrElse("mode", GraftTable.BootstrapMode.MetadataOnly)))
-      CliText(s"Bootstrapped ${files.size} files into ${table.cfg.tableName}")
-    },
-    "bootstrap index showmapping" -> { _ =>
-      import org.apache.spark.sql.functions.col
-      val bootTs = TableAdmin.commits(table)
-        .filter(col("operation") === "bootstrap")
-        .orderBy(col("instant")).collect().headOption
-        .map(_.getString(0))
-        .getOrElse(throw new IllegalStateException("table was not bootstrapped"))
-      CliFrame(TableAdmin.commitFiles(table, bootTs)
-        .select(col("file_id"), col("path").as("source_file"), col("num_writes")))
-    },
-    "savepoints show" -> { _ => CliFrame(TableAdmin.savepoints(table)) },
-    "savepoint create" -> { o =>
-      CliText(s"Savepoint created as ${Services.savepoint(table, req(o, "commit"))}")
-    },
-    "savepoint delete" -> { o =>
-      Services.deleteSavepoint(table, req(o, "commit"))
-      CliText(s"Savepoint for ${req(o, "commit")} deleted")
-    },
-    "savepoint rollback" -> { o =>
-      CliText(s"Restored to ${req(o, "savepoint")} as " +
-        Services.restore(table, req(o, "savepoint")))
-    },
-    "show rollbacks" -> { _ => CliFrame(TableAdmin.rollbacks(table)) },
-    "show changes" -> { o =>
-      // CDC read from the shell: before/after change images for
-      // (--since, --until]; `--until` defaults to the table head
-      CliFrame(graft.read.Readers.incrementalChanges(
-        table, req(o, "since"), o.get("until")))
-    },
-    "show fsview all" -> { _ => CliFrame(TableAdmin.fileGroups(table)) },
-    "stats filesizes" -> { _ => CliFrame(TableAdmin.fileSizes(table)) },
-    "stats wa" -> { _ =>
-      // write amplification per commit (reference StatsCommand `stats wa`):
-      // upserted/total written records — 1.0 means every written record
-      // was an actual change; small ratios flag rewrite-heavy layouts
-      import org.apache.spark.sql.functions.{col, round => rnd, sum => fsum}
-      val c = TableAdmin.commits(table)
-      val perCommit = c.select(col("instant"), col("operation"),
-        col("total_records"), col("total_deletes"),
-        rnd(col("total_bytes") / (1024 * 1024), 2).as("written_mb"))
-      CliFrame(perCommit.unionByName(
-        c.agg(fsum(col("total_records")).as("total_records"),
-          fsum(col("total_deletes")).as("total_deletes"),
-          rnd(fsum(col("total_bytes")) / (1024 * 1024), 2).as("written_mb"))
-          .selectExpr("'TOTAL' AS instant", "'' AS operation",
-            "total_records", "total_deletes", "written_mb")))
-    },
-    "export instants" -> { _ => CliFrame(TableAdmin.timeline(table)) },
-    "pending show" -> { _ => CliFrame(TableAdmin.pending(table)) },
-    // reference TempViewCommand (`temp_query`/`temps_show`/`temp_delete`):
-    // register any frame-returning command's result as a session temp view,
-    // then compose it with plain Spark SQL from the same shell
-    "temp view" -> { o =>
-      val name = req(o, "name")
-      run(req(o, "cmd")) match {
-        case CliFrame(df) =>
-          df.createOrReplaceTempView(name)
-          CliText(s"Registered temp view $name")
-        case CliText(t) => throw new IllegalArgumentException(
-          s"command returned text, not a frame: $t")
-      }
-    },
-    // materialized views registered on the connected table
-    "views show" -> { _ =>
-      val vs = MaterializedView.registered(table)
-      CliFrame(spark.createDataFrame(
-        spark.sparkContext.parallelize(vs.map(org.apache.spark.sql.Row(_)), 1),
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("view_path",
-            org.apache.spark.sql.types.StringType)))))
-    },
-    "views refresh" -> { o =>
-      val v = GraftTable.load(spark, req(o, "path"))
-      MaterializedView.sync(v, table) match {
-        case Some(ts) => CliText(s"Refreshed ${v.basePath} at $ts")
-        case None => CliText(s"${v.basePath} already up to date")
-      }
-    },
-    "temp query" -> { o => CliFrame(spark.sql(req(o, "sql"))) },
-    "temp delete" -> { o =>
-      val name = req(o, "name")
-      val dropped = spark.catalog.dropTempView(name)
-      CliText(if (dropped) s"Dropped temp view $name" else s"No temp view $name")
-    },
-  ).sortBy(-_._1.length)
 }

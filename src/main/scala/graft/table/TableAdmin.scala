@@ -1,7 +1,10 @@
 package graft.table
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 import graft.core._
 import graft.core.Storage.PathOps
@@ -11,24 +14,37 @@ import graft.core.Storage.PathOps
   * StatsCommand, FileSystemViewCommand, TimelineCommand, CompactionCommand).
   * Every view is a small DataFrame derived from commit metadata, so admin
   * queries never list or scan data files.
+  *
+  * A view that SQL returns declares its columns here, once (`...Columns`):
+  * the view builds its frame with that schema, and `CALL` (through
+  * [[AdminCommands]]) declares it as the statement's output.
   */
 object TableAdmin {
 
+  private def columns(cols: (String, DataType)*): StructType =
+    StructType(cols.map { case (n, d) => StructField(n, d) })
+
+  private def frame(t: GraftTable, cols: StructType)(rows: Seq[Row]): DataFrame =
+    t.spark.createDataFrame(rows.asJava, cols)
+
+  val CommitColumns: StructType = columns("instant" -> StringType,
+    "action" -> StringType, "operation" -> StringType, "num_files" -> LongType,
+    "total_records" -> LongType, "total_deletes" -> LongType,
+    "total_bytes" -> LongType, "replaced_groups" -> LongType,
+    "duration_ms" -> LongType)
+
   /** One row per completed data commit: `commits show` analog. */
-  def commits(t: GraftTable): DataFrame = {
-    import t.spark.implicits._
+  def commits(t: GraftTable): DataFrame = frame(t, CommitColumns)(
     t.timeline.completedDataInstants().map { i =>
       val md = CommitMetadata.fromJson(t.timeline.readContent(i))
-      (i.ts, i.action, md.operationType,
+      Row(i.ts, i.action, md.operationType,
         md.writeStats.size.toLong,
         md.writeStats.map(_.numWrites).sum,
         md.writeStats.map(_.numDeletes).sum,
         md.writeStats.map(_.fileSizeInBytes).sum,
         md.replacedFileIds.values.map(_.size).sum.toLong,
         md.extraMetadata.get(GraftTable.DurationMsKey).map(_.toLong).getOrElse(-1L))
-    }.toDF("instant", "action", "operation", "num_files", "total_records",
-      "total_deletes", "total_bytes", "replaced_groups", "duration_ms")
-  }
+    })
 
   /** Per-file write stats of ONE commit: `commit showfiles` analog
     * (reference CommitsCommand.java showCommitFiles).
@@ -87,30 +103,34 @@ object TableAdmin {
       .toDF("instant", "action", "state")
   }
 
+  val FileGroupColumns: StructType = columns("partition" -> StringType,
+    "file_id" -> StringType, "base_instant" -> StringType,
+    "base_bytes" -> LongType, "base_records" -> LongType,
+    "num_deltas" -> LongType, "delta_bytes" -> LongType)
+
   /** Live file groups with slice composition: `show fsview all` analog. */
-  def fileGroups(t: GraftTable): DataFrame = {
-    import t.spark.implicits._
+  def fileGroups(t: GraftTable): DataFrame = frame(t, FileGroupColumns)(
     t.view.fileSlices(None).map { s =>
-      (s.partitionPath, s.fileId,
+      Row(s.partitionPath, s.fileId,
         s.baseFile.map(_.instant).getOrElse(""),
         s.baseFile.map(_.sizeBytes).getOrElse(0L),
         s.baseFile.map(_.numRecords).getOrElse(0L),
         s.deltaFiles.size.toLong, s.totalDeltaBytes)
-    }.toDF("partition", "file_id", "base_instant", "base_bytes",
-      "base_records", "num_deltas", "delta_bytes")
-  }
+    })
+
+  val PartitionColumns: StructType = columns("partition" -> StringType,
+    "num_file_groups" -> LongType, "total_bytes" -> LongType,
+    "base_records" -> LongType)
 
   /** Per-partition rollup: `stats` analog. */
-  def partitionStats(t: GraftTable): DataFrame = {
-    import t.spark.implicits._
+  def partitionStats(t: GraftTable): DataFrame = frame(t, PartitionColumns)(
     t.view.fileSlices(None)
       .groupBy(_.partitionPath)
       .map { case (p, ss) =>
-        (p, ss.size.toLong,
+        Row(p, ss.size.toLong,
           ss.flatMap(_.baseFile).map(_.sizeBytes).sum + ss.map(_.totalDeltaBytes).sum,
           ss.flatMap(_.baseFile).map(_.numRecords).sum)
-      }.toSeq.toDF("partition", "num_file_groups", "total_bytes", "base_records")
-  }
+      }.toSeq)
 
   /** Archived commits (reference ArchivedCommitsCommand): instants moved
     * off the active timeline, read back from the archive log.
@@ -124,43 +144,76 @@ object TableAdmin {
     }.toDF("instant", "action", "operation")
   }
 
+  val CleanColumns: StructType = columns("instant" -> StringType,
+    "earliest_retained" -> StringType, "files_deleted" -> LongType)
+
   /** Clean history (reference CleansCommand): one row per clean run. */
-  def cleans(t: GraftTable): DataFrame = {
-    import t.spark.implicits._
+  def cleans(t: GraftTable): DataFrame = frame(t, CleanColumns)(
     t.timeline.completedInstants().filter(_.action == Action.Clean).map { i =>
       val md = Json.read[CleanMetadata](t.timeline.readContent(i))
-      (i.ts, md.earliestRetainedInstant, md.deletedPaths.size.toLong)
-    }.toDF("instant", "earliest_retained", "files_deleted")
-  }
+      Row(i.ts, md.earliestRetainedInstant, md.deletedPaths.size.toLong)
+    })
+
+  val RollbackColumns: StructType = columns("instant" -> StringType,
+    "action" -> StringType, "rolled_back" -> StringType,
+    "files_deleted" -> LongType)
 
   /** Rollback history (reference RollbacksCommand). */
-  def rollbacks(t: GraftTable): DataFrame = {
-    import t.spark.implicits._
+  def rollbacks(t: GraftTable): DataFrame = frame(t, RollbackColumns)(
     t.timeline.completedInstants()
       .filter(i => i.action == Action.Rollback || i.action == Action.Restore)
       .map { i =>
         val md = Json.read[RollbackMetadata](t.timeline.readContent(i))
-        (i.ts, i.action, md.rolledBackInstants.mkString(","), md.deletedPaths.size.toLong)
-      }.toDF("instant", "action", "rolled_back", "files_deleted")
-  }
+        Row(i.ts, i.action, md.rolledBackInstants.mkString(","), md.deletedPaths.size.toLong)
+      })
+
+  val SavepointColumns: StructType = columns("instant" -> StringType,
+    "savepointed_instant" -> StringType)
 
   /** Savepoints (reference SavepointsCommand). */
-  def savepoints(t: GraftTable): DataFrame = {
-    import t.spark.implicits._
+  def savepoints(t: GraftTable): DataFrame = frame(t, SavepointColumns)(
     t.timeline.completedInstants().filter(_.action == Action.Savepoint).map { i =>
-      (i.ts, Json.read[SavepointMetadata](t.timeline.readContent(i)).savepointedInstant)
-    }.toDF("instant", "savepointed_instant")
+      Row(i.ts, Json.read[SavepointMetadata](t.timeline.readContent(i)).savepointedInstant)
+    })
+
+  val PendingCompactionColumns: StructType = columns("instant" -> StringType,
+    "state" -> StringType, "file_groups" -> LongType)
+
+  /** Pending compaction plans with their file-group counts (reference
+    * CompactionCommand `compactions show all`, pending part).
+    */
+  def pendingCompactions(t: GraftTable): DataFrame = frame(t, PendingCompactionColumns)(
+    t.timeline.pendingInstants().filter(_.action == Action.Compaction).map { i =>
+      val plan = Json.read[CompactionPlan](
+        t.timeline.readRequestedContent(i.ts, Action.Compaction))
+      Row(i.ts, i.state, plan.operations.size.toLong)
+    })
+
+  val PropertyColumns: StructType = columns("key" -> StringType, "value" -> StringType)
+
+  /** Table identity and layout config under their property keys, then
+    * every other table property, sorted by key.
+    */
+  def properties(t: GraftTable): DataFrame = frame(t, PropertyColumns) {
+    val c = t.cfg
+    Seq(
+      Row("graft.table.name", c.tableName),
+      Row("graft.table.type", c.tableType),
+      Row("graft.table.recordkey.fields", c.recordKeyFields.mkString(",")),
+      Row("graft.table.partition.expr", c.partitionPathExpr),
+      Row("graft.table.precombine.field", c.precombineField)) ++
+      c.props.toSeq.sortBy(_._1).map { case (k, v) => Row(k, v) }
   }
+
+  val MetricColumns: StructType = columns("name" -> StringType, "value" -> LongType)
 
   /** Metrics snapshot as a DataFrame (reference `metrics` via JMX/console
     * reporters; here also queryable). Values come from [[Metrics.refresh]],
     * i.e. a durable fold of commit metadata — identical after a driver
     * restart.
     */
-  def metrics(t: GraftTable): DataFrame = {
-    import t.spark.implicits._
-    Metrics.refresh(t).snapshot.toDF("name", "value")
-  }
+  def metrics(t: GraftTable): DataFrame = frame(t, MetricColumns)(
+    Metrics.refresh(t).snapshot.map { case (n, v) => Row(n, v) })
 
   /** Per-file column statistics of the LIVE file set — the data-skipping
     * index made queryable (the reference's metadata-table column_stats
@@ -168,18 +221,20 @@ object TableAdmin {
     * with the recorded min/max/null-count. A skipped predicate can be
     * debugged by eyeballing exactly what the pruner sees.
     */
-  def columnStats(t: GraftTable): DataFrame = {
-    import t.spark.implicits._
+  val ColumnStatColumns: StructType = columns("partition" -> StringType,
+    "file_id" -> StringType, "path" -> StringType, "column" -> StringType,
+    "min_value" -> StringType, "max_value" -> StringType,
+    "null_count" -> LongType, "num_records" -> LongType)
+
+  def columnStats(t: GraftTable): DataFrame = frame(t, ColumnStatColumns)(
     t.view.fileSlices(None).flatMap { s =>
       s.allFiles.flatMap { f =>
         val cols = f.colMin.keySet ++ f.colMax.keySet ++ f.colNulls.keySet
-        cols.toSeq.sorted.map(c => (f.partitionPath, f.fileId, f.relPath, c,
+        cols.toSeq.sorted.map(c => Row(f.partitionPath, f.fileId, f.relPath, c,
           f.colMin.get(c).orNull, f.colMax.get(c).orNull,
           f.colNulls.get(c).map(Long.box).orNull, f.numRecords))
       }
-    }.toDF("partition", "file_id", "path", "column",
-      "min_value", "max_value", "null_count", "num_records")
-  }
+    })
 
   /** Pending (requested/inflight) instants — stuck-write triage. */
   def pending(t: GraftTable): DataFrame = {
@@ -321,10 +376,6 @@ object TableAdmin {
     GraftTable.load(spark, outputDir)
   }
 
-  /** Live base-file size distribution quantiles: `stats filesizes`
-    * analog — the small-file-health check behind compaction/clustering
-    * decisions.
-    */
   /** Layout version protocol (reference hudi-cli
     * UpgradeOrDowngradeCommand.java / hoodie.table.version): upgrade
     * stamps the CURRENT layout version on a table written by an older
@@ -351,6 +402,10 @@ object TableAdmin {
     toVersion
   }
 
+  /** Live base-file size distribution quantiles: `stats filesizes`
+    * analog — the small-file-health check behind compaction/clustering
+    * decisions.
+    */
   def fileSizes(t: GraftTable): DataFrame = {
     import t.spark.implicits._
     val sizes = t.view.fileSlices(None).flatMap(_.baseFile).map(_.sizeBytes).sorted

@@ -281,4 +281,66 @@ class GraftCliSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { cli.run("frobnicate all") }
     intercept[IllegalArgumentException] { cli.run("commit rollback") } // missing --commit
   }
+
+  test("quality constraints refuses malformed --inset / --range values") {
+    val dir = tmpDir("cli_dq_bad").toString + "/t"
+    val cli = new GraftCli(spark)
+    cli.run(s"create --path $dir --tableName cli_dqb --recordKey id --precombine v")
+    cli.table.bulkInsert(Seq((1L, 1L, "a")).toDF("id", "v", "s"))
+    Seq("--inset s" -> "col:v1|v2", "--range v:5" -> "col:lo..hi",
+        "--range v" -> "col:lo..hi").foreach { case (opt, form) =>
+      val e = intercept[IllegalArgumentException] { cli.run(s"quality constraints $opt") }
+      assert(e.getMessage.contains(form), e.getMessage)
+    }
+  }
+
+  test("savepoint rollback refuses a ts that is neither savepoint nor savepointed commit") {
+    val dir = tmpDir("cli_sp_guard").toString + "/t"
+    val cli = new GraftCli(spark)
+    cli.run(s"create --path $dir --tableName cli_spg --recordKey id --precombine v")
+    val t = cli.table
+    val first = t.bulkInsert(Seq((1L, 1L), (2L, 1L)).toDF("id", "v"))
+    val second = t.upsert(Seq((1L, 2L)).toDF("id", "v"))
+    t.upsert(Seq((2L, 2L)).toDF("id", "v"))
+    cli.run(s"savepoint create --commit $first")
+    def state() = (GraftTable.load(spark, dir).timeline.completedInstants().map(_.ts),
+      Readers.snapshot(GraftTable.load(spark, dir)).select("id", "v")
+        .as[(Long, Long)].collect().toSet)
+    val before = state()
+    Seq(second, "20000101000000000").foreach { ts =>
+      intercept[IllegalArgumentException] { cli.run(s"savepoint rollback --savepoint $ts") }
+      assert(state() === before)
+    }
+    assert(cli.run(s"savepoint rollback --savepoint $first").text.contains("Restored"))
+    assert(state()._2 === Set((1L, 1L), (2L, 1L)))
+  }
+
+  test("buckets split/merge --auto with and without --bytes") {
+    // a CONSISTENT-bucket table, configured as ConsistentBucketSpec does
+    val t = GraftTable.create(spark, tmpDir("cli_cbkt").toString + "/t", TableConfig(
+      "cli_cbkt", TableType.CopyOnWrite, Seq("id"), "", "v",
+      Map(ConfigKeys.IndexType -> "BUCKET",
+        ConfigKeys.BucketIndexEngine -> "CONSISTENT",
+        ConfigKeys.BucketIndexNumBuckets -> "2")))
+    t.bulkInsert((1L to 40L).map(i => (i, 1L)).toDF("id", "v"))
+    val cli = new GraftCli(spark)
+    cli.run(s"connect --path ${t.basePath}")
+    def groups() = GraftTable.load(spark, t.basePath.toString)
+      .view.fileSlices(None).map(_.fileId).toSet
+    val initial = groups()
+    // default thresholds: nothing is hot, nothing sits under the initial cover
+    assert(cli.run("buckets split --auto").text === "No buckets over the split threshold")
+    assert(groups() === initial)
+    // a 1-byte threshold makes every bucket hot
+    assert(cli.run("buckets split --auto --bytes 1").text.startsWith("Split "))
+    val split = groups()
+    assert(initial.forall(_.startsWith("bktd1")) && split.forall(_.startsWith("bktd2")))
+    // ... and no sibling pair fits under it
+    assert(cli.run("buckets merge --auto --bytes 1").text ===
+      "No sibling pairs under the merge threshold")
+    assert(groups() === split)
+    assert(cli.run("buckets merge --auto").text.startsWith("Merged into "))
+    assert(groups() === initial)
+    assert(Readers.snapshot(GraftTable.load(spark, t.basePath.toString)).count() === 40L)
+  }
 }
