@@ -1112,7 +1112,6 @@ final class GraftTable(
     * an equi-join instead.
     */
   def lookup(keys: Seq[String]): DataFrame = {
-    import spark.implicits._
     requireKeyed("lookup")
     val base = if (ConsistentBuckets.enabled(cfg)) {
       // CONSISTENT buckets: a key's group depends on the partition's
@@ -1135,26 +1134,11 @@ final class GraftTable(
         .map(s => (s.partitionPath, s.fileId)).toSet
       graft.read.Readers.snapshotGroups(this, groups)
     } else if (RecordIndex.enabled(cfg)) {
-      // sync failure degrades to the filtered full path, same contract as
-      // tag falling back to SIMPLE
-      val inner = try RecordIndex.sync(this) catch {
-        case scala.util.control.NonFatal(_) => null
-      }
-      if (inner == null) graft.read.Readers.snapshot(this)
-      else if (inner.timeline.completedDataInstants().isEmpty) graft.read.Readers.snapshot(this).limit(0)
-      else {
-        val n = RecordIndex.storedBuckets(inner)
-        // bucket of each key via the SAME expression the index persists
-        // with — one tiny job over the key list, never a driver rehash
-        val keyDf = keys.toDF("_k")
-        val buckets = keyDf
-          .select(RecordIndex.bucketOf(col("_k"), n).as("_b")).distinct()
-          .collect().map(r => s"b=${r.getInt(0)}").toSeq
-        val groups = graft.read.Readers.snapshot(inner, partitions = Some(buckets))
-          .filter(col("_ri_key").isin(keys: _*))
-          .select(col("_ri_part"), col("_ri_fid")).distinct()
-          .collect().map(r => (r.getString(0), r.getString(1))).toSet
-        graft.read.Readers.snapshotGroups(this, groups)
+      // a failed sync degrades to the filtered full path, as tag falls
+      // back to SIMPLE
+      DerivedIndex.probeSynced(this, RecordIndex.descriptor(this), keys) match {
+        case Some(groups) => graft.read.Readers.snapshotGroups(this, groups)
+        case None => graft.read.Readers.snapshot(this)
       }
     } else graft.read.Readers.snapshot(this)
     base.filter(col(MetaCols.RecordKey).isin(keys: _*)).drop(MetaCols.All: _*)
@@ -1177,13 +1161,10 @@ final class GraftTable(
     // the predicate, so a degraded probe only costs IO
     val spec = SecondaryIndex.specOf(cfg, target)
       .getOrElse(SecondaryIndex.IndexSpec(target, s"`$target`"))
-    val indexed = SecondaryIndex.specOf(cfg, target).isDefined
-    val base =
-      if (indexed) SecondaryIndex.probeGroups(this, target, values) match {
-        case Some(groups) => graft.read.Readers.snapshotGroups(this, groups)
-        case None => graft.read.Readers.snapshot(this) // sync failed: degrade
-      }
-      else graft.read.Readers.snapshot(this)
+    val base = SecondaryIndex.probeGroups(this, target, values) match {
+      case Some(groups) => graft.read.Readers.snapshotGroups(this, groups)
+      case None => graft.read.Readers.snapshot(this) // unindexed, or sync failed
+    }
     base.filter(spec.valueCol.isin(values: _*))
       .drop(MetaCols.All: _*)
   }
@@ -1878,10 +1859,9 @@ final class GraftTable(
       }
     // callbacks fire OUTSIDE the table lock: a slow notification transport
     // must not stall other writers or the async service threads. Eager
-    // record-index maintenance also runs unlocked — best-effort,
-    // changeset-sized; a failure only defers to the next tag's catch-up
-    RecordIndex.maybeSync(this)
-    SecondaryIndex.maybeSync(this)
+    // index maintenance also runs unlocked — best-effort,
+    // changeset-sized; a failure only defers to the next read's catch-up
+    DerivedIndex.maybeSync(this, RecordIndex.descriptors(this) ++ SecondaryIndex.descriptors(this))
     MaterializedView.maybeSyncRegistered(this)
     fireCommitCallbacks(inst.ts, opType, stats)
     inst.ts

@@ -1,8 +1,6 @@
 package graft.table
 
-import scala.util.control.NonFatal
-
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core._
@@ -34,21 +32,10 @@ import graft.read.Readers
   * outer instant that produced the mapping, so replays and catch-up
   * batches resolve to the newest location).
   *
-  * Maintenance is derived purely from the OUTER timeline — the index is a
-  * fold over commit metadata, the same principle as [[FileSystemView]]:
-  *  - after each data commit, the freshly written files (base and delta)
-  *    are read back — key column only — and their (key → fileId) pairs
-  *    upserted into the index with `extraMetadata` recording the applied
-  *    outer instant. Replacecommits (clustering, insert_overwrite) remap
-  *    every surviving key the same way, so moved keys never dangle.
-  *  - instants the index has not applied (foreign writers, inline
-  *    services) are CAUGHT UP at the next tag by replaying their commit
-  *    metadata in timestamp order.
-  *  - a timeline rewind (rollback/restore removed an applied instant) or
-  *    a failed catch-up (files already cleaned) triggers a full REBUILD
-  *    from the current snapshot — one distributed key scan, the same
-  *    cost as a single SIMPLE tag. The index is disposable derived state;
-  *    it is never the source of truth.
+  * Maintenance is the [[DerivedIndex]] fold over the OUTER timeline:
+  * eager replay of each commit's written files, catch-up of foreign
+  * instants at the next tag, and a full rebuild — one distributed key
+  * scan, the cost of a single SIMPLE tag — after a timeline rewind.
   *
   * Staleness semantics at tag time: mappings are validated against the
   * live file-group set, so a key whose group was replaced and not
@@ -62,11 +49,6 @@ import graft.read.Readers
   */
 object RecordIndex {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** extraMetadata key on inner commits: the outer instant applied. */
-  private[table] val AppliedKey = "graft.record.index.applied"
-
   def enabled(cfg: TableConfig): Boolean =
     cfg.prop(ConfigKeys.IndexType, "SIMPLE") == "RECORD"
 
@@ -75,43 +57,18 @@ object RecordIndex {
     t.basePath.resolve(".graft").resolve("record_index")
   }
 
-  /** Bucket count AT REBUILD TIME: the outer table's explicit
-    * `graft.index.record.buckets` wins; otherwise auto-scale from the live
-    * key count (one value per ~keys.per.bucket, floor 16, cap 65536) — a
-    * fixed 16 would make each index file group ~table-size/16, far past
-    * target file sizes on big tables (the reference's metadata table sizes
-    * its file groups the same stats-driven way).
-    */
-  private def autoBuckets(t: GraftTable): Int =
-    t.cfg.props.get(ConfigKeys.RecordIndexBuckets).map(_.toInt).getOrElse {
-      val keysPerBucket = math.max(1L, t.cfg.propLong(
-        ConfigKeys.RecordIndexKeysPerBucket, ConfigKeys.DefaultRecordIndexKeysPerBucket))
-      // live base-file record counts from commit stats — zero IO
-      val liveKeys = t.view.fileSlices(None).flatMap(_.baseFile).map(_.numRecords).sum
-      val n = math.ceil(liveKeys.toDouble / keysPerBucket).toLong
-      math.max(ConfigKeys.DefaultRecordIndexBuckets,
-        math.min(ConfigKeys.MaxRecordIndexBuckets, n)).toInt
-    }
+  /** The inner table of the layout note above. */
+  def descriptor(t: GraftTable): DerivedIndex.Descriptor = DerivedIndex.Descriptor(
+    indexPath(t), "graft.record.index.applied", "record_index", "_ri_",
+    "_ri_key", Seq("_ri_part", "_ri_key"), ConfigKeys.RecordIndexBuckets,
+    col(MetaCols.RecordKey))
 
-  /** The count a PERSISTED index was built with — hashing must stay
-    * consistent with its `b=<bucket>` layout until the next rebuild.
-    */
-  def storedBuckets(inner: GraftTable): Int =
-    inner.cfg.propLong(ConfigKeys.RecordIndexBuckets,
-      ConfigKeys.DefaultRecordIndexBuckets).toInt
+  /** The descriptors the post-commit hook syncs. */
+  private[table] def descriptors(t: GraftTable): Seq[DerivedIndex.Descriptor] =
+    if (enabled(t.cfg)) Seq(descriptor(t)) else Nil
 
-  private[table] def bucketOf(key: Column, n: Int): Column =
-    pmod(abs(xxhash64(key)), lit(n.toLong)).cast("int")
-
-  private def innerCfg(t: GraftTable, buckets: Int): TableConfig = TableConfig(
-    "record_index", TableType.CopyOnWrite,
-    Seq("_ri_part", "_ri_key"), "concat('b=', _ri_bucket)", "_ri_ord",
-    // the index's own index stays SIMPLE (terminates the recursion); its
-    // timeline archives aggressively — index history has no readers.
-    // The bucket count is pinned HERE so every later probe/apply hashes
-    // exactly like the persisted layout.
-    Map(ConfigKeys.IndexType -> "SIMPLE",
-      ConfigKeys.RecordIndexBuckets -> buckets.toString))
+  /** The bucket count a persisted index was built with. */
+  def storedBuckets(inner: GraftTable): Int = DerivedIndex.storedBuckets(inner)
 
   // ------------------------------------------------------------- tagging
 
@@ -121,14 +78,9 @@ object RecordIndex {
     * only when sync itself failed (and logs why).
     */
   private[table] def tag(t: GraftTable, keyed: DataFrame): Option[DataFrame] = {
-    val inner =
-      try sync(t)
-      catch {
-        case NonFatal(e) =>
-          log.warn(s"record index sync failed for ${t.basePath}; " +
-            s"falling back to SIMPLE tagging: $e")
-          return None
-      }
+    val d = descriptor(t)
+    val inner = DerivedIndex.synced(t, d, "falling back to SIMPLE tagging")
+      .getOrElse(return None)
     // empty index (outer table has no commits yet): everything inserts
     if (inner.timeline.completedDataInstants().isEmpty)
       return Some(keyed.withColumn(WritePipeline.FileIdCol, lit(null).cast("string")))
@@ -136,13 +88,13 @@ object RecordIndex {
     // touched buckets → plan-time partition pruning on the index read; the
     // distinct is bounded by the bucket count, one narrow pass
     val touched = keyed
-      .select(bucketOf(col(MetaCols.RecordKey), n).as("_b")).distinct()
+      .select(DerivedIndex.bucketOf(col(MetaCols.RecordKey), n).as("_b")).distinct()
       .collect().map(r => s"b=${r.getInt(0)}").toSeq
     val idx = Readers.snapshot(inner, partitions = Some(touched))
-      .select(col("_ri_part"), col("_ri_key"), col("_ri_fid"))
+      .select(col(d.partCol), col(d.valueCol), col(d.fidCol))
     val joined = keyed.join(idx,
-      col(MetaCols.RecordKey) === col("_ri_key") &&
-        col(MetaCols.PartitionPath) === col("_ri_part"),
+      col(MetaCols.RecordKey) === col(d.valueCol) &&
+        col(MetaCols.PartitionPath) === col(d.partCol),
       "left_outer")
     // validate against live groups: a mapping into a replaced/cleaned
     // group (dropped partition, deleted key whose group died) must become
@@ -156,136 +108,10 @@ object RecordIndex {
     Some(joined
       .join(liveDf,
         col(MetaCols.PartitionPath) === col("_lv_part") &&
-          col("_ri_fid") === col("_lv_fid"),
+          col(d.fidCol) === col("_lv_fid"),
         "left_outer")
       .withColumn(WritePipeline.FileIdCol,
-        when(col("_lv_fid").isNotNull, col("_ri_fid")))
-      .drop("_ri_part", "_ri_key", "_ri_fid", "_lv_part", "_lv_fid"))
-  }
-
-  // ------------------------------------------------------------ maintenance
-
-  /** Bring the index up to date with the outer timeline: load-or-rebuild,
-    * then replay unapplied instants. Called from tag (mandatory) and from
-    * the post-commit epilogue (eager, best-effort).
-    */
-  private[table] def sync(t: GraftTable): GraftTable = {
-    val outer = t.timeline.completedDataInstants()
-    val existing =
-      if (TableConfig.exists(indexPath(t))) Some(GraftTable.load(t.spark, indexPath(t).toString))
-      else None
-    val innerValid = existing.flatMap { inner =>
-      lastApplied(inner) match {
-        // applied instant gone from the timeline ⇒ rollback/restore undid
-        // state the index absorbed; mappings may point at resurrected old
-        // groups — rebuild
-        case Some(ts) if outer.exists(_.ts == ts) => Some(inner -> ts)
-        case _ => None
-      }
-    }
-    innerValid match {
-      case None => rebuild(t)
-      case Some((inner, ts)) =>
-        val unapplied = outer.filter(_.ts > ts)
-        if (unapplied.isEmpty) inner
-        else
-          try applyInstants(t, inner, unapplied)
-          catch {
-            case NonFatal(e) =>
-              // catch-up can outlive its inputs (cleaned files) — rebuild
-              log.info(s"record index catch-up failed (${e.getMessage}); rebuilding")
-              rebuild(t)
-          }
-    }
-  }
-
-  /** Best-effort eager maintenance after a published commit: keeps tag
-    * latency flat by paying the (small, changeset-sized) apply cost at
-    * write time. Failure only defers work to the next tag's sync.
-    */
-  private[table] def maybeSync(t: GraftTable): Unit =
-    if (enabled(t.cfg)) {
-      try { sync(t); () }
-      catch {
-        case NonFatal(e) =>
-          log.warn(s"eager record index sync failed for ${t.basePath} " +
-            s"(commit is durable; next tag catches up): $e")
-      }
-    }
-
-  private def lastApplied(inner: GraftTable): Option[String] = {
-    val applied = inner.timeline.completedDataInstants()
-      .map(i => CommitMetadata.fromJson(inner.timeline.readContent(i)))
-      .flatMap(_.extraMetadata.get(AppliedKey))
-    if (applied.isEmpty) None else Some(applied.max)
-  }
-
-  /** Replay `instants` (ascending) into the index in ONE upsert: read back
-    * each commit's written files — key column and file name only, the scan
-    * is the changeset, not the table — and upsert the mappings. Delta
-    * delete rows carry no mapping (the tombstone lives in the key's
-    * current group, so the existing mapping stays correct).
-    */
-  private def applyInstants(t: GraftTable, inner: GraftTable,
-      instants: Seq[GraftInstant]): GraftTable = {
-    val entries = instants.flatMap { i =>
-      val md = CommitMetadata.fromJson(t.timeline.readContent(i))
-      md.writeStats.filter(_.numWrites > 0).map(ws => FileEntry(
-        ws.partitionPath, ws.fileId, i.ts, ws.path, ws.fileSizeInBytes, ws.isDelta,
-        ws.minRecordKey, ws.maxRecordKey, ws.numWrites))
-    }
-    val maxTs = instants.map(_.ts).max
-    if (entries.isEmpty) {
-      // e.g. deletePartitions: nothing written, but the applied watermark
-      // must advance or the instant would replay forever
-      inner.upsert(emptyMappings(t), Map(AppliedKey -> maxTs))
-      return inner
-    }
-    val raw = t.readEntriesRaw(entries)
-    val rows =
-      if (raw.columns.contains(WritePipeline.DeleteCol))
-        raw.filter(!coalesce(col(WritePipeline.DeleteCol), lit(false)))
-      else raw
-    inner.upsert(mappings(rows, storedBuckets(inner), ordCol = col(MetaCols.CommitTime)),
-      Map(AppliedKey -> maxTs))
-    inner
-  }
-
-  /** Full rebuild from the current snapshot: one distributed key scan —
-    * the cost of a single SIMPLE tag — then the index restarts from the
-    * latest instant. MOR tombstones are already merged out of the
-    * snapshot, so deleted keys simply have no mapping.
-    */
-  private def rebuild(t: GraftTable): GraftTable = {
-    WritePipeline.deleteRecursively(indexPath(t))
-    val n = autoBuckets(t)
-    val inner = GraftTable.create(t.spark, indexPath(t).toString, innerCfg(t, n))
-    val outer = t.timeline.completedDataInstants()
-    if (outer.isEmpty) return inner
-    val maxTs = outer.last.ts
-    val snap = Readers.snapshot(t)
-    inner.upsert(mappings(snap, n, ordCol = lit(maxTs)), Map(AppliedKey -> maxTs))
-    inner
-  }
-
-  /** Project (key, partition, fileId) mappings out of rows that carry the
-    * five meta columns. The fileId prefix of `_hoodie_file_name` is the
-    * file-group id ([[WritePipeline.newFileIdPrefix]] guarantees it is
-    * `_`-free); for a merged MOR row the latest version's file is a delta
-    * of the SAME group, so the derived id is the group id either way.
-    */
-  private def mappings(rows: DataFrame, buckets: Int, ordCol: Column): DataFrame =
-    rows.select(
-      col(MetaCols.PartitionPath).as("_ri_part"),
-      col(MetaCols.RecordKey).as("_ri_key"),
-      bucketOf(col(MetaCols.RecordKey), buckets).as("_ri_bucket"),
-      substring_index(col(MetaCols.FileName), "_", 1).as("_ri_fid"),
-      ordCol.cast("string").as("_ri_ord"))
-
-  private def emptyMappings(t: GraftTable): DataFrame = {
-    val spark = t.spark
-    import spark.implicits._
-    Seq.empty[(String, String, Int, String, String)]
-      .toDF("_ri_part", "_ri_key", "_ri_bucket", "_ri_fid", "_ri_ord")
+        when(col("_lv_fid").isNotNull, col(d.fidCol)))
+      .drop(d.partCol, d.valueCol, d.fidCol, "_lv_part", "_lv_fid"))
   }
 }

@@ -2,11 +2,10 @@ package graft.table
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.core._
-import graft.read.Readers
 
 /** Opt-in SECONDARY index (`graft.index.secondary.columns=colA,colB`) —
   * an exact value → file-group mapping for NON-KEY columns, persisted as
@@ -27,10 +26,10 @@ import graft.read.Readers
   * groups (the residual filter), so false positives cost only the extra
   * group read; false negatives are the only correctness hazard, and they
   * cannot occur because every instant that creates a file is replayed
-  * into the index before it serves a probe (same catch-up discipline as
-  * [[RecordIndex.sync]]). Dead groups (clustering, delete_partition)
-  * drop out at read time: [[Readers.snapshotGroups]] intersects with the
-  * LIVE slice set, so stale mappings into replaced groups are invisible.
+  * into the index before it serves a probe ([[DerivedIndex.sync]]). Dead
+  * groups (clustering, delete_partition) drop out at probe time: the probe
+  * intersects with the LIVE slice set, so stale mappings into replaced
+  * groups are invisible.
   *
   * Layout: `<base>/.graft/sec_index/<col>` is a COPY_ON_WRITE graft
   * table, record key (`_si_val`, `_si_part`, `_si_fid`) — the upsert
@@ -41,25 +40,14 @@ import graft.read.Readers
   * point equality lookups are not a sane index use and are documented
   * unsupported).
   *
-  * Maintenance is a fold over the OUTER timeline, exactly like
-  * [[RecordIndex]]:
-  *  - after each data commit the freshly written files (base and delta)
-  *    are read back — indexed column + meta columns only — and their
-  *    (value → group) pairs upserted with the applied instant recorded in
-  *    `extraMetadata`. Replacecommits re-map surviving rows to their new
-  *    groups the same way; compaction keeps group ids so mappings stay
-  *    valid without replay.
-  *  - unapplied instants are caught up at the next probe in timestamp
-  *    order; a timeline rewind or a catch-up that outlived its inputs
-  *    (cleaned files) triggers a full rebuild from the snapshot. The
-  *    index is disposable derived state, never the source of truth.
+  * Maintenance is the [[DerivedIndex]] fold over the OUTER timeline, the
+  * same as [[RecordIndex]]'s: replacecommits re-map surviving rows to
+  * their new groups; compaction keeps group ids so mappings stay valid
+  * without replay.
   */
 object SecondaryIndex {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
-  /** extraMetadata key on inner commits: the outer instant applied. */
-  private[table] val AppliedKey = "graft.secondary.index.applied"
 
   def enabledColumns(cfg: TableConfig): Seq[String] =
     cfg.prop(ConfigKeys.SecondaryIndexColumns, "")
@@ -113,86 +101,29 @@ object SecondaryIndex {
     t.basePath.resolve(".graft").resolve("sec_index").resolve(name)
   }
 
-  /** Bucket count AT REBUILD TIME (see [[RecordIndex.autoBuckets]]): the
-    * explicit `graft.index.secondary.buckets` wins, else one bucket per
-    * ~keys.per.bucket live rows, floor 16, cap 65536 — from commit stats,
-    * zero IO.
+  /** The index's inner table: record key (`_si_val`, `_si_part`,
+    * `_si_fid`), value the spec's string-cast expression.
     */
-  private def autoBuckets(t: GraftTable): Int =
-    t.cfg.props.get(ConfigKeys.SecondaryIndexBuckets).map(_.toInt).getOrElse {
-      val perBucket = math.max(1L, t.cfg.propLong(
-        ConfigKeys.RecordIndexKeysPerBucket, ConfigKeys.DefaultRecordIndexKeysPerBucket))
-      val liveRows = t.view.fileSlices(None).flatMap(_.baseFile).map(_.numRecords).sum
-      val n = math.ceil(liveRows.toDouble / perBucket).toLong
-      math.max(ConfigKeys.DefaultRecordIndexBuckets,
-        math.min(ConfigKeys.MaxRecordIndexBuckets, n)).toInt
-    }
+  def descriptor(t: GraftTable, spec: IndexSpec): DerivedIndex.Descriptor =
+    DerivedIndex.Descriptor(indexPath(t, spec.name), "graft.secondary.index.applied",
+      s"sec_index_${spec.name}", "_si_", "_si_val", Seq("_si_val", "_si_part", "_si_fid"),
+      ConfigKeys.SecondaryIndexBuckets, spec.valueCol)
 
-  /** The count a PERSISTED index was built with — probes must hash like
-    * the `b=<bucket>` layout until the next rebuild.
+  /** The descriptors the post-commit hook syncs: every configured column
+    * and expression index.
     */
-  private def storedBuckets(inner: GraftTable): Int =
-    inner.cfg.propLong(ConfigKeys.RecordIndexBuckets,
-      ConfigKeys.DefaultRecordIndexBuckets).toInt
-
-  private def bucketOf(value: Column, n: Int): Column =
-    pmod(abs(xxhash64(value)), lit(n.toLong)).cast("int")
-
-  private def innerCfg(column: String, buckets: Int): TableConfig = TableConfig(
-    s"sec_index_$column", TableType.CopyOnWrite,
-    Seq("_si_val", "_si_part", "_si_fid"), "concat('b=', _si_bucket)", "_si_ord",
-    // the index table's own index stays SIMPLE (terminates recursion);
-    // the bucket count is pinned HERE so probes hash like the layout
-    Map(ConfigKeys.IndexType -> "SIMPLE",
-      ConfigKeys.RecordIndexBuckets -> buckets.toString))
+  private[table] def descriptors(t: GraftTable): Seq[DerivedIndex.Descriptor] =
+    indexSpecs(t.cfg).map(descriptor(t, _))
 
   // --------------------------------------------------------------- lookup
 
-  /** The file groups that may contain rows with `column` in `values`:
-    * probe the values' hash buckets (plan-time partition pruning on the
-    * index table) and collect the mapped groups. Driver state is bounded
-    * by the number of MATCHING groups — the point-lookup contract.
+  /** The live file groups that may contain rows whose index value is in
+    * `values` (see [[DerivedIndex.probe]]); None when `name` is not a
+    * maintained index or its sync failed.
     */
   def probeGroups(t: GraftTable, name: String,
-      values: Seq[String]): Option[Set[(String, String)]] = {
-    val spec = specOf(t.cfg, name).getOrElse(return None)
-    val inner =
-      try sync(t, spec)
-      catch {
-        case NonFatal(e) =>
-          log.warn(s"secondary index sync failed for ${t.basePath}/$name; " +
-            s"falling back to a filtered snapshot scan: $e")
-          return None
-      }
-    if (inner.timeline.completedDataInstants().isEmpty)
-      return Some(Set.empty)
-    Some(probeInner(t, inner, values))
-  }
-
-  /** The probe core: bucket the values through the SAME expression the
-    * index persists with (one tiny job, never a driver-side rehash),
-    * plan-time-prune the index read to those buckets, and intersect the
-    * mapped groups with the LIVE group set — mappings into dead groups
-    * (clustering remaps, dropped partitions) must not count as IO. The
-    * live set is the driver-resident view state, same residency as the
-    * read itself.
-    */
-  private def probeInner(t: GraftTable, inner: GraftTable,
-      values: Seq[String]): Set[(String, String)] = {
-    val n = storedBuckets(inner)
-    val spark = t.spark
-    import spark.implicits._
-    val buckets = values.toDF("_v")
-      .select(bucketOf(col("_v"), n).as("_b")).distinct()
-      .collect().map(r => s"b=${r.getInt(0)}").toSeq
-    val mapped = Readers.snapshot(inner, partitions = Some(buckets))
-      .filter(col("_si_val").isin(values: _*))
-      .select(col("_si_part"), col("_si_fid")).distinct()
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val live = t.view.fileSlices(None)
-      .map(s => (s.partitionPath, s.fileId)).toSet
-    mapped.intersect(live)
-  }
+      values: Seq[String]): Option[Set[(String, String)]] =
+    specOf(t.cfg, name).flatMap(spec => DerivedIndex.probeSynced(t, descriptor(t, spec), values))
 
   /** READ-ONLY probe for plan-time file pruning ([[graft.read.GraftFileIndex]]
     * consults this for equality/IN predicates on indexed columns): returns
@@ -206,143 +137,16 @@ object SecondaryIndex {
   def probeCurrentReadOnly(t: GraftTable, name: String,
       values: Seq[String]): Option[Set[(String, String)]] =
     try {
-      if (values.isEmpty || !TableConfig.exists(indexPath(t, name))) return None
-      val inner = GraftTable.load(t.spark, indexPath(t, name).toString)
+      val d = specOf(t.cfg, name).map(descriptor(t, _)).getOrElse(return None)
+      if (values.isEmpty || !TableConfig.exists(d.path)) return None
+      val inner = GraftTable.load(t.spark, d.path.toString)
       val latest = t.timeline.completedDataInstants().lastOption.map(_.ts)
-      if (latest.isEmpty || lastApplied(inner) != latest) return None
-      Some(probeInner(t, inner, values))
+      if (latest.isEmpty || DerivedIndex.lastApplied(inner, d) != latest) return None
+      Some(DerivedIndex.probe(t, inner, d, values))
     } catch {
       case NonFatal(e) =>
         log.warn(s"read-only secondary probe failed for ${t.basePath}/$name " +
           s"(no pruning this query): $e")
         None
     }
-
-  // ----------------------------------------------------------- maintenance
-
-  /** Bring the column's index up to date with the outer timeline:
-    * load-or-rebuild, then replay unapplied instants (same protocol as
-    * [[RecordIndex.sync]]).
-    */
-  private[table] def sync(t: GraftTable, spec: IndexSpec): GraftTable = {
-    val outer = t.timeline.completedDataInstants()
-    val existing =
-      if (TableConfig.exists(indexPath(t, spec.name)))
-        Some(GraftTable.load(t.spark, indexPath(t, spec.name).toString))
-      else None
-    val innerValid = existing.flatMap { inner =>
-      lastApplied(inner) match {
-        case Some(ts) if outer.exists(_.ts == ts) => Some(inner -> ts)
-        case _ => None // rewind (rollback/restore) or virgin index: rebuild
-      }
-    }
-    innerValid match {
-      case None => rebuild(t, spec)
-      case Some((inner, ts)) =>
-        val unapplied = outer.filter(_.ts > ts)
-        if (unapplied.isEmpty) inner
-        else
-          try applyInstants(t, spec, inner, unapplied)
-          catch {
-            case NonFatal(e) =>
-              log.info(s"secondary index catch-up failed (${e.getMessage}); rebuilding")
-              rebuild(t, spec)
-          }
-    }
-  }
-
-  /** Best-effort eager maintenance after a published commit, for every
-    * configured column and expression index. Failure only defers work to
-    * the next probe.
-    */
-  private[table] def maybeSync(t: GraftTable): Unit =
-    indexSpecs(t.cfg).foreach { spec =>
-      try { sync(t, spec); () }
-      catch {
-        case NonFatal(e) =>
-          log.warn(s"eager secondary index sync failed for ${t.basePath}/${spec.name} " +
-            s"(commit is durable; next probe catches up): $e")
-      }
-    }
-
-  private def lastApplied(inner: GraftTable): Option[String] = {
-    val applied = inner.timeline.completedDataInstants()
-      .map(i => CommitMetadata.fromJson(inner.timeline.readContent(i)))
-      .flatMap(_.extraMetadata.get(AppliedKey))
-    if (applied.isEmpty) None else Some(applied.max)
-  }
-
-  /** Replay `instants` (ascending) in ONE upsert: read back each commit's
-    * written files — indexed column + meta columns, the scan is the
-    * changeset — and upsert the (value → group) pairs. Files predating
-    * the column (additive schema evolution) contribute nothing; their
-    * rows' values are null there and null values are never indexed.
-    */
-  private def applyInstants(t: GraftTable, spec: IndexSpec, inner: GraftTable,
-      instants: Seq[GraftInstant]): GraftTable = {
-    val entries = instants.flatMap { i =>
-      val md = CommitMetadata.fromJson(t.timeline.readContent(i))
-      md.writeStats.filter(_.numWrites > 0).map(ws => FileEntry(
-        ws.partitionPath, ws.fileId, i.ts, ws.path, ws.fileSizeInBytes, ws.isDelta,
-        ws.minRecordKey, ws.maxRecordKey, ws.numWrites))
-    }
-    val maxTs = instants.map(_.ts).max
-    if (entries.isEmpty) {
-      inner.upsert(emptyMappings(t), Map(AppliedKey -> maxTs))
-      return inner
-    }
-    val raw = t.readEntriesRaw(entries)
-    val rows =
-      if (raw.columns.contains(WritePipeline.DeleteCol))
-        raw.filter(!coalesce(col(WritePipeline.DeleteCol), lit(false)))
-      else raw
-    // files predating a referenced column (additive evolution) resolve
-    // the expression to error — treated like the absent-column case: the
-    // changeset contributes nothing, the watermark still advances (the
-    // NEXT full rebuild re-covers once the snapshot read aligns schemas)
-    val frame =
-      try mappings(rows, spec, storedBuckets(inner), ordCol = col(MetaCols.CommitTime))
-      catch { case _: org.apache.spark.sql.AnalysisException => emptyMappings(t) }
-    inner.upsert(frame, Map(AppliedKey -> maxTs))
-    inner
-  }
-
-  /** Full rebuild from the current snapshot: one distributed scan of the
-    * indexed value, then the index restarts from the latest instant.
-    */
-  private def rebuild(t: GraftTable, spec: IndexSpec): GraftTable = {
-    WritePipeline.deleteRecursively(indexPath(t, spec.name))
-    val n = autoBuckets(t)
-    val inner = GraftTable.create(t.spark, indexPath(t, spec.name).toString,
-      innerCfg(spec.name, n))
-    val outer = t.timeline.completedDataInstants()
-    if (outer.isEmpty) return inner
-    val maxTs = outer.last.ts
-    val snap = Readers.snapshot(t)
-    inner.upsert(mappings(snap, spec, n, ordCol = lit(maxTs)),
-      Map(AppliedKey -> maxTs))
-    inner
-  }
-
-  /** Project distinct (value, partition, fileGroup) containments out of
-    * rows carrying the meta columns. Null values are not indexed (an
-    * equality probe never matches null).
-    */
-  private def mappings(rows: DataFrame, spec: IndexSpec, buckets: Int,
-      ordCol: Column): DataFrame = {
-    val v = spec.valueCol
-    rows.filter(v.isNotNull).select(
-      v.as("_si_val"),
-      col(MetaCols.PartitionPath).as("_si_part"),
-      bucketOf(v, buckets).as("_si_bucket"),
-      substring_index(col(MetaCols.FileName), "_", 1).as("_si_fid"),
-      ordCol.cast("string").as("_si_ord"))
-  }
-
-  private def emptyMappings(t: GraftTable): DataFrame = {
-    val spark = t.spark
-    import spark.implicits._
-    Seq.empty[(String, String, Int, String, String)]
-      .toDF("_si_val", "_si_part", "_si_bucket", "_si_fid", "_si_ord")
-  }
 }
