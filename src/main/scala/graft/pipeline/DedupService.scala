@@ -1,20 +1,23 @@
 package graft.pipeline
 
-import java.util.concurrent.{Callable, ExecutionException, Executors, Future}
+import java.util.concurrent.{CompletableFuture, ExecutionException, Executors, Future}
 
-import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{TableConfig, TableType}
 import graft.read.Readers
-import graft.table.{GraftTable, IncrementalSync, WritePipeline}
+import graft.table.{GraftTable, IncrementalSync, Services, WritePipeline}
+import graft.table.Services.{CleanPolicy, ClusterPlanStrategy}
 
 /** INCREMENTAL MinHash-LSH deduplication as a table service: maintain a
   * near-dup-free `clean` table from an append-shaped `source` documents
-  * table, with per-tick cost proportional to the NEW data — the shape a
-  * 100 TB training-data dedup actually runs as (a from-scratch
-  * [[Dedup.minhashDedup]] over the corpus per arrival batch would be
-  * O(corpus) per tick).
+  * table. A tick pulls, fingerprints and writes only the NEW documents
+  * (a from-scratch [[Dedup.minhashDedup]] over the corpus per arrival
+  * batch would recompute every signature per tick); its index appends
+  * write O(new data) bytes, but its probe still reads the whole index.
   *
   * The LSH state persists in two graft tables under `indexPath`:
   *
@@ -30,17 +33,28 @@ import graft.table.{GraftTable, IncrementalSync, WritePipeline}
   * probability ((P-1)/P)^(16n) — about e^(-n/4) at P = 64, e^(-100) at
   * n = 400: the band probe reads the whole `bands` index at any tick
   * size worth a sync, however it is partitioned, and more partitions
-  * only cost more files (an insert tops up each touched partition's
-  * small file, so a tick rewrites one small file per partition). `sigs`
-  * is different: a tick's stored candidates are few, so doc-id
-  * partitions could prune its read, but they cost the same per-append
-  * rewrites. Instead the `sigs` read is skipped on ticks whose band
+  * only cost more files. `sigs` is different: a tick's stored candidates
+  * are few, so doc-id partitions could prune its read, but they cost
+  * more files too. Instead the `sigs` read is skipped on ticks whose band
   * probe found no stored candidate, and otherwise reads the whole table.
-  * At one partition an append tops up one file per table (more once it
-  * passes the small-file limit); that rewrite grows with the index up
-  * to that limit. Indexes written with more partitions (64 and 32 were
-  * the old defaults) keep appending through their stored partition
-  * expressions and are read whole, like new ones.
+  * Indexes written with more partitions (64 and 32 were the old
+  * defaults) keep their stored partition expressions and are read whole,
+  * like new ones.
+  *
+  * Append-only layout: both tables only ever gain rows, so a tick's rows
+  * go to a fresh file group in each partition they touch
+  * ([[GraftTable.insertFresh]]) and never top up an existing file. A
+  * size-tiered merge bounds the file count: once a partition holds
+  * [[MergeFanIn]] live base files below the small-file limit whose sizes
+  * lie within a factor of [[MergeFanIn]] of each other, exactly those
+  * files are rewritten as one (a "cluster" replacecommit through
+  * [[Services.cluster]]), and the merged file may complete a run one
+  * tier up. Each row is then rewritten O(log N) times over N ticks, not
+  * once per tick, and a partition keeps at most MergeFanIn - 1 files
+  * per factor of MergeFanIn in file size; files past the small-file
+  * limit never merge again. The files a merge replaced are deleted at the
+  * start of the next tick, before its probe plans (the current tick's
+  * probe may still be reading them).
   *
   * Each tick ([[graft.table.IncrementalSync]] plans it and owns the
   * checkpoint marks): pull the new docs → candidate pairs from (a) an
@@ -52,13 +66,16 @@ import graft.table.{GraftTable, IncrementalSync, WritePipeline}
   * Concurrency and crash safety: the two index appends need nothing from
   * the probe, so they start on their own threads as soon as the tick's
   * signatures and band rows are defined and run WHILE the probe runs;
-  * the clean commit, which carries the checkpoint, publishes only after
-  * both appends have, and a failed append fails the tick before it.
-  * Every outcome is one a replayed tick already produces: a tick that
-  * fails or crashes after an append re-pulls the same range (checkpoint
-  * unchanged), and a probe that happens to see this tick's own postings
-  * or signatures is in the same position as a replay — duplicate
-  * band/sig rows are harmless: candidate pairs dedup before
+  * each thread then merges its table's tiers. The clean commit, which
+  * carries the checkpoint, publishes only after both appends have, and a
+  * failed append fails the tick before it; a failed merge aborts, leaves
+  * the index as the append left it and is retried on a later tick — a
+  * merge keeps the same set of rows, so nothing below depends on whether
+  * it ran. Every outcome is one a replayed tick already produces: a tick
+  * that fails or crashes after an append re-pulls the same range
+  * (checkpoint unchanged), and a probe that happens to see this tick's
+  * own postings or signatures is in the same position as a replay —
+  * duplicate band/sig rows are harmless: candidate pairs dedup before
   * verification, self-postings are anti-joined out of the index probe,
   * in-batch `l < r` excludes self-pairs, duplicate signature rows
   * collapse at the dup-id `distinct`, and the clean upsert is keyed. So
@@ -75,11 +92,22 @@ import graft.table.{GraftTable, IncrementalSync, WritePipeline}
   */
 object DedupService {
 
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   val SyncKeys = IncrementalSync.Keys("graft.dedup.source")
   private val ThresholdKey = "graft.dedup.threshold"
   private val NumHashesKey = "graft.dedup.num.hashes"
   private val BandsKey = "graft.dedup.bands"
   private val ShingleKey = "graft.dedup.shingle.n"
+
+  /** Files per index merge, and the size factor they may span. It trades
+    * write amplification (a row is rewritten about log_k N times) against
+    * read amplification (up to k - 1 files per tier, each a file the probe
+    * opens): against k = 4, k = 2 doubles the rewrites for a third fewer
+    * files, and k = 8 saves a third of the rewrites for half again as
+    * many files. 4 is also the usual size-tiered default.
+    */
+  private[graft] val MergeFanIn = 4
 
   final case class DedupIndex(bands: GraftTable, sigs: GraftTable) {
     def threshold: Double = bands.cfg.prop(ThresholdKey, "0.7").toDouble
@@ -123,6 +151,9 @@ object DedupService {
     val (threshold, numHashes, bands, shingleN) =
       (index.threshold, index.numHashes, index.numBands, index.shingleN)
     val spark = source.spark
+    // the files the previous tick's merges replaced: its probe is done
+    // with them, and this tick's has not planned yet
+    Seq(index.bands, index.sigs).foreach(Services.cleanWith(_, CleanPolicy.KeepLatestFileVersions(1)))
     val work = IncrementalSync.plan(source, clean, SyncKeys) match {
       case IncrementalSync.Idle => return None
       case w: IncrementalSync.Work => w
@@ -153,11 +184,12 @@ object DedupService {
           col("_d_band.band").as("band"), col("_d_band.bucket").as("bucket"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // both index appends run WHILE the probe runs (they need nothing
-      // from it); the clean commit waits for them — see the scaladoc
-      val appends = inBackground(
-        () => index.bands.insert(bandRows.select(
-          col("band"), col("bucket"), col("_d_id").as("doc_id"))),
-        () => index.sigs.insert(
+      // from it), each followed by its table's merge; the clean commit
+      // waits for the appends only — see the scaladoc
+      val background = Seq(
+        appendThenMerge(index.bands,
+          bandRows.select(col("band"), col("bucket"), col("_d_id").as("doc_id"))),
+        appendThenMerge(index.sigs,
           sig.select(col("_d_id").as("doc_id"), col("_d_sig").as("sig"))))
       try {
         // (a) in-batch candidates: band equi-self-join, each pair once
@@ -216,27 +248,66 @@ object DedupService {
         } finally indexPairs.foreach(_.unpersist())
 
         val survivors = pulled.join(dups, col(idCol) === col("_dup_id"), "left_anti")
-        appends.foreach(awaitOrRethrow)
+        background.foreach { case (appended, _) => awaitOrRethrow(appended) }
         Some(clean.upsert(survivors, extraMetadata = work.marks))
       } finally {
-        // a failed probe must not leave an append running past the call
-        // (or reading the frames unpersisted below)
-        appends.foreach(f => scala.util.Try(f.get()))
+        // a failed probe must not leave an append or a merge running past
+        // the call (or reading the frames unpersisted below)
+        background.foreach { case (_, done) => scala.util.Try(done.get()) }
         bandRows.unpersist(); sig.unpersist()
       }
     } finally pulled.unpersist()
   }
 
-  /** Starts each task on its own thread (created here, so it inherits the
-    * caller's active session and Spark job properties).
+  /** On its own thread (created here, so it inherits the caller's active
+    * session and Spark job properties): append `rows` to `t` in fresh
+    * files, then merge `t`'s size tiers. Returns the append's outcome and
+    * the thread's end.
     */
-  private def inBackground(tasks: (() => Any)*): Seq[Future[Any]] = {
-    val pool = Executors.newFixedThreadPool(tasks.size)
-    try tasks.map(t => pool.submit(new Callable[Any] { def call(): Any = t() }))
-    finally pool.shutdown() // accepted tasks still run; threads exit after
+  private def appendThenMerge(t: GraftTable, rows: DataFrame): (Future[String], Future[_]) = {
+    val appended = new CompletableFuture[String]()
+    val pool = Executors.newSingleThreadExecutor()
+    try {
+      val done = pool.submit(new Runnable {
+        def run(): Unit = {
+          try appended.complete(t.insertFresh(rows))
+          catch { case e: Throwable => appended.completeExceptionally(e) }
+          if (!appended.isCompletedExceptionally) mergeTiers(t)
+        }
+      })
+      (appended, done)
+    } finally pool.shutdown() // the accepted task still runs; the thread exits after
   }
 
-  private def awaitOrRethrow(f: Future[Any]): Unit =
+  /** Merges, per partition, the smallest run of [[MergeFanIn]] live base
+    * files below the small-file limit whose sizes lie within a factor of
+    * [[MergeFanIn]], one cluster commit at a time, until no run is left.
+    * A merge that fails is logged and left to a later tick: its abort
+    * leaves the files as they were.
+    */
+  @annotation.tailrec
+  private def mergeTiers(t: GraftTable): Unit = {
+    val runs = t.view.partitions().flatMap { p =>
+      t.view.smallFiles(p, t.smallFileLimit).sortBy(_.sizeBytes).sliding(MergeFanIn)
+        .find(r => r.size == MergeFanIn && r.last.sizeBytes <= MergeFanIn * r.head.sizeBytes)
+        .map(r => p -> r.map(_.fileId))
+    }.toMap
+    if (runs.nonEmpty) {
+      val before = t.view.latestBaseFiles().size
+      val merged =
+        try Services.cluster(t, strategy = ClusterPlanStrategy.FileGroups(runs)).isDefined
+        catch {
+          case NonFatal(e) =>
+            log.warn(s"index merge failed for ${t.basePath}; a later tick retries it: $e")
+            false
+        }
+      // the merged file may complete a run one tier up; a merge whose
+      // output split into as many files as it read stops the cascade
+      if (merged && t.view.latestBaseFiles().size < before) mergeTiers(t)
+    }
+  }
+
+  private def awaitOrRethrow(f: Future[_]): Unit =
     try f.get()
     catch { case e: ExecutionException if e.getCause != null => throw e.getCause }
 }

@@ -235,6 +235,21 @@ final class GraftTable(
     }
   }
 
+  /** [[insert]] without the small-file top-up: every row lands in a fresh
+    * file group, so no existing file is rewritten. For insert-only tables
+    * that bound their own file count (the dedup posting index merges its
+    * files by size tier).
+    */
+  private[graft] def insertFresh(df: DataFrame): String = {
+    require(!BucketIndex.enabled(cfg), "BUCKET layouts route inserts to their bucket's group")
+    enforceConstraints(df, "insert")
+    runCommit(commitAction, "insert") { instant =>
+      val (routed, _) = assignInsertBucketsFresh(KeyGen.withKeyColumns(alignToTableSchema(df), cfg))
+      // fresh ids only: no live group is read back or rewritten
+      writeMerged(routed, instant, knownTouched = Some(Set.empty))
+    }
+  }
+
   /** Upsert: batch precombine-dedup → index tag → route → per-group merge
     * (reference SparkRDDWriteClient.upsert :149-159 and the §2.2 pipeline).
     */

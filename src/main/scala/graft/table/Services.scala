@@ -206,6 +206,10 @@ object Services {
       */
     final case class RecentPartitions(n: Int) extends ClusterPlanStrategy
     final case class SelectedPartitions(parts: Seq[String]) extends ClusterPlanStrategy
+    /** Exactly the named file groups, partition → fileIds — a caller that
+      * picks its own merge runs (the dedup index's size tiers).
+      */
+    final case class FileGroups(groups: Map[String, Seq[String]]) extends ClusterPlanStrategy
   }
 
   /** Clustering (reference SparkSortAndSizeExecutionStrategy.java:51-68):
@@ -226,14 +230,17 @@ object Services {
       "clustering is not supported on BUCKET-indexed tables")
     val limit = if (smallFileLimit > 0) smallFileLimit else t.smallFileLimit
     val slices0 = t.view.fileSlices(None)
-    val eligibleParts: Set[String] = strategy match {
-      case ClusterPlanStrategy.AllPartitions => slices0.map(_.partitionPath).toSet
+    val eligible: FileSlice => Boolean = strategy match {
+      case ClusterPlanStrategy.AllPartitions => _ => true
       case ClusterPlanStrategy.RecentPartitions(n) =>
-        slices0.map(_.partitionPath).distinct.sorted.takeRight(n).toSet
-      case ClusterPlanStrategy.SelectedPartitions(ps) => ps.toSet
+        val recent = slices0.map(_.partitionPath).distinct.sorted.takeRight(n).toSet
+        s => recent.contains(s.partitionPath)
+      case ClusterPlanStrategy.SelectedPartitions(ps) => s => ps.contains(s.partitionPath)
+      case ClusterPlanStrategy.FileGroups(gs) =>
+        s => gs.get(s.partitionPath).exists(_.contains(s.fileId))
     }
     val groups = slices0
-      .filter(s => eligibleParts.contains(s.partitionPath))
+      .filter(eligible)
       .filter(s => s.deltaFiles.isEmpty && s.baseFile.exists(_.sizeBytes < limit))
       .groupBy(_.partitionPath)
       .filter(_._2.size > 1)

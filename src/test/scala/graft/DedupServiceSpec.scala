@@ -5,7 +5,8 @@ import org.apache.spark.sql.ExecutionCapture
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
 import org.apache.spark.sql.functions._
 
-import graft.core.{CommitMetadata, TableConfig, TableType}
+import graft.core.{Action, CommitMetadata, FileEntry, GraftInstant, Storage, TableConfig, TableType}
+import graft.core.Storage.PathOps
 import graft.pipeline.{Dedup, DedupService}
 import graft.read.Readers
 import graft.table.GraftTable
@@ -25,10 +26,12 @@ class DedupServiceSpec extends AnyFunSuite {
   private def ids(df: org.apache.spark.sql.DataFrame) =
     df.select("doc_id").orderBy("doc_id").collect()
 
-  /** Files the table's latest commit wrote. */
-  private def lastCommitFiles(t: GraftTable): Seq[String] =
-    CommitMetadata.fromJson(t.timeline.readContent(t.timeline.completedDataInstants().last))
-      .writeStats.map(_.path)
+  private def liveFiles(t: GraftTable): Seq[FileEntry] = t.view.latestBaseFiles()
+
+  /** The data commits `t` completed after `before`, oldest first. */
+  private def commitsSince(t: GraftTable, before: Seq[GraftInstant]): Seq[CommitMetadata] =
+    t.timeline.completedDataInstants().filterNot(before.contains)
+      .map(i => CommitMetadata.fromJson(t.timeline.readContent(i)))
 
   test("three id-ordered ticks equal the from-scratch minhash dedup") {
     val root = tmpDir("dedup_svc").toString
@@ -204,12 +207,17 @@ class DedupServiceSpec extends AnyFunSuite {
       base.filter(col("doc_id") < 50).withColumn("doc_id", col("doc_id") + 1000000L))
     for (t <- ticks) {
       srcT.bulkInsert(t)
+      val before = Seq(idx.bands, idx.sigs).map(i => (i, i.timeline.completedDataInstants(), liveFiles(i)))
       assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
-      // one file per table while the index is below the small-file limit:
-      // each append tops up that file
-      for (i <- Seq(idx.bands, idx.sigs)) {
-        assert(lastCommitFiles(i).size === 1, s"${i.basePath}: ${lastCommitFiles(i)}")
-        assert(i.view.latestBaseFiles().size === 1)
+      // the append writes one new file and tops up none: every file live
+      // before the tick still is, unless a merge replaced it
+      for ((i, instants, live) <- before) {
+        val (appends, merges) = commitsSince(i, instants).partition(_.operationType == "insert")
+        assert(appends.map(_.writeStats.size) === Seq(1), s"${i.basePath}: $appends")
+        assert(merges.forall(_.operationType == "cluster"), s"${i.basePath}: $merges")
+        val replaced = merges.flatMap(_.replacedFileIds.toSeq.flatMap { case (p, fs) => fs.map(p -> _) }).toSet
+        val kept = live.filterNot(f => replaced.contains((f.partitionPath, f.fileId)))
+        assert(kept.toSet.subsetOf(liveFiles(i).toSet), s"${i.basePath}: a file was topped up")
       }
     }
     assert(idx.bands.view.partitions() === Seq("p=0"))
@@ -341,5 +349,99 @@ class DedupServiceSpec extends AnyFunSuite {
     assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
     val want = ids(Dedup.minhashDedup(base, threshold = 0.6))
     assert(ids(Readers.snapshot(cleanT)).sameElements(want), "incremental != from-scratch")
+  }
+
+  /** Live base-file sizes of `t`, ascending. */
+  private def liveSizes(t: GraftTable): Seq[Long] = liveFiles(t).map(_.sizeBytes).sorted
+
+  /** Every file of the groups `merges` replaced, as `t`'s view still lists them. */
+  private def replacedFiles(t: GraftTable, merges: Seq[CommitMetadata]): Seq[FileEntry] = {
+    val groups = merges.flatMap(_.replacedFileIds.toSeq.flatMap { case (p, fs) => fs.map(p -> _) }).toSet
+    t.view.allEntries().entries.filter(e => groups.contains((e.partitionPath, e.fileId)))
+  }
+
+  private def onDisk(t: GraftTable, f: FileEntry): Boolean = Storage.exists(t.basePath.resolve(f.relPath))
+
+  test("twelve small ticks: live index files stay tiered, appends stay flat, replaced files go a tick later") {
+    val root = tmpDir("dedup_svc_tiers").toString
+    val srcT = GraftTable.create(spark, s"$root/source", docsCfg("src"))
+    val cleanT = GraftTable.create(spark, s"$root/clean", docsCfg("clean"))
+    val idx = DedupService.openIndex(spark, s"$root/index", threshold = 0.6)
+    val k = DedupService.MergeFanIn
+    val ticks = (0 until 12).map(n => docs.filter(col("doc_id") >= n * 40 && col("doc_id") < (n + 1) * 40))
+    val tables = Seq(idx.bands, idx.sigs)
+    val appendBytes = tables.map(_ -> scala.collection.mutable.ArrayBuffer.empty[Long]).toMap
+    val merges = scala.collection.mutable.Map.empty[GraftTable, Int].withDefaultValue(0)
+    var lastReplaced = Seq.empty[(GraftTable, FileEntry)]
+    for (t <- ticks) {
+      srcT.bulkInsert(t)
+      val before = tables.map(i => i -> i.timeline.completedDataInstants())
+      assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+      // the previous tick's probe may have read them; this tick's did not
+      for ((i, f) <- lastReplaced) assert(!onDisk(i, f), s"${f.relPath} outlived the next tick")
+      lastReplaced = before.flatMap { case (i, instants) =>
+        val (appends, merged) = commitsSince(i, instants).partition(_.operationType == "insert")
+        assert(appends.size === 1 && merged.forall(_.operationType == "cluster"))
+        appendBytes(i) += appends.head.writeStats.map(_.fileSizeInBytes).sum
+        merges(i) += merged.size
+        replacedFiles(i, merged).map(i -> _)
+      }
+      for ((i, f) <- lastReplaced) assert(onDisk(i, f), s"${f.relPath} was deleted under this tick's probe")
+      for (i <- tables) {
+        val sizes = liveSizes(i)
+        // no run left to merge, so at most k - 1 files per factor of k in size
+        assert(!sizes.sliding(k).exists(r => r.size == k && r.last <= k * r.head), s"${i.basePath}: $sizes")
+        val tiers = 1 + (math.log(sizes.last.toDouble / sizes.head) / math.log(k)).toInt
+        assert(sizes.size <= (k - 1) * tiers, s"${i.basePath}: $sizes")
+      }
+    }
+    for (i <- tables) {
+      // each append writes the tick's postings only, whatever the index holds
+      val bytes = appendBytes(i)
+      assert(bytes.max <= 1.5 * bytes.min, s"${i.basePath}: append bytes $bytes")
+      assert(merges(i) >= 2, s"${i.basePath}: ${merges(i)} merges")
+    }
+    assert(ids(Readers.snapshot(cleanT)).sameElements(
+      ids(Dedup.minhashDedup(ticks.reduce(_ unionByName _), threshold = 0.6))),
+      "tiered incremental != from-scratch")
+  }
+
+  test("a merge that fails before it publishes leaves every posting readable; the next tick merges") {
+    val impl = classOf[MockRemoteFileSystem].getName
+    Storage.conf.set("fs.graftmock.impl", impl)
+    spark.sparkContext.hadoopConfiguration.set("fs.graftmock.impl", impl)
+    val root = tmpDir("dedup_svc_merge_fail").toAbsolutePath
+    val srcT = GraftTable.create(spark, s"$root/source", docsCfg("src"))
+    val cleanT = GraftTable.create(spark, s"$root/clean", docsCfg("clean"))
+    val idx = DedupService.openIndex(spark, s"graftmock://$root/index", threshold = 0.6)
+    val bandsDir = s"$root/index/bands/p=0/"
+    val ticks = (0 until 5).map(n => docs.filter(col("doc_id") >= n * 40 && col("doc_id") < (n + 1) * 40))
+    def sync(n: Int): Unit = {
+      srcT.bulkInsert(ticks(n))
+      assert(DedupService.sync(srcT, cleanT, idx).nonEmpty)
+      val want = ids(Dedup.minhashDedup(ticks.take(n + 1).reduce(_ unionByName _), threshold = 0.6))
+      assert(ids(Readers.snapshot(cleanT)).sameElements(want), s"tick $n != from-scratch")
+    }
+    def merged(t: GraftTable) = commitsSince(t, Seq.empty).count(_.operationType == "cluster")
+    def appendedRows(t: GraftTable) =
+      commitsSince(t, Seq.empty).filter(_.operationType == "insert").map(_.totalWrites).sum
+    (0 until 3).foreach(sync)
+    // the fourth file completes a run: fail the bands merge's data file
+    MockRemoteFileSystem.failWrite = p => p.startsWith(bandsDir) && p.endsWith(".parquet") &&
+      idx.bands.timeline.pendingInstants().exists(_.action == Action.ReplaceCommit)
+    try sync(3)
+    finally MockRemoteFileSystem.failWrite = _ => false
+    assert(merged(idx.bands) === 0 && merged(idx.sigs) === 1)
+    assert(idx.bands.timeline.pendingInstants().isEmpty)
+    // the abort left exactly the four appended files
+    val live = liveFiles(idx.bands)
+    assert(live.size === 4)
+    val onDiskFiles = Storage.walk(idx.bands.basePath).filter(_.isFile).map(_.getPath.toUri.getPath)
+      .filter(_.startsWith(bandsDir))
+    assert(onDiskFiles.toSet === live.map(f => idx.bands.basePath.resolve(f.relPath).toUri.getPath).toSet)
+    for (i <- Seq(idx.bands, idx.sigs)) assert(Readers.snapshot(i).count() === appendedRows(i))
+    sync(4)
+    assert(merged(idx.bands) === 1 && liveFiles(idx.bands).size === 2)
+    for (i <- Seq(idx.bands, idx.sigs)) assert(Readers.snapshot(i).count() === appendedRows(i))
   }
 }

@@ -37,6 +37,15 @@ class MockRemoteFileSystem extends RawLocalFileSystem {
     MockRemoteFileSystem.record(p)
     super.open(p, bufferSize)
   }
+
+  // every create and append opens its stream here
+  override protected def createOutputStreamWithMode(p: org.apache.hadoop.fs.Path,
+      append: Boolean, permission: org.apache.hadoop.fs.permission.FsPermission)
+      : java.io.OutputStream = {
+    if (MockRemoteFileSystem.failWrite(p.toUri.getPath))
+      throw new java.io.IOException(s"injected write failure: $p")
+    super.createOutputStreamWithMode(p, append, permission)
+  }
 }
 
 object MockRemoteFileSystem {
@@ -57,4 +66,9 @@ object MockRemoteFileSystem {
     import scala.jdk.CollectionConverters._
     accessed.asScala.toSet
   }
+
+  /** An injected write failure: opening a file for writing throws for
+    * every path this accepts.
+    */
+  @volatile var failWrite: String => Boolean = _ => false
 }
