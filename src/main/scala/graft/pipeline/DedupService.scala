@@ -151,13 +151,13 @@ object DedupService {
     val (threshold, numHashes, bands, shingleN) =
       (index.threshold, index.numHashes, index.numBands, index.shingleN)
     val spark = source.spark
-    // the files the previous tick's merges replaced: its probe is done
-    // with them, and this tick's has not planned yet
-    Seq(index.bands, index.sigs).foreach(Services.cleanWith(_, CleanPolicy.KeepLatestFileVersions(1)))
     val work = IncrementalSync.plan(source, clean, SyncKeys) match {
       case IncrementalSync.Idle => return None
       case w: IncrementalSync.Work => w
     }
+    // the files the previous tick's merges replaced: its probe is done
+    // with them, and this tick's has not planned yet
+    Seq(index.bands, index.sigs).foreach(Services.cleanWith(_, CleanPolicy.KeepLatestFileVersions(1)))
     // ghost postings would mark new docs as dups of rolled-back docs, and
     // the clean table keeps their outputs
     if (work.recovering) IncrementalSync.wipe(clean, index.bands, index.sigs)
@@ -272,7 +272,12 @@ object DedupService {
         def run(): Unit = {
           try appended.complete(t.insertFresh(rows))
           catch { case e: Throwable => appended.completeExceptionally(e) }
-          if (!appended.isCompletedExceptionally) mergeTiers(t)
+          if (!appended.isCompletedExceptionally)
+            try mergeTiers(t)
+            catch {
+              case NonFatal(e) =>
+                log.warn(s"index merge failed for ${t.basePath}; a later tick retries it: $e")
+            }
         }
       })
       (appended, done)
@@ -282,8 +287,8 @@ object DedupService {
   /** Merges, per partition, the smallest run of [[MergeFanIn]] live base
     * files below the small-file limit whose sizes lie within a factor of
     * [[MergeFanIn]], one cluster commit at a time, until no run is left.
-    * A merge that fails is logged and left to a later tick: its abort
-    * leaves the files as they were.
+    * A merge that fails throws; its abort leaves the files as they were,
+    * and the caller leaves the merge to a later tick.
     */
   @annotation.tailrec
   private def mergeTiers(t: GraftTable): Unit = {
@@ -294,13 +299,7 @@ object DedupService {
     }.toMap
     if (runs.nonEmpty) {
       val before = t.view.latestBaseFiles().size
-      val merged =
-        try Services.cluster(t, strategy = ClusterPlanStrategy.FileGroups(runs)).isDefined
-        catch {
-          case NonFatal(e) =>
-            log.warn(s"index merge failed for ${t.basePath}; a later tick retries it: $e")
-            false
-        }
+      val merged = Services.cluster(t, strategy = ClusterPlanStrategy.FileGroups(runs)).isDefined
       // the merged file may complete a run one tier up; a merge whose
       // output split into as many files as it read stops the cascade
       if (merged && t.view.latestBaseFiles().size < before) mergeTiers(t)
